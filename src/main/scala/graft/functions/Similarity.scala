@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.TopK
+import graft.kernels.{Grid, TopK}
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (Array[Float]): brute-force cosine top-k as the exactness baseline, and
@@ -132,7 +132,7 @@ object Similarity {
       val sums = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cell"), col("dim"))
-        .agg(sum(round(col("x") * 1e6).cast("long")).as("sx"), count(lit(1)).as("n"))
+        .agg(sum(Grid.roundLong(col("x") * 1e6)).as("sx"), count(lit(1)).as("n"))
         .groupBy(col("cell"))
         .agg(map_from_arrays(collect_list(col("dim")),
           collect_list(col("sx") / (col("n") * 1e6))).as("m"))

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Grid
+
 /** Text-analysis operators for large-scale training-data pipelines (task
   * brief: language-ID, quality scoring, token counting, fingerprinting).
   * Everything is column-level (`org.apache.spark.sql.functions`) so it stays
@@ -132,7 +134,7 @@ object TextAnalysis {
         log(col("c").cast("double") / col("nt")).as("lp"))
     val res = lp.groupBy(col(idCol))
       .agg(sum(col("dc")).as("n_tokens"),
-        ((sum(col("dc") * round(col("lp") * 1e12).cast("long")) / 1e12)
+        ((sum(col("dc") * Grid.roundLong(col("lp") * 1e12)) / 1e12)
           / sum(col("dc"))).as("avg_logprob"))
       .localCheckpoint(true)
     docTok.unpersist()

@@ -104,11 +104,11 @@ object TopK {
     */
   /** Per-(seed,node) score sum. quantize > 0 switches to fixed-point
     * (order-independent, cross-engine bit-exact) summation: each input row
-    * rounds onto the 1/quantize grid, sums as exact LONGs, divides back
-    * once (PprConfig.quantize). */
+    * rounds onto the 1/quantize grid ([[Grid.roundLong]]), sums as exact
+    * LONGs, divides back once (PprConfig.quantize). */
   def sumScore(quantize: Double): org.apache.spark.sql.Column =
     if (quantize > 0)
-      (sum(round(col("score") * quantize).cast("long")) / quantize).as("score")
+      (sum(Grid.roundLong(col("score") * quantize)) / quantize).as("score")
     else sum(col("score")).as("score")
 
   def pruneTopL(state: DataFrame, l: Int, strategy: String = "fused",

@@ -85,13 +85,18 @@ object GRank {
     // make the hub set driver-OOM-sized, so the collect is limit-guarded:
     // |E|/saltThreshold bounds the true hub count, and past `hubCap` the
     // premise "hubs are a handful worth special-casing" is wrong anyway —
-    // fail fast with the fix instead of OOMing (ADVICE r5)
+    // fail fast with the fix instead of OOMing (ADVICE r5). ONE job: each
+    // task ships at most hubCap + 1 hub ids and the driver folds them into
+    // at most hubCap + 1 (`limit(n).collect()` would scan the partitions
+    // over several incremental jobs)
     val hubCap = 1000000
     val hubIds: Array[Long] =
       if (saltThreshold > 0) {
         val hubs = pos.groupBy(col("dst")).agg(count(lit(1)).as("indeg"))
           .where(col("indeg") > saltThreshold)
-          .select(col("dst")).limit(hubCap + 1).collect().map(_.getLong(0))
+          .select(col("dst")).as[Long].rdd
+          .mapPartitions(it => Iterator(it.take(hubCap + 1).toArray))
+          .fold(Array.empty[Long])((a, b) => if (a.length > hubCap) a else (a ++ b).take(hubCap + 1))
         require(hubs.length <= hubCap,
           s"saltThreshold=$saltThreshold marks > $hubCap vertices as hubs — " +
             "that is a dense graph, not a skewed one; raise saltThreshold " +
@@ -148,10 +153,12 @@ object GRank {
 
     // G2 state init: self teleport + one-hop scatter (the same per-edge
     // factor as the gather adjacency — weighted or uniform), pruned to L
-    // (include/grank.h:64-83; += on duplicates handles self-loops)
+    // (include/grank.h:64-83; += on duplicates handles self-loops). Scatters
+    // from the persisted `adj`, whose factors are already computed: from
+    // adjBase, the norm aggregate and its broadcast would run again
     val init = TopK.pruneTopL(
       teleport.union(
-        adjBase.select(col("src").as("seed"), col("dst").as("node"),
+        adj.select(col("src").as("seed"), col("dst").as("node"),
           col("factor").as("score"))),
       cfg.L, cfg.topLStrategy, cfg.quantize)
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Grid
+
 /** HITS hubs and authorities (Kleinberg 1999) — the second classic
   * link-analysis fixpoint next to PageRank, and the one that separates
   * directories (hubs) from endorsed pages (authorities) on a web graph:
@@ -60,10 +62,10 @@ object Hits {
     require(n > 0, "empty vertex set")
 
     def gsum(c: Column): Column =
-      if (quantize > 0) coalesce(sum(round(c * quantize).cast("long")), lit(0L)) / quantize
+      if (quantize > 0) coalesce(sum(Grid.roundLong(c * quantize)), lit(0L)) / quantize
       else coalesce(sum(c), lit(0.0))
     def grid(c: Column): Column =
-      if (quantize > 0) round(c * quantize) / quantize else c
+      if (quantize > 0) Grid.roundLong(c * quantize) / quantize else c
 
     val ids = vertices.select(col("id").cast("long").as("id"))
     val init = ids.select(explode(array(lit(0L), lit(1L))).as("seed"),

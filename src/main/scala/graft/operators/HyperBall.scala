@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.Mix
+import graft.kernels.{Grid, Mix}
 
 /** HyperBall (Boldi & Vigna, "In-core computation of geometric centralities
   * with HyperBall", 2013): per-vertex HyperLogLog sketches of the forward
@@ -116,7 +116,7 @@ object HyperBall {
   def neighborhoodFunctionFrom(ests: Seq[DataFrame], rounds: Int): DataFrame = {
     require(ests.length == rounds + 1, s"sweep must carry ${rounds + 1} frames")
     val nf = ests.zipWithIndex.map { case (df, t) =>
-      df.agg((coalesce(sum(round(col("est") * 1e6).cast("long")), lit(0L)) / 1e6)
+      df.agg((coalesce(sum(Grid.roundLong(col("est") * 1e6)), lit(0L)) / 1e6)
         .as("pairs")).select(lit(t).as("t"), col("pairs"))
     }.reduce(_ union _)
     val pmax = nf.where(col("t") === rounds).select(col("pairs").as("pmax"))

@@ -48,16 +48,17 @@ import graft.model.PprConfig
   *
   *  - "local" (auto-chosen when the adjacency fits `broadcastEdgeLimit`):
   *    the whole multi-step walk runs INSIDE one mapPartitions pass over the
-  *    origin vertices against a broadcast adjacency map — the Spark analog
+  *    vertex ids against a broadcast adjacency map — the Spark analog
   *    of the reference's lazy per-node walkNode
   *    (include/mccompletepathv2.h:230-241). ONE job for the entire walk
-  *    phase, zero walker rows materialized, zero shuffles; each task emits
-  *    already-combined (seed, node, visits) partials (an origin's walks
-  *    never leave its task, so no cross-partition merge is needed). This is
-  *    the genuine per-partition imperative case where mapPartitions beats
-  *    the declarative form: ~64 sequential join stages collapse into one
-  *    stage, which also removes the per-stage scheduling latency that
-  *    dominated the join path's wall at bench scale (~2.5x measured).
+  *    phase, zero walker rows materialized, no shuffle after it; an
+  *    origin's walks never leave its task, so each task emits finished
+  *    walk baskets — self-visits folded in, cut to L — and no (seed, node)
+  *    sum or top-L prune job follows. This is the genuine per-partition
+  *    imperative case where mapPartitions beats the declarative form: ~64
+  *    sequential join stages collapse into one stage, which also removes
+  *    the per-stage scheduling latency that dominated the join path's wall
+  *    at bench scale (~2.5x measured).
   *  - "join" (auto-chosen above the broadcast limit — the 100-TB path):
   *    per `stepBatch` steps, chain join+project steps lazily with a
   *    per-step persist, then ONE action; visit counts fold into a bounded
@@ -65,11 +66,16 @@ import graft.model.PprConfig
   *    `walkerBudget`: the walkId range [0, floor(R*d)) is split into chunks
   *    of <= walkerBudget/|origins| ids walked chunk-by-chunk — peak
   *    in-flight rows <= walkerBudget instead of |V|*floor(R*d) (at R=1000
-  *    that is 850 rows PER VERTEX).
+  *    that is 850 rows PER VERTEX). Its visit counts sum per (seed, node)
+  *    in one shuffle and cut to L with the window rank.
   *
   * Every draw is a pure function of (seed, ABSOLUTE walkId, step) through
   * the same mix31 mixer, so local, join, chunked and unchunked runs are all
   * bit-identical (test-gated) and the DuckDB oracle replays any of them.
+  * The operator runs AQE-off, in the iterative-loop scope
+  * ([[graft.kernels.IterTuning.forLoop]]): its joins and prunes keep the
+  * fixed shuffle partitioning, and no stage waits on an AQE
+  * materialization job.
   */
 object MonteCarloPpr {
 
@@ -247,14 +253,17 @@ object MonteCarloPpr {
     * (test-gated) — PROVIDED the resumed call passes the same cfg, salt,
     * walkerBudget and graph (chunk boundaries are derived from them).
     * Applies to the join engine's chunk loop; the local engine is a single
-    * job with nothing to snapshot (checkpoint args are ignored there). */
+    * job with nothing to snapshot (checkpoint args are ignored there).
+    *
+    * Vertex ids are a set: a duplicated id gets one basket, as if listed
+    * once. */
   def runWithStats(edges: DataFrame, vertices: DataFrame, cfg: PprConfig,
       salt: Long = 42L, maxSteps: Int = 200, stepBatch: Int = 8,
       broadcastEdgeLimit: Long = 4000000L,
       walkerBudget: Long = 100000000L, walkMode: String = "auto",
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
       resume: Boolean = false): (DataFrame, McWalkStats) =
-    IterTuning.withoutRuntimeFilters(edges.sparkSession) {
+    IterTuning.forLoop(edges.sparkSession) {
       runInner(edges, vertices, cfg, salt, maxSteps, stepBatch, broadcastEdgeLimit,
         walkerBudget, walkMode, checkpoint, checkpointEvery, resume)
     }
@@ -292,24 +301,12 @@ object MonteCarloPpr {
     val adjPersisted =
       (if (smallAdj) adjBase else adjBase.repartition(shufflePartitions, col("src"))).persist()
     val adjList = if (smallAdj) broadcast(adjPersisted) else adjPersisted
+    // one basket per vertex id; the hash(id) exchange also spreads the
+    // local engine's origins over the full task width
+    val verts = vertices.select(col("id")).distinct()
 
     // ---- phase 1: walk simulation --------------------------------------
     val effective = math.floor(r * d).toLong // floor(R*d), :127-132
-    // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
-    // one shape the single-machine reference never faces (its walkNode is
-    // lazy per node, include/mccompletepathv2.h:230-241). The walkId range
-    // is split into chunks of <= walkerBudget/|origins| ids, and the walk
-    // loop runs once per chunk — every mix31 draw is a pure function of
-    // (seed, ABSOLUTE walkId, step), so chunked and unchunked runs are
-    // bit-identical; only peak in-flight rows change.
-    val walkOrigins = vertices
-      .join(adjList, vertices("id") === adjList("src"), "inner") // dangling origins never walk
-      .select(col("id").as("seed"), col("id").as("cur"))
-      .persist()
-    val nOrigins = walkOrigins.count()
-    val chunkSize =
-      if (walkerBudget <= 0 || nOrigins == 0) math.max(effective, 1L)
-      else math.max(1L, math.min(effective, walkerBudget / nOrigins))
     val useLocalWalk = walkMode match {
       case "local" =>
         // forced local collects the whole adjacency to the driver — refuse
@@ -323,12 +320,28 @@ object MonteCarloPpr {
       case _       => smallAdj // "auto": local walk iff the adjacency broadcasts
     }
 
-    if (useLocalWalk && effective > 0) {
-      val visitAgg = localWalk(walkOrigins, adjPersisted, effective, d, salt, maxSteps, weighted)
-      walkOrigins.unpersist()
-      return finishFromVisits(edges, vertices, adjList, adjPersisted, cfg, visitAgg,
+    if (useLocalWalk) {
+      val (walkBaskets, nOrigins) =
+        localWalk(verts, adjPersisted, cfg.L, r, effective, d, salt, maxSteps, weighted)
+      return combine(edges, verts, adjList, adjPersisted, cfg, walkBaskets,
         McWalkStats(0L, 0, nOrigins, nOrigins * effective), ewOpt)
     }
+
+    // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
+    // one shape the single-machine reference never faces (its walkNode is
+    // lazy per node, include/mccompletepathv2.h:230-241). The walkId range
+    // is split into chunks of <= walkerBudget/|origins| ids, and the walk
+    // loop runs once per chunk — every mix31 draw is a pure function of
+    // (seed, ABSOLUTE walkId, step), so chunked and unchunked runs are
+    // bit-identical; only peak in-flight rows change.
+    val walkOrigins = verts
+      .join(adjList, verts("id") === adjList("src"), "inner") // dangling origins never walk
+      .select(col("id").as("seed"), col("id").as("cur"))
+      .persist()
+    val nOrigins = walkOrigins.count()
+    val chunkSize =
+      if (walkerBudget <= 0 || nOrigins == 0) math.max(effective, 1L)
+      else math.max(1L, math.min(effective, walkerBudget / nOrigins))
 
     def oneStep(cur: DataFrame, step: Int): DataFrame = {
       val survivors =
@@ -345,7 +358,7 @@ object MonteCarloPpr {
     // the batch-end checkpoint materializes every step once (the persists
     // keep the chain from recomputing), then visit counts PARTIAL-aggregate
     // within the batch. Batch partials merge ONCE per chunk, chunk partials
-    // union once at the end (finishFromVisits runs the final (seed,node)
+    // union once at the end (phase 1.5 below runs the final (seed,node)
     // sum) — total shuffle volume ~2x the visit count. The r2 design
     // instead re-shuffled a single ever-growing accumulator every batch:
     // at R=1000 x 300k origins that is ~27 re-shuffles of an up-to-600M-row
@@ -436,30 +449,52 @@ object MonteCarloPpr {
       }
     }
     walkOrigins.unpersist()
-    // raw union of chunk partials — the final (seed,node) sum happens in
-    // finishFromVisits together with the origin self-visits
+
+    // ---- phase 1.5: walk baskets -----------------------------------------
+    // fold the origin self-visits into the raw union of chunk partials
+    // (origin counted R times, :124, :162-163), then visit frequencies
+    // pruned to L per origin (capped-insert deviation); scores are exact
+    // small rationals (LONG sums / R) — cross-engine stable
     val visitAgg = chunkAggs match {
       case Nil        => null
       case one :: Nil => one
       case many       => many.reduce(_ union _)
     }
-    finishFromVisits(edges, vertices, adjList, adjPersisted, cfg, visitAgg,
+    val selfVisits = verts.select(col("id").as("seed"), col("id").as("node"),
+      lit(r.toLong).as("visits"))
+    val allVisits = if (visitAgg == null) selfVisits else selfVisits.union(visitAgg)
+    val walkBaskets = TopK.topKWindow(
+      allVisits.groupBy(col("seed"), col("node"))
+        .agg((sum(col("visits")) / lit(r.toDouble)).as("score")),
+      cfg.L).localCheckpoint(true)
+    // walkBaskets is materialized: every chunk/batch partial reachable from
+    // visitAgg is now superseded — free the blocks instead of waiting for
+    // the ContextCleaner (the same pileup class the per-batch fix removed;
+    // a many-chunk budget-bound run otherwise keeps nChunks frames cached)
+    if (visitAgg != null) IterativeEngine.freeCheckpointBlocks(visitAgg)
+    combine(edges, verts, adjList, adjPersisted, cfg, walkBaskets,
       McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective), ewOpt)
   }
 
-  /** The whole walk phase as ONE mapPartitions pass over the origins
+  /** The whole walk phase as ONE mapPartitions pass over the vertex ids
     * against a broadcast adjacency map — same draws (mix31Scala is the
     * Column mixer's scalar twin), same per-step semantics as [[oneStep]]:
     * step 1 always traverses with round-robin pick walkId mod outdeg; later
     * steps survive iff mix/P <= d and pick (walkId + mix) mod outdeg; a
-    * walk dies at a node with no successors. Emits (seed, node, visits)
-    * partials — an origin's walks all live in its task, so the partials
-    * are already per-seed-complete. */
-  private def localWalk(walkOrigins: DataFrame, adjPersisted: DataFrame,
+    * walk dies at a node with no successors.
+    *
+    * An origin's walks all run in its task, so the task holds the origin's
+    * complete visit counts and emits its finished walk basket: the R
+    * self-visits folded in (a vertex without successors never walks and
+    * gets {v: 1.0}), ranked by (visits desc, node asc) — the order of
+    * score = visits / R — and cut to L. No (seed, node) sum or top-L prune
+    * runs after it. Returns the (seed, node, score) baskets, materialized,
+    * and the number of walking origins. */
+  private def localWalk(verts: DataFrame, adjPersisted: DataFrame, l: Int, iterations: Int,
       effective: Long, d: Double, salt: Long, maxSteps: Int,
-      weighted: Boolean): DataFrame = {
+      weighted: Boolean): (DataFrame, Long) = {
     import graft.kernels.Mix.mix31Scala
-    val spark = walkOrigins.sparkSession
+    val spark = verts.sparkSession
     import spark.implicits._
     // weighted entries carry the cumulative-weight array next to the dsts
     // (null when unweighted) — the scalar twin of the Column-side pickIdx
@@ -473,17 +508,17 @@ object MonteCarloPpr {
     val sSalt = survivalSalt(salt)
     val pSalt = pickSalt(salt)
     val linearPick = linearWeightedPick // captured driver-side into the closure
-    // spread origins over the full task width — walk cost is proportional to
-    // origins-per-task, and the upstream origins frame may sit in few
-    // partitions (e.g. a 2-file parquet scan)
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val visits = walkOrigins.select(col("seed"))
-      .repartition(parts, col("seed")).as[Long].mapPartitions { origins =>
+    // a stat only: a re-run task would count its origins twice
+    val walking = spark.sparkContext.longAccumulator
+    val baskets = verts.as[Long].mapPartitions { ids =>
       val adj = bc.value
-      origins.flatMap { seed =>
+      ids.flatMap { seed =>
         val mine = scala.collection.mutable.LongMap.empty[Long]
+        mine(seed) = iterations.toLong // origin counted R times (:124, :162-163)
+        val origin = adj.get(seed) // null: dangling, never walks
+        if (origin != null) walking.add(1L)
         var w = 0L
-        while (w < effective) {
+        while (origin != null && w < effective) {
           var cur = seed
           var s = 1
           var alive = true
@@ -522,17 +557,20 @@ object MonteCarloPpr {
           }
           w += 1
         }
-        mine.iterator.map { case (node, n) => (seed, node, n) }
+        mine.toArray
+          .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+          .iterator.take(l)
+          .map { case (node, n) => (seed, node, n.toDouble / iterations) }
       }
-    }.toDF("seed", "node", "visits")
+    }.toDF("seed", "node", "score")
     // materialize before the broadcast can be dropped by downstream actions
-    val out = visits.localCheckpoint(true)
+    val out = baskets.localCheckpoint(true)
     bc.unpersist(false)
-    out
+    (out, walking.value)
   }
 
-  /** Phase 1.5 + 2, shared by both walk engines: fold origin self-visits
-    * in, prune to L, then the one gather superstep (:211-250).
+  /** Phase 2, shared by both walk engines: the one gather superstep
+    * (:211-250) over the L-cut walk baskets.
     *
     * Weighted combine: the per-node factor d/outdeg generalizes to the
     * PER-EDGE factor d·w(s,t)/Σ_out w(s), so scaling moves from after the
@@ -540,32 +578,19 @@ object MonteCarloPpr {
     * equivalent — the factor is a positive per-seed constant, so pre- and
     * post-scale top-L agree; per-edge factors force scale-then-prune). The
     * self entry is exactly 1.0 either way (:124's origin-counts-itself). */
-  private def finishFromVisits(edges: DataFrame, vertices: DataFrame,
+  private def combine(edges: DataFrame, verts: DataFrame,
       adjList: DataFrame, adjPersisted: DataFrame, cfg: PprConfig,
-      visitAgg: DataFrame, stats: McWalkStats,
-      ewOpt: Option[DataFrame] = None): (DataFrame, McWalkStats) = {
-    val r = cfg.iterations
+      walkBaskets: DataFrame, stats: McWalkStats,
+      ewOpt: Option[DataFrame]): (DataFrame, McWalkStats) = {
     val d = cfg.damping
-    val selfVisits = vertices.select(col("id").as("seed"), col("id").as("node"),
-      lit(r.toLong).as("visits")) // origin counted R times (:124, :162-163)
-    val allVisits = if (visitAgg == null) selfVisits else selfVisits.union(visitAgg)
-    // visit frequencies, pruned to L per origin (capped-insert deviation);
-    // scores are exact small rationals (LONG sums / R) — cross-engine stable
-    val walkBaskets = TopK.pruneTopL(
-      allVisits.groupBy(col("seed"), col("node"))
-        .agg((sum(col("visits")) / lit(r.toDouble)).as("score")),
-      cfg.L, "bounded").localCheckpoint(true)
-    // walkBaskets is materialized: every chunk/batch partial reachable from
-    // visitAgg is now superseded — free the blocks instead of waiting for
-    // the ContextCleaner (the same pileup class the per-batch fix removed;
-    // a many-chunk budget-bound run otherwise keeps nChunks frames cached)
-    if (visitAgg != null) IterativeEngine.freeCheckpointBlocks(visitAgg)
-
-    // ---- phase 2: one gather superstep over walk baskets (:211-250) -----
     // combine prune: under the "window" strategy use the ALIGNED shape —
     // one repartition(seed) reused by the (seed,node) sum, the top-L rank
     // AND the final top-K rank (GrankPruneBench measured aligned 10.0 s vs
-    // agg-then-window 13.9-14.7 s interleaved on the same gather volume)
+    // agg-then-window 13.9-14.7 s interleaved on the same gather volume).
+    // Every strategy gets cfg.quantize on purpose: with quantize > 0 the
+    // unweighted combine sum, too, is the fixed-point grid sum
+    // (addend-order-free, what the DuckDB oracle replays), not a raw
+    // double sum
     val shufflePartitions = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     def combinePrune(df: DataFrame): DataFrame =
@@ -577,14 +602,14 @@ object MonteCarloPpr {
       val ws = ew.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
       val edgeFactor = ew.join(ws, "src")
         .select(col("src"), col("dst"), (lit(d) * col("w") / col("wsum")).as("efactor"))
-      val selfRows = vertices.select(col("id").as("seed"), col("id").as("node"),
+      val selfRows = verts.select(col("id").as("seed"), col("id").as("node"),
         lit(1.0).as("score"))
       val succRows = edgeFactor.join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
         .select(edgeFactor("src").as("seed"), col("node"),
           (col("score") * col("efactor")).as("score"))
       combinePrune(selfRows.union(succRows))
     } else {
-      val factor = vertices.join(adjList, vertices("id") === adjList("src"), "left")
+      val factor = verts.join(adjList, verts("id") === adjList("src"), "left")
         .select(col("id"),
           when(col("outdeg").isNull || col("outdeg") === 0, lit(1.0))
             .otherwise(lit(d) / col("outdeg")).as("factor"))

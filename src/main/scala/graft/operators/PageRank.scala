@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Grid
+
 /** Global PageRank (north-rule extra; the reference computes only the
   * personalized variant — this is the classic teleport-to-all limit).
   *
@@ -62,11 +64,16 @@ object PageRank {
     // the teleport base re-reads `vertices` EVERY superstep — persist the
     // |V|-row id projection once instead of re-running the vertex-closure
     // aggregation (2 scans + 3 exchanges per superstep at bench scale;
-    // plans/r07/sup_before/q_pagerank_superstep.txt) (guide §2.4)
-    val verts = vertices.select(col("id")).persist()
+    // plans/r07/sup_before/q_pagerank_superstep.txt) (guide §2.4). A caller's
+    // cached single-`id` frame is the same plan to the CacheManager: reuse
+    // it, and leave its cache entry alone at the end
+    val ids = vertices.select(col("id"))
+    val ownVerts = ids.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val verts = if (ownVerts) ids.persist() else ids
+    def release(): Unit = if (ownVerts) verts.unpersist()
     val n = verts.count()
     if (n == 0) {
-      verts.unpersist()
+      release()
       return IterativeEngine.Result(
         vertices.select(lit(0L).as("seed"), col("id").as("node"), lit(0.0).as("score")),
         Vector.empty)
@@ -106,7 +113,7 @@ object PageRank {
 
     // sum that (when quantize > 0) is addend-order-free and oracle-exact
     def leakSum = if (quantize > 0)
-      (coalesce(sum(round(col("score") * quantize).cast("long")), lit(0L)) / quantize).as("leak")
+      (coalesce(sum(Grid.roundLong(col("score") * quantize)), lit(0L)) / quantize).as("leak")
     else coalesce(sum(col("score")), lit(0.0)).as("leak")
 
     def superstep(state: DataFrame, i: Int): DataFrame = {
@@ -135,7 +142,7 @@ object PageRank {
 
     val res = IterativeEngine.run(init, superstep, iterations, tolerance,
       lineageCutEvery = lineageCutEvery)
-    adj.unpersist(); dangling.unpersist(); verts.unpersist()
+    adj.unpersist(); dangling.unpersist(); release()
     res
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Grid
+
 /** Forward-push personalized PageRank (Andersen–Chung–Lang local push,
   * FOCS'06), in its SYNCHRONOUS batched form: every superstep pushes ALL
   * (seed, node) entries whose residual crosses the degree-normalized
@@ -99,7 +101,7 @@ object PushPpr {
       .repartition(col("node")).persist()
 
     def qsum(c: String) =
-      if (quantize > 0) (sum(round(col(c) * quantize).cast("long")) / quantize).as(c)
+      if (quantize > 0) (sum(Grid.roundLong(col(c) * quantize)) / quantize).as(c)
       else sum(col(c)).as(c)
 
     val init = seeds.select(col("id").as("seed"), col("id").as("node"),

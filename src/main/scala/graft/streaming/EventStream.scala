@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.kernels.Grid
+
 /** Structured-Streaming operators over the `events` table shape
   * (event_id, ts TIMESTAMP, user_id, event_type, value, props).
   *
@@ -27,7 +29,7 @@ object EventStream {
   def windowedAgg(events: DataFrame, windowLen: String = "1 hour",
       watermark: String = "2 hours", quantize: Double = 0.0): DataFrame = {
     val valueSum =
-      if (quantize > 0) (sum(round(col("value") * quantize).cast("long")) / quantize).as("sum_value")
+      if (quantize > 0) (sum(Grid.roundLong(col("value") * quantize)) / quantize).as("sum_value")
       else sum(col("value")).as("sum_value")
     events
       .withColumn("ts", col("ts").cast("timestamp")) // parquet NTZ -> event time

@@ -98,6 +98,16 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
     assert(got(1L) > got(0L))
   }
 
+  test("pagerank: a caller's cached single-id vertex frame stays cached") {
+    val e = edgesDf(Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)))
+    val vs = EdgeSource.vertices(e).persist()
+    vs.count()
+    PageRank.run(e, vs, iterations = 3, tolerance = -1)
+    assert(vs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "PageRank dropped the caller's cache entry")
+    vs.unpersist()
+  }
+
   test("pagerank: literal and subquery leak plans are bit-identical (quantized and not)") {
     val es = randomGraph(40, 70, seed = 7) ++ Seq((38L, 39L)) // ensure some dangling targets
     val vids = (0L until 42L)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Metrics, TopK}
+import graft.kernels.{Grid, Metrics, TopK}
 import graft.model.NodeScore
 
 /** Kernel laws from the reference's unit suites (SURVEY.md §5 tier 1). */
@@ -55,6 +55,40 @@ class KernelsSpec extends AnyFunSuite with GraphFixtures {
   }
 
   // ---- norm1 laws (test/internal/norm1Test.cc) ---------------------------
+  // ---- fixed-point grid rounding (kernels.Grid) --------------------------
+  test("grid: roundLong equals Spark's round(x).cast(long) on finite |x| < 2^62 (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    val s = spark
+    import s.implicits._
+    val two52 = 4503599627370496.0
+    // finite doubles of every binade below 2^62, subnormals included
+    val anyFinite = for {
+      neg <- Gen.oneOf(true, false)
+      exp <- Gen.choose(0L, 1023L + 61L)
+      man <- Gen.choose(0L, (1L << 52) - 1L)
+    } yield java.lang.Double.longBitsToDouble((if (neg) 1L << 63 else 0L) | (exp << 52) | man)
+    val gen: Gen[Double] = Gen.frequency(
+      3 -> anyFinite,
+      2 -> Gen.choose(-1000000L, 1000000L).map(_ + 0.5),             // +-k.5 ties
+      2 -> Gen.choose(-64, 64).map(k => two52 + k * 0.5),             // around 2^52 +- 0.5
+      2 -> Gen.choose(-64, 64).map(k => -two52 + k * 0.5),
+      2 -> Gen.choose(1e-300, 1.0).map(p => math.log(p) * 1e12),      // log-probabilities on the 1e12 grid
+      1 -> Gen.choose(-3.0, 3.0).map(x => Math.nextUp(math.floor(x) + 0.5)),
+      1 -> Gen.choose(-3.0, 3.0).map(x => Math.nextDown(math.floor(x) + 0.5)))
+    val fixed = Seq(0.49999999999999994, -0.49999999999999994, 0.5, -0.5, 1.5, -2.5,
+      0.0, -0.0, two52 - 0.5, -(two52 - 0.5), two52 + 1.0, Math.nextDown(two52), 4.0e18, -4.0e18)
+    val prop = Prop.forAll(Gen.listOfN(400, gen)) { xs =>
+      // repartition: the projection runs as generated code, as in a query
+      val bad = (xs ++ fixed).toDF("x").repartition(2)
+        .select(col("x"), round(col("x")).cast("long").as("spark"), Grid.roundLong(col("x")).as("grid"))
+        .where(col("spark") =!= col("grid")).collect()
+      bad.isEmpty :| s"mismatches: ${bad.take(5).mkString(", ")}"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("norm1: shared, disjoint, and empty-key identities") {
     val a = stateDf(Seq((1L, 1L, 1.0), (1L, 2L, 2.0)))
     val b = stateDf(Seq((1L, 1L, 0.5), (1L, 3L, 4.0)))

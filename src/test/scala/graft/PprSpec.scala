@@ -173,11 +173,20 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     assertAllClose(baskets(a), baskets(b), 0.0) // every draw keys on the ABSOLUTE walkId
   }
 
+  /** Edge cases of the local engine's in-task basket cut (R = 40, so 34
+    * walks, and L = 9): hub 0 fans out to 12 dangling leaves, and its
+    * round-robin first hops visit leaves 1-10 three times and 11-12 twice —
+    * more than L distinct nodes, tied at the L-th place; 13 -> 0 carries
+    * basket(0) into a final result; 20 has no edges at all. */
+  private val cutEdges = starOut(12) :+ ((13L, 0L))
+  private val cutVertices = (0L to 13L) :+ 20L
+
   test("mc: local-walk engine is bit-identical to the join engine (and is the auto choice)") {
-    // several shapes: random digraph (some dangling), star out, cycle
-    for ((es, n) <- Seq((randomGraph(24, 70, seed = 11), 24L),
-        (starOut(6), 7L), (cycle(9).toSeq, 9L))) {
-      val (vs, ed) = (verticesDf(0L until n), edgesDf(es))
+    // several shapes: random digraph (some dangling), star out, cycle, the
+    // basket-cut edge cases
+    for ((es, ids) <- Seq((randomGraph(24, 70, seed = 11), 0L until 24L),
+        (starOut(6), 0L until 7L), (cycle(9).toSeq, 0L until 9L), (cutEdges, cutVertices))) {
+      val (vs, ed) = (verticesDf(ids), edgesDf(es))
       // quantize: phase-2 re-aggregates successor contributions with a
       // DOUBLE sum, whose addend order differs with the walk engine's
       // output partitioning — the fixed-point grid makes the compare
@@ -188,6 +197,18 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
       assertAllClose(baskets(local), baskets(join), 0.0)
       val (_, sAuto) = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24)
       assert(sAuto.maxInFlight == 0L, "auto on a broadcastable graph must take the local engine")
+    }
+  }
+
+  test("mc: duplicate vertex ids get one basket, as if listed once") {
+    val ed = edgesDf(cutEdges)
+    val cfg = PprConfig(5, 9, 40, topLStrategy = "window", quantize = 1e12)
+    val once = baskets(MonteCarloPpr.run(ed, verticesDf(cutVertices), cfg, maxSteps = 24))
+    val dup = verticesDf(cutVertices ++ Seq(0L, 13L, 20L, 20L))
+    for (mode <- Seq("local", "join")) {
+      val twice = MonteCarloPpr.run(ed, dup, cfg, maxSteps = 24, walkMode = mode)
+      assert(twice.count() == once.values.map(_.size).sum, s"$mode: duplicated rows")
+      assertAllClose(once, baskets(twice), 0.0)
     }
   }
 
@@ -223,9 +244,14 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val wEdges = pairs.map { case (a, b) => (a, b, 1L + (a * 31 + b * 17) % 5) }
       .toDF("src", "dst", "weight")
     val cfg = PprConfig(5, 9, 40, topLStrategy = "window", quantize = 1e12)
-    val local = MonteCarloPpr.runWithStats(wEdges, vs, cfg, maxSteps = 24, walkMode = "local")._1
-    val join = MonteCarloPpr.runWithStats(wEdges, vs, cfg, maxSteps = 24, walkMode = "join")._1
-    assertAllClose(baskets(local), baskets(join), 0.0)
+    // equal weights keep the basket-cut fixture's ties: 0's first hops pick
+    // leaf (w mod 24) / 2 + 1, so leaves 1-5 get four visits, 6-12 two
+    val wCut = cutEdges.map { case (a, b) => (a, b, 2L) }.toDF("src", "dst", "weight")
+    for ((we, ws) <- Seq((wEdges, vs), (wCut, verticesDf(cutVertices)))) {
+      val local = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "local")._1
+      val join = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "join")._1
+      assertAllClose(baskets(local), baskets(join), 0.0)
+    }
     // all-ones weights: cumulative pick r lands on index r — the uniform
     // draw — so the WALK phase is bit-identical; the combine phase
     // associates the factor differently (unweighted: grid(Σ raw)·f;

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.kernels.TopK
 import graft.model.PprConfig
-import graft.operators.{ExactPpr, GRank}
+import graft.operators.{ExactPpr, GRank, MonteCarloPpr}
+import org.apache.spark.grafttest.JobCounter
 
 /** G5 partitioned schedule + physical-plan and parallelism-invariance
   * contracts (SURVEY.md §2.3-§2.4). */
@@ -91,6 +92,31 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(live).size
     assert(exchanges == 1, s"expected 1 live exchange, got $exchanges:\n$plan")
     adj.unpersist()
+  }
+
+  test("job-count gate: MC (local engine) and GRank issue only the jobs their data needs") {
+    val e = edgesDf(randomGraph(30, 120, seed = 37)).persist()
+    val vs = verticesDf(0L until 32L).persist() // 30, 31: absent from the edges
+    e.count(); vs.count()
+    val sc = spark.sparkContext
+    // MC: edge count, adjacency collect, the walk (emits L-cut baskets: no
+    // sum or prune job follows), three broadcasts and the result of the
+    // combine superstep
+    val (_, mc) = JobCounter.jobs(sc) {
+      MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, topLStrategy = "window", quantize = 1e12),
+        maxSteps = 24, walkMode = "local")
+    }
+    assert(mc.size == 7, s"MC local engine: ${mc.size} jobs: ${mc.mkString(" | ")}")
+    // GRank (tolerance -1): set-up is the hub collect, the norm broadcast
+    // and the state init; then one job per superstep and the final cut
+    for (it <- Seq(2, 5)) {
+      val (_, g) = JobCounter.jobs(sc) {
+        GRank.run(e, vs, PprConfig(5, 10, it, tolerance = -1,
+          topLStrategy = "window", quantize = 1e12))
+      }
+      assert(g.size == 3 + it + 1, s"GRank, $it supersteps: ${g.size} jobs: ${g.mkString(" | ")}")
+    }
+    e.unpersist(); vs.unpersist()
   }
 
   test("grank result is invariant across shuffle-partition counts (grankMulti contract M4)") {
