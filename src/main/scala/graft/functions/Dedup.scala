@@ -87,12 +87,14 @@ object Dedup {
     * (xxhash64(t_i..t_{i+k-1})), skipping the per-position array_join that
     * dominated the shingling pass. Hash-faithful to [[tokenShingles]]'s
     * string sets: distinct windows ⇔ distinct token tuples ⇔ distinct
-    * hashes (64-bit collisions aside), and the ≤k branch (one shingle =
-    * all tokens joined) hashes the joined string — a k-window string
-    * always contains exactly k-1 spaces, so the two branches can never
-    * denote the same string shingle and their hash spaces never need to
+    * hashes (64-bit collisions aside). A doc of exactly k tokens is one
+    * window and hashes like every other window, so it matches the same
+    * window inside a longer doc. Only a doc SHORTER than k (one shingle =
+    * all tokens joined) hashes the joined string: it has fewer than k-1
+    * spaces while every k-window string has exactly k-1, so that shingle
+    * can never equal a window's and the two hash spaces never need to
     * agree. Set sizes, df counts and intersections over these hashes
-    * therefore equal the string-set values. */
+    * therefore equal the string-set values (ScalaCheck-gated). */
   def tokenShingleHashes(text: Column, k: Int = 3): Column =
     tokenShingleHashesOf(TextAnalysis.tokens(text), k)
 
@@ -105,7 +107,7 @@ object Dedup {
     * reference (measured ~3x the whole shingling pass); a hoisted
     * attribute is materialized once per row. */
   def tokenShingleHashesOf(toks: Column, k: Int = 3): Column =
-    when(size(toks) <= k, array(xxhash64(array_join(toks, " "))))
+    when(size(toks) < k, array(xxhash64(array_join(toks, " "))))
       .otherwise(transform(sequence(lit(0), size(toks) - k),
         i => xxhash64((1 to k).map(j => element_at(toks, i + j)): _*)))
 
@@ -138,7 +140,7 @@ object Dedup {
       .withColumn("sig", transform(sequence(lit(0), lit(bands * rowsPerBand - 1)),
         p => coalesce(array_min(transform(col("hs"), h => xxhash64(h, p))), lit(Long.MaxValue))))
       .select(col("id"), col("hs"), col("sig"))
-      .persist()
+      .localCheckpoint(true) // one job; see ngramJaccard
     val banded = withSig.select(col("id"), posexplode(
       transform(sequence(lit(0), lit(bands - 1)),
         b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
@@ -148,14 +150,9 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    // materialize before releasing the signature cache (result is candidate-
-    // bounded and small; the cache would otherwise pin executor memory for
-    // the session's lifetime)
-    val res = verifyJaccardHashed(cand,
+    verifyJaccardHashed(cand,
         withSig.select(col("id"), array_distinct(col("hs")).as("hset")), threshold)
       .localCheckpoint(true)
-    withSig.unpersist()
-    res
   }
 
   /** SQL-replayable polynomial string hash mod 2^31-1 (char-code left fold,
@@ -192,7 +189,7 @@ object Dedup {
         p => coalesce(
           array_min(transform(col("hs"), h => graft.kernels.Mix.mix31(h, p, lit(0L), permSalt(salt)))),
           lit(graft.kernels.Mix.P))))
-      .persist()
+      .localCheckpoint(true) // one job; see ngramJaccard
     val banded = withSig.select(col("id"), posexplode(
       transform(sequence(lit(0), lit(bands - 1)),
         b => aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
@@ -203,10 +200,8 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    val res = verifyJaccard(cand, withSig.select(col("id"), col("sh")), threshold)
+    verifyJaccard(cand, withSig.select(col("id"), col("sh")), threshold)
       .localCheckpoint(true)
-    withSig.unpersist()
-    res
   }
 
   /** Exact shingle-set Jaccard verification of candidate pairs.
@@ -227,7 +222,7 @@ object Dedup {
   /** [[verifyJaccard]] over PRE-HASHED distinct shingle sets (id, hset
     * ARRAY<LONG>) — callers that already carry shingle hashes skip the
     * re-hash projection. */
-  private def verifyJaccardHashed(cand: DataFrame, hsets: DataFrame, threshold: Double): DataFrame = {
+  private[graft] def verifyJaccardHashed(cand: DataFrame, hsets: DataFrame, threshold: Double): DataFrame = {
     // SIZE FILTER (the SSJoin length filter, exact): J(A,B) <= min/max, so
     // a candidate with min(|A|,|B|) < threshold * max(|A|,|B|) can never
     // verify — drop it on a NARROW (id, set-size) join before any
@@ -249,13 +244,15 @@ object Dedup {
     // when the per-doc fingerprint table fits a broadcast (guide §3.1 /
     // §8: the candidate stream is the big side — millions of 16-byte
     // pairs — and the array payloads should move once, not once per
-    // candidate). Guarded: above ~200k docs (the per-shard verification
-    // case is far below) fall back to the shuffle joins; at true corpus
-    // scale verification is sharded by the banding/cap machinery anyway.
-    val docCount = hsets.count() // callers persist the backing frame first
+    // candidate). Guarded by the plan's size estimate against the
+    // session's own broadcast threshold (no job runs to decide); above it
+    // the shuffle joins take over, and at true corpus scale verification
+    // is sharded by the banding/cap machinery anyway.
+    val limit = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    val est = hsets.queryExecution.optimizedPlan.stats.sizeInBytes
     val a = hsets.select(col("id").as("id_a"), col("hset").as("sha"))
     val b = hsets.select(col("id").as("id_b"), col("hset").as("shb"))
-    val (aJ, bJ) = if (docCount <= 200000) (broadcast(a), broadcast(b)) else (a, b)
+    val (aJ, bJ) = if (limit >= 0 && est <= limit) (broadcast(a), broadcast(b)) else (a, b)
     candS.join(aJ, "id_a").join(bJ, "id_b")
       .select(col("id_a"), col("id_b"),
         (size(array_intersect(col("sha"), col("shb"))).cast("double") /
@@ -280,7 +277,11 @@ object Dedup {
     val shingled = df.select(col(idCol).as("id"),
         TextAnalysis.tokens(col(textCol)).as("toks")) // hoisted: see tokenShingleHashesOf
       .select(col("id"), array_distinct(tokenShingleHashesOf(col("toks"), shingleK)).as("hset"))
-      .persist()
+      // materialized by ONE job before the index and verify plans read it.
+      // A persisted frame that no action has filled yet would instead be
+      // filled under AQE by one cache-stage job per scan of it (index,
+      // df cap, size filter, both verify sides)
+      .localCheckpoint(true)
     val inv = shingled.select(col("id"), explode(col("hset")).as("s"))
     val rare = inv.groupBy("s").agg(count(lit(1)).as("df_s"))
       .where(col("df_s") <= maxShingleFreq).select("s")
@@ -288,9 +289,7 @@ object Dedup {
     val cand = invR.as("x").join(invR.as("y"),
       col("x.s") === col("y.s") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    val res = verifyJaccardHashed(cand, shingled, threshold).localCheckpoint(true)
-    shingled.unpersist()
-    res
+    verifyJaccardHashed(cand, shingled, threshold).localCheckpoint(true)
   }
 
   /** 64-bit SimHash over token hashes: per bit, sum +1/-1 across tokens,

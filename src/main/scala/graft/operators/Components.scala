@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.EdgeSource
@@ -35,9 +36,23 @@ object Components {
     * the fixpoint is a collection of stars centered at each component's
     * minimum vertex. Round count is O(log^2 n) worst case and ~log n in
     * practice (a 10k-vertex path converges in ~10 rounds — test-gated —
-    * where min-id propagation needs 10k). Each round is two groupBy+join
-    * passes over the current edge set, which CONTRACTS geometrically —
-    * unlike propagation, whose per-round cost stays at |E| forever. */
+    * where min-id propagation needs 10k). Each step reads m(u) from a
+    * window, min(dst) over (partition by src), on the edge rows themselves
+    * — no groupBy and join back — so a round is three exchanges (large-star
+    * window, small-star window, dedup) over the current edge set, which
+    * CONTRACTS geometrically, unlike propagation, whose per-round cost
+    * stays at |E| forever. A round is ONE job in a session without AQE:
+    * the localCheckpoint that cuts it also carries the fixpoint
+    * fingerprint as observed metrics.
+    *
+    * AQE stays on here (no IterTuning.forLoop scope): with it off a round
+    * is one job instead of four (AQE submits each shuffle stage as its own
+    * job), but every exchange keeps the session's full shuffle partition
+    * count, where AQE coalesces the small contracting edge sets. On the
+    * corpus_dedup benchmark's pair graph (local[3], 8 shuffle partitions,
+    * two traced runs each) the AQE-off variant ran 8 jobs and 110 tasks
+    * against 15 jobs and 26 tasks, and its span took 0.87–1.42 s against
+    * 0.97–1.10 s: no gain for the extra tasks. */
   def connectedComponentsStar(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame =
     connectedComponentsStarWithRounds(edges, vertices, maxIterations)._1
 
@@ -45,47 +60,47 @@ object Components {
     * took — the test-gated O(log n) evidence. */
   private[graft] def connectedComponentsStarWithRounds(
       edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): (DataFrame, Int) = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val b = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mins = b.groupBy(col("src").as("lu"))
-        .agg(min(col("dst")).as("mv"))
-        .select(col("lu"), least(col("mv"), col("lu")).as("m"))
-      b.join(mins, b("src") === col("lu"))
+    // m(u) = min(N(u) ∪ {u}) rides each edge row of u
+    val byU = Window.partitionBy(col("src"))
+    def largeStar(e: DataFrame): DataFrame =
+      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .select(col("src"), col("dst"), least(min(col("dst")).over(byU), col("src")).as("m"))
         .where(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
+    // oriented high -> low, so min(dst) < src is already m(u); each edge
+    // row emits its neighbor's link and u's own (u > m always), and the
+    // final dedup folds the repeats
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst"))
+        .select(col("src"), col("dst"), min(col("dst")).over(byU).as("m"))
+        .select(explode(array(
+          struct(col("dst").as("src"), col("m").as("dst")),
+          struct(col("src").as("src"), col("m").as("dst")))).as("l"))
+        .where(col("l.src") =!= col("l.dst"))
+        .select(col("l.src").as("src"), col("l.dst").as("dst"))
         .dropDuplicates("src", "dst")
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val o = e.select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst"))
-      val mins = o.groupBy(col("src").as("lu")).agg(min(col("dst")).as("m"))
-      val viaNbr = o.join(mins, o("src") === col("lu"))
-        .where(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-      val viaSelf = mins.where(col("lu") =!= col("m")).select(col("lu").as("src"), col("m").as("dst"))
-      viaNbr.union(viaSelf).dropDuplicates("src", "dst")
-    }
-    // set fingerprint (count + commutative hash XOR — the edge set is
-    // deduplicated, and XOR cannot overflow under ANSI mode): one job per
-    // round riding the freshly checkpointed frame
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val row = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    // every cut routes through the stats barrier: largeStar/smallStar join
-    // e against mins DERIVED FROM e, so the localCheckpoint stats-carry
-    // doubles the sizeInBytes BigInt's bit-length per round (the Scc
-    // pathology — see StatsBarrier's Scaladoc)
+    // every cut materializes ONE job: the set fingerprint (row count +
+    // commutative hash XOR — the edge set is deduplicated, and XOR cannot
+    // overflow under ANSI mode) rides the checkpoint as observed metrics.
+    // Each cut also routes through the stats barrier: localCheckpoint
+    // carries the plan's size estimate into the next round, where
+    // large-star's union alone doubles it (the Scc pathology — see
+    // StatsBarrier's Scaladoc)
     import org.apache.spark.sql.graft.StatsBarrier.statsBarrier
-    var e = statsBarrier(EdgeSource.undirected(edges)
-      .where(col("src") < col("dst")) // one canonical row per undirected pair
-      .localCheckpoint(true))
-    var fp = fingerprint(e)
-    var done = e.isEmpty
+    def cut(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val ck = e.observe(obs, count(lit(1)).as("n"),
+          coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("x"))
+        .localCheckpoint(true)
+      val m = obs.get
+      (statsBarrier(ck), (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
+    }
+    var (e, fp) = cut(EdgeSource.undirected(edges)
+      .where(col("src") < col("dst"))) // one canonical row per undirected pair
+    var done = fp._1 == 0L
     var i = 0
     while (!done && i < maxIterations) {
-      val next = statsBarrier(smallStar(largeStar(e)).localCheckpoint(true))
-      val nfp = fingerprint(next)
+      val (next, nfp) = cut(smallStar(largeStar(e)))
       done = nfp == fp
       fp = nfp
       e = next

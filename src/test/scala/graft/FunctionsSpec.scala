@@ -112,6 +112,68 @@ class FunctionsSpec extends AnyFunSuite with GraphFixtures {
     assert(!got.keySet.exists(p => p._1 >= 4L))
   }
 
+  test("ngram jaccard: a k-token doc matches the same window inside a (k+1)-token doc") {
+    // string shingles (k = 3): {"alpha beta gamma"} vs {"alpha beta gamma",
+    // "beta gamma delta"} -> Jaccard 1/2, which passes threshold 0.5
+    val corpus = Seq((1L, "alpha beta gamma"), (2L, "alpha beta gamma delta"))
+    val got = Dedup.ngramJaccard(docs(corpus), "doc_id", "text", threshold = 0.5)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(got == Map((1L, 2L) -> 0.5), s"got $got")
+  }
+
+  test("shingle hashes are faithful to shingle strings: set sizes and intersections (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    val s = spark
+    import s.implicits._
+    // a 3-token alphabet and lengths 0..k+3, so docs shorter than, equal to
+    // and longer than k share shingles often
+    def tokenLists(k: Int) = Gen.listOfN(24,
+      Gen.choose(0, k + 3).flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "cd"))))
+    // no shrinking: shrunk token strings may be empty, which no tokenizer emits
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 4).flatMap(k => tokenLists(k).map(k -> _))) { case (k, lists) =>
+      val rows = lists.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "toks")
+        .select(
+          array_distinct(Dedup.tokenShinglesOf(col("toks"), k)).as("sh"),
+          array_distinct(Dedup.tokenShingleHashesOf(col("toks"), k)).as("hs"))
+        .collect().map(r => (r.getSeq[String](0).toSet, r.getSeq[Long](1).toSet))
+      val bad = for {
+        (sa, ha) <- rows.iterator; (sb, hb) <- rows.iterator
+        if sa.size != ha.size || (sa intersect sb).size != (ha intersect hb).size
+      } yield (sa, sb)
+      val first = bad.take(1).toList
+      first.isEmpty :| s"k = $k: string and hash sets disagree on ${first.mkString}"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("verify broadcast guard: over the session threshold the joins shuffle, same pairs") {
+    val s = spark
+    import s.implicits._
+    val hsets = Seq((1L, Seq(1L, 2L, 3L)), (2L, Seq(2L, 3L, 4L)), (3L, Seq(1L, 2L, 3L, 4L)),
+      (4L, Seq(7L, 8L))).toDF("id", "hset")
+    val cand = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L)).toDF("id_a", "id_b")
+    def run() = {
+      val v = Dedup.verifyJaccardHashed(cand, hsets, 0.5)
+      (v.queryExecution.executedPlan.toString,
+        v.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap)
+    }
+    def ngram() = Dedup.ngramJaccard(docs(dupCorpus), "doc_id", "text", threshold = 0.5)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val (bPlan, bPairs) = run()
+    val bNgram = ngram()
+    spark.conf.set(key, "4") // bytes: below any estimate of these frames
+    val ((sPlan, sPairs), sNgram) = try (run(), ngram()) finally spark.conf.set(key, prev)
+    assert(bPlan.contains("BroadcastExchange"), s"expected the broadcast verify joins:\n$bPlan")
+    assert(!sPlan.contains("BroadcastExchange"), s"expected shuffle joins only:\n$sPlan")
+    assert(bPairs == Map((1L, 3L) -> 0.75, (2L, 3L) -> 0.75, (1L, 2L) -> 0.5))
+    assert(sPairs == bPairs)
+    assert(sNgram == bNgram && bNgram.nonEmpty)
+  }
+
   test("ngram jaccard hot-shingle cap: flood pairs vanish when capped, rare pairs unchanged") {
     // 12 identical flood docs share ONLY hot shingles (df = 12); the rare
     // pair (1, 2) shares doc-specific shingles (df = 2)

@@ -149,14 +149,21 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
   }
 
   test("cc: star contraction == min-id propagation on random graphs") {
-    for (seed <- Seq(3, 13, 77)) {
-      val es = randomGraph(40, 30, seed)
-      val vids = (0L until 40L)
+    // a hub with 5k leaves (one 5k-row window partition) hanging off a
+    // path whose far end holds the component minimum, plus a separate edge
+    val hub = 5000L
+    val hubEs = (1L to 5000L).map(l => (hub, hub + l)) ++
+      (0L until 20L).map(i => (i, i + 1)) ++ Seq((20L, hub), (30L, 31L))
+    val hubIds = (0L to 20L) ++ Seq(30L, 31L, 40L) ++ (hub to hub + 5000L)
+    val inputs = Seq(3, 13, 77).map(seed => s"random seed $seed" -> (randomGraph(40, 30, seed), 0L until 40L)) ++
+      Seq("planted hub" -> (hubEs, hubIds), "no edges" -> (Seq.empty[(Long, Long)], 0L until 5L))
+    for ((name, (es, vids)) <- inputs) {
       val a = Components.connectedComponentsStar(edgesDf(es), verticesDf(vids))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = Components.connectedComponentsMinId(edgesDf(es), verticesDf(vids))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(a == b, s"seed $seed")
+      assert(a == b, name)
+      assert(a.size == vids.size, name)
     }
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.kernels.TopK
 import graft.model.PprConfig
-import graft.operators.{ExactPpr, GRank, MonteCarloPpr}
+import graft.functions.Dedup
+import graft.operators.{Components, ExactPpr, GRank, MonteCarloPpr}
 import org.apache.spark.grafttest.JobCounter
 
 /** G5 partitioned schedule + physical-plan and parallelism-invariance
@@ -117,6 +118,31 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
       assert(g.size == 3 + it + 1, s"GRank, $it supersteps: ${g.size} jobs: ${g.mkString(" | ")}")
     }
     e.unpersist(); vs.unpersist()
+  }
+
+  test("job-count gate: dedup clusters run one job per contraction round") {
+    val s = spark
+    import s.implicits._
+    // chain-corpus pair graph: triangles {i, i+1e6, i+2e6}; docs 3e6.. are pair-free
+    val pairs = (0L until 60L).flatMap(i =>
+      Seq((i, i + 1000000L), (i + 1000000L, i + 2000000L), (i, i + 2000000L)))
+      .toDF("id_a", "id_b").persist()
+    val docs = ((0L until 60L).flatMap(i => Seq(i, i + 1000000L, i + 2000000L)) ++
+      (3000000L until 3000010L)).toDF("doc_id").persist()
+    pairs.count(); docs.count()
+    val sc = spark.sparkContext
+    val (got, jobs) = JobCounter.jobs(sc)(Dedup.clusters(pairs, docs).collect())
+    assert(got.length == 190 && got.forall { r =>
+      val id = r.getLong(0)
+      r.getLong(1) == (if (id < 3000000L) id % 1000000L else id)
+    })
+    val (_, rounds) = Components.connectedComponentsStarWithRounds(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")), docs.select(col("doc_id").as("id")))
+    assert(rounds == 2)
+    // the initial cut, one checkpoint per round (fixpoint count and hash
+    // ride it as observed metrics), and the final mapping's collect
+    assert(jobs.size == 1 + rounds + 1, s"clusters, $rounds rounds: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    pairs.unpersist(); docs.unpersist()
   }
 
   test("grank result is invariant across shuffle-partition counts (grankMulti contract M4)") {
