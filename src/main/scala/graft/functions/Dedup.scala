@@ -36,7 +36,7 @@ object Dedup {
     val grouped = hashed.groupBy("h1")
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("copies"),
         min(col("h2")).as("lo2"), max(col("h2")).as("hi2"))
-      .persist()
+      .localCheckpoint(true) // one job; both the clean and collided halves read it
     val clean = grouped.where(col("lo2") === col("hi2")).select(col("keep_id"), col("copies"))
     val collided = grouped.where(col("lo2") =!= col("hi2")).select(col("h1"))
     val fix = df.select(col(idCol).as("id"), col(textCol).as("t"), h1.as("h1"))
@@ -44,9 +44,7 @@ object Dedup {
       .groupBy(col("t"))
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("copies"))
       .select(col("keep_id"), col("copies"))
-    val res = clean.union(fix).localCheckpoint(true)
-    grouped.unpersist()
-    res
+    clean.union(fix).localCheckpoint(true)
   }
 
   /** Near-dup cluster resolution — the step every corpus-dedup pipeline
@@ -226,10 +224,10 @@ object Dedup {
     // SIZE FILTER (the SSJoin length filter, exact): J(A,B) <= min/max, so
     // a candidate with min(|A|,|B|) < threshold * max(|A|,|B|) can never
     // verify — drop it on a NARROW (id, set-size) join before any
-    // shingle-hash array is attached (DedupPhaseBench measured 9.5M
-    // candidates whose two ~10^2-element arrays otherwise ride both
-    // verify shuffles; guide §2.3 "shuffle keys and metadata instead of
-    // payloads"). Kept pairs satisfy min >= t*max, so no qualifying pair
+    // shingle-hash array is attached (OPTIMIZATION_r07.md q_ngram_neardup
+    // section: 9.5M candidates whose two ~10^2-element arrays otherwise
+    // ride both verify shuffles; guide §2.3 "shuffle keys and metadata
+    // instead of payloads"). Kept pairs satisfy min >= t*max, so no qualifying pair
     // is lost; threshold 0 keeps everything.
     val sizes = hsets.select(col("id"), size(col("hset")).as("n"))
     val candS =
@@ -315,7 +313,10 @@ object Dedup {
     * (id_a, id_b, hamming). */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig")).persist()
+    // materialized by ONE job before both self-join sides read it (see
+    // ngramJaccard: an unfilled persist is filled once per scan under AQE)
+    val sigs = df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
+      .localCheckpoint(true)
     val chunked = sigs.select(col("id"), col("sig"), posexplode(
       transform(sequence(lit(0), lit(3)),
         c => call_function("shiftright", col("sig"), (c * 16).cast("int"))
@@ -327,12 +328,10 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.sig").as("sa"), col("y.sig").as("sb"))
       .distinct()
-    val res = cand.select(col("id_a"), col("id_b"),
+    cand.select(col("id_a"), col("id_b"),
       bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
       .localCheckpoint(true)
-    sigs.unpersist()
-    res
   }
 
   /** Embedding cosine near-dup: LSH-bucketed (random-hyperplane sign bits,
@@ -342,7 +341,8 @@ object Dedup {
       threshold: Double = 0.95, planes: Int = 12, seed: Long = 42L,
       dims: Int = -1): DataFrame = {
     val sigCol = Similarity.signatureFor(df, vecCol, planes, seed, dims)
-    val sigs = df.select(col(idCol).as("id"), col(vecCol).as("v"), sigCol.as("sig")).persist()
+    val sigs = df.select(col(idCol).as("id"), col(vecCol).as("v"), sigCol.as("sig"))
+      .localCheckpoint(true) // one job; see simhashNearDup
     // multi-probe: bucket on the full signature AND each one-bit flip would
     // explode candidates; two half-signatures give Hamming<=1-per-half recall
     val half = sigs.select(col("id"), col("v"), posexplode(array(
@@ -354,10 +354,8 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.v").as("va"), col("y.v").as("vb"))
       .distinct()
-    val res = cand.select(col("id_a"), col("id_b"), Similarity.cosine(col("va"), col("vb")).as("cosine"))
+    cand.select(col("id_a"), col("id_b"), Similarity.cosine(col("va"), col("vb")).as("cosine"))
       .where(col("cosine") >= threshold)
       .localCheckpoint(true)
-    sigs.unpersist()
-    res
   }
 }

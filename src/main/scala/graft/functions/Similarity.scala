@@ -10,7 +10,7 @@ import graft.kernels.{Grid, TopK}
   * an LSH-bucketed variant as the scale path.
   *
   * All vector math is column-level (`zip_with` + `aggregate`) — codegen'd,
-  * no UDF. The top-k reuses the engine's bounded per-seed TopK aggregator.
+  * no UDF. The top-k reuses the engine's per-seed top-L kernel (TopK).
   */
 object Similarity {
 
@@ -100,7 +100,7 @@ object Similarity {
     val scored = q.crossJoin(c)
       .where(col("seed") =!= col("node"))
       .select(col("seed"), col("node"), cosine(col("qv"), col("cv")).as("score"))
-    TopK.pruneTopL(scored, k, "bounded")
+    TopK.pruneTopL(scored, k)
   }
 
   /** Deterministic seeded initial centroid component for IVF cell c, dim i:
@@ -213,7 +213,7 @@ object Similarity {
       .where(col("seed") =!= col("node"))
       .select(col("seed"), col("node"), cosine(col("qv"), col("cv")).as("score"))
       .dropDuplicates("seed", "node")
-    TopK.pruneTopL(scored, k, "bounded")
+    TopK.pruneTopL(scored, k)
   }
 
   /** Recall@k of an approximate top-k result against the exact one
@@ -242,7 +242,7 @@ object Similarity {
 
   /** LSH-bucketed approximate top-k: candidates share at least one of the
     * two half-signatures (multi-probe lite), exact cosine within candidates,
-    * bounded TopK per query. Recall < 1 by construction; the tradeoff knob
+    * per-query top-k (TopK). Recall < 1 by construction; the tradeoff knob
     * is `planes` (fewer planes = bigger buckets = higher recall & cost). */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int = 12, seed: Long = 42L,
@@ -264,6 +264,6 @@ object Similarity {
         col("q_v").as("qv"), col("c_v").as("cv"))
       .dropDuplicates("seed", "node")
     val scored = cand.select(col("seed"), col("node"), cosine(col("qv"), col("cv")).as("score"))
-    TopK.pruneTopL(scored, k, "bounded")
+    TopK.pruneTopL(scored, k)
   }
 }

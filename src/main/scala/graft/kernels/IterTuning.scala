@@ -29,17 +29,13 @@ object IterTuning {
     * it from spark.sql.shuffle.partitions — scale-adaptive via conf, guide
     * §2.2) and per-superstep frames are uniform, which is exactly the
     * situation AQE's coalescing cannot improve (BASELINE.md round-1: AQE
-    * coalescing measured harmful for supersteps). Restores the caller's
+    * coalescing measured harmful for supersteps; OPTIMIZATION_r07.md "The
+    * AQE-off scope is EVIDENCE-SCOPED" has the per-operator A/B — loops of
+    * tiny sub-second rounds, SCC's among them, run faster with AQE
+    * coalescing and do not use this scope). Restores the caller's
     * settings afterwards; one-shot queries keep AQE. */
   def forLoop[T](spark: SparkSession)(body: => T): T =
-    scoped(spark, BloomKey, "false") {
-      // A/B escape hatch (measurement only): SPARK_GRAFT_LOOP_AQE=1 keeps
-      // AQE on inside loops — used to verify per-operator that the AQE-off
-      // scope helps (it does for the big superstep loops; SCC's tiny
-      // sub-second rounds measured FASTER with AQE coalescing and keep it).
-      if (sys.env.get("SPARK_GRAFT_LOOP_AQE").contains("1")) body
-      else scoped(spark, AqeKey, "false")(body)
-    }
+    scoped(spark, BloomKey, "false")(scoped(spark, AqeKey, "false")(body))
 
   /** Spark 4 injects runtime bloom-filter joins by default
     * (`spark.sql.optimizer.runtime.bloomFilter.enabled=true`). Inside an

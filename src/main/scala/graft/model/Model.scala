@@ -18,9 +18,6 @@ final case class Vertex(id: Long)
   * reference's `map<source, map<node,double>>`). */
 final case class ScoreEntry(seed: Long, node: Long, score: Double)
 
-/** (node, score) pair used by the top-L aggregators. */
-final case class NodeScore(node: Long, score: Double)
-
 /** Shared parameters of the approximated-PPR algorithms.
   *
   * Mirrors the template-parameter validation contract of the reference
@@ -35,13 +32,11 @@ final case class PprConfig(
     damping: Double = 0.85,
     tolerance: Double = 1e-4,
     // engine knobs (no reference analog: physical execution)
-    /** Per-superstep top-L physical strategy:
-      * "fused"   — single-shuffle sum+topL object aggregation;
-      * "bounded" — hash-agg by (seed,node) then bounded-heap topL by seed
-      *             (two shuffles, strictly bounded memory);
-      * "window"  — hash-agg by (seed,node) then row_number window
-      *             (two shuffles, pure Tungsten sort, no object buffers). */
-    topLStrategy: String = "fused",
+    /** Per-superstep top-L strategy. Kept for source compatibility only:
+      * "window" (exact (seed,node) sum, then a row_number window —
+      * [[graft.kernels.TopK]]) is the one shape, and no code branches on
+      * this field. */
+    topLStrategy: String = "window",
     /** Reference's partition-alternating schedule (include/grank.h:85,96,
       * 129-137): 2-color the undirected closure, recompute only one color
       * class per iteration, carry the other forward, alternate. ~Halves
@@ -60,20 +55,12 @@ final case class PprConfig(
     /** number of salt buckets for skewed keys. */
     saltBuckets: Int = 8,
     /** Measured break-even for auto salting, in PER-KEY GATHER OUTPUT ROWS
-      * (indeg * L): HubBench (BASELINE.md round-2 table) measured salting
+      * (indeg * L): the BASELINE.md round-2 hub-salting table measured salting
       * LOSING at 40M rows/key (the downstream full-state exchange dominates)
       * and WINNING 1.4-1.9x at 150M rows/key (one task's join + shuffle
       * write dominates the superstep) — the break-even is order 1e8. Tests
       * shrink it to exercise auto engagement on small fixtures. */
     saltAutoBreakEven: Long = 100000000L,
-    /** cut lineage (localCheckpoint) every N supersteps. Default 1: Spark 4
-      * LogicalRDD checkpoints PRESERVE the state's hash(seed) output
-      * partitioning (verified: a superstep from a checkpointed state plans
-      * with a single exchange), and depth-1 plans keep Catalyst analysis
-      * cost constant per iteration — a persist-chain (N > 1) instead grows
-      * the logical plan every superstep, which made each convergence-norm
-      * job's ANALYSIS alone cost seconds (measured on the Eat run). */
-    lineageCutEvery: Int = 1,
     /** write a parquet snapshot + manifest every N supersteps (0 = off). */
     checkpointEvery: Int = 0,
     checkpointDir: Option[String] = None,
@@ -83,9 +70,7 @@ final case class PprConfig(
       * of addend order AND bit-identical across any IEEE-754 engine, so an
       * external oracle (DuckDB) can reproduce the full iterative run
       * hash-exactly. Quantization error is <= 1/quantize per contribution
-      * per superstep (1e-12 — far below every quality tolerance). Only the
-      * "window" top-L strategy supports it (object-agg buffers sum doubles
-      * in buffer order). */
+      * per superstep (1e-12 — far below every quality tolerance). */
     quantize: Double = 0.0) {
 
   require(K > 0, "k must be > 0")
@@ -93,10 +78,8 @@ final case class PprConfig(
   require(K <= L, "k can't be greater than l")
   require(iterations > 0, "iterations must be > 0")
   require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
-  require(Set("fused", "bounded", "window")(topLStrategy), s"unknown topLStrategy $topLStrategy")
+  require(topLStrategy == "window", s"unknown topLStrategy $topLStrategy (only window)")
   require(saltThreshold >= -1, "saltThreshold must be -1 (auto), 0 (off) or a positive in-degree")
   require(saltBuckets > 0, "saltBuckets must be > 0")
   require(saltAutoBreakEven > 0, "saltAutoBreakEven must be > 0")
-  require(quantize == 0.0 || topLStrategy == "window",
-    "quantize (fixed-point verification mode) requires the window top-L strategy")
 }

@@ -47,10 +47,10 @@ object GRank {
     * >= 0, else (auto) the measured per-key gather-output break-even divided
     * by L — a key's gather join emits indeg * L rows, so indeg beyond
     * saltAutoBreakEven / L is where one task's join + shuffle write starts
-    * to dominate the superstep (HubBench: loses at 40M rows/key, wins
-    * 1.4-1.9x at 150M; BASELINE.md round-2 table). At the defaults
-    * (break-even 1e8, L=100) that is indeg 1e6: the HubBench 1.5M-indeg
-    * fixture engages, the 400k one does not — reproducing the table. */
+    * to dominate the superstep (BASELINE.md "Hub salting: measured
+    * break-even": loses at 40M rows/key, wins 1.4-1.9x at 150M). At the
+    * defaults (break-even 1e8, L=100) that is indeg 1e6: the table's
+    * 1.5M-indeg fixture engages, the 400k one does not. */
   private[graft] def resolveSaltThreshold(cfg: PprConfig): Long =
     if (cfg.saltThreshold >= 0) cfg.saltThreshold.toLong
     else math.max(1L, cfg.saltAutoBreakEven / math.max(cfg.L, 1))
@@ -105,7 +105,8 @@ object GRank {
       } else Array.empty
     // auto mode pays that ONE setup job to check for hubs and runs the plain
     // unsalted plan (zero per-superstep salting overhead) when none exist —
-    // HubBench measured blanket salting regressing moderate skew
+    // blanket salting measured regressing moderate skew (BASELINE.md
+    // "Hub salting: measured break-even")
     val salted = saltThreshold > 0 && (cfg.saltThreshold >= 0 || hubIds.nonEmpty)
 
     // CSR-like layout: one shuffle up front, reused by every superstep's join
@@ -160,7 +161,7 @@ object GRank {
       teleport.union(
         adj.select(col("src").as("seed"), col("dst").as("node"),
           col("factor").as("score"))),
-      cfg.L, cfg.topLStrategy, cfg.quantize)
+      cfg.L, quantize = cfg.quantize)
 
     def gather(state: DataFrame, adjacency: DataFrame): DataFrame = {
       val st =
@@ -183,17 +184,9 @@ object GRank {
           (col("score") * col("factor")).as("score"))
     }
 
+    // single-exchange prune: repartition(seed) once; agg + rank reuse it
     def prune(combined: DataFrame): DataFrame =
-      if (cfg.topLStrategy == "window")
-        if (sys.props.get("graft.grank.prune").contains("agg2"))
-          // A/B leg: partial-aggregate before the exchange (2 smaller
-          // exchanges) instead of one raw-row exchange — GrankPruneBench
-          TopK.pruneTopL(combined, cfg.L, "window", cfg.quantize)
-        else
-          // single-exchange path: repartition(seed) once; agg + rank reuse it
-          TopK.pruneTopLAligned(combined, cfg.L, shufflePartitions, cfg.quantize)
-      else
-        TopK.pruneTopL(combined, cfg.L, cfg.topLStrategy)
+      TopK.pruneTopLAligned(combined, cfg.L, shufflePartitions, cfg.quantize)
 
     def superstep(state: DataFrame, i: Int): DataFrame =
       if (!cfg.partitionedSchedule)
@@ -221,11 +214,6 @@ object GRank {
     val checkpoint = cfg.checkpointDir.map(new CheckpointManager(_))
     val res = IterativeEngine.run(initWithColor, superstep, cfg.iterations, cfg.tolerance,
       cfg.checkpointEvery, checkpoint, resume = checkpoint.exists(_.committed().nonEmpty),
-      // partitioned mode references `state` twice per superstep (gather +
-      // carried half): under a persist-chain the logical plan would DOUBLE
-      // per iteration (exponential optimizer cost), so cut lineage every
-      // superstep there
-      lineageCutEvery = if (cfg.partitionedSchedule) 1 else cfg.lineageCutEvery,
       convergenceWindow = if (cfg.partitionedSchedule) 2 else 1)
 
     val finalState = TopK.topKWindow(

@@ -97,11 +97,10 @@ object IterativeEngine {
       checkpointEvery: Int = 0,
       checkpoint: Option[CheckpointManager] = None,
       resume: Boolean = false,
-      lineageCutEvery: Int = 1,
       convergenceWindow: Int = 1): Result =
     graft.kernels.IterTuning.withoutRuntimeFilters(init.sparkSession) {
       runInner(init, superstep, maxIterations, tolerance, checkpointEvery,
-        checkpoint, resume, lineageCutEvery, convergenceWindow)
+        checkpoint, resume, convergenceWindow)
     }
 
   private def runInner(
@@ -112,7 +111,6 @@ object IterativeEngine {
       checkpointEvery: Int,
       checkpoint: Option[CheckpointManager],
       resume: Boolean,
-      lineageCutEvery: Int,
       convergenceWindow: Int): Result = {
     val spark = init.sparkSession
     var startIter = 0
@@ -122,25 +120,13 @@ object IterativeEngine {
         startIter = i; state = df
       }
     }
-    // Materialization policy. lineageCutEvery = 1: localCheckpoint every
-    // superstep (bounded plan depth, but the LogicalRDD forgets its output
-    // partitioning, so the next gather join re-shuffles the state).
-    // lineageCutEvery = N > 1: persist-chain — the state keeps its plan and
-    // therefore its hash(seed) output partitioning (the next join inserts
-    // NO state-side Exchange); lineage is only cut (localCheckpoint) every
-    // N supersteps to keep analysis cost bounded.
-    var persisted = List.empty[DataFrame]
-    def materialize(df: DataFrame, iter: Int): DataFrame =
-      if (lineageCutEvery <= 1 || (iter + 1) % lineageCutEvery == 0) {
-        val c = df.localCheckpoint(true)
-        persisted.foreach(_.unpersist(false)); persisted = Nil
-        c
-      } else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count() // materialize now so wallMs measures this superstep only
-        persisted ::= p
-        p
-      }
+    // Materialization policy: localCheckpoint EVERY superstep. Plans stay
+    // depth 1, so per-superstep Catalyst analysis cost stays flat, and
+    // Spark 4's LogicalRDD keeps the state's hash output partitioning, so
+    // the next gather join plans no state-side exchange (ScheduleSpec
+    // "superstep from a localCheckpoint'ed state plans with ONE exchange").
+    // A persist-chain instead grows the plan every superstep (BASELINE.md
+    // "Superstep cost fix: depth-1 plans").
     // init: materialize + truncate lineage (iterative-DataFrame failure
     // mode #1: per-iteration plan nesting makes analysis cost quadratic)
     state = state.localCheckpoint(true)
@@ -170,7 +156,7 @@ object IterativeEngine {
           java.nio.file.Paths.get(s"$d/${label}_superstep.txt"),
           stepDf.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
-      val next = materialize(stepDf, i)
+      val next = stepDf.localCheckpoint(true)
       val tMat = System.nanoTime()
       maxDiff = if (tolerance < 0) Double.NaN else Metrics.maxNorm1(state, next)
       val tNorm = System.nanoTime()
@@ -184,21 +170,13 @@ object IterativeEngine {
       // the previous state's checkpoint blocks are unreachable from here on;
       // free them NOW instead of waiting for the ContextCleaner (otherwise
       // |V|*L-row block sets pile up per iteration until a GC storm).
-      // (persist-chain states are freed at the next lineage cut instead —
-      // a later block eviction may need to recompute through them.)
-      if (lineageCutEvery <= 1) freeCheckpointBlocks(state)
+      freeCheckpointBlocks(state)
       state = next
       i += 1
       val m = IterMetrics(i, maxDiff, rows, wallMs)
       history :+= m
       if (checkpointEvery > 0 && checkpoint.isDefined && i % checkpointEvery == 0)
         checkpoint.get.save(state, i, m, history)
-    }
-    // hand back a checkpoint-backed frame: the persist-chain below it is
-    // about to be released
-    if (persisted.nonEmpty) {
-      state = state.localCheckpoint(true)
-      persisted.foreach(_.unpersist(false))
     }
     Result(state, history)
   }

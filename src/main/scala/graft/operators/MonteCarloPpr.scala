@@ -90,13 +90,16 @@ object MonteCarloPpr {
   private[graft] def survivalSalt(salt: Long): Long = salt * 7919L + 1234567L
   private[graft] def pickSalt(salt: Long): Long = salt * 7919L + 7654321L
 
-  /** A/B gate for the weighted successor draw (default: binary search; the
-    * two paths pick IDENTICAL successors — WeightedHubBench measures them
-    * against each other on a 10^4-outdeg hub and the numbers land in
-    * BASELINE.md). Read at plan/closure build time. */
-  private[graft] def linearWeightedPick: Boolean =
-    sys.props.getOrElse("graft.wpick",
-      sys.env.getOrElse("SPARK_GRAFT_WPICK", "auto")) == "linear"
+  /** Scalar weighted pick: the 0-based index of the cumulative-weight
+    * interval [cws(i-1), cws(i)) that contains r, for strictly increasing
+    * positive `cws` and r in [0, cws.last). Binary search for the first
+    * i with cws(i) > r: a found r sits at j with cws(j) = r (answer j+1),
+    * and a miss returns the insertion point, the first element > r.
+    * O(log outdeg) per draw; the Column twin is [[pickIdx]]. */
+  private[graft] def weightedPick(cws: Array[Long], r: Long): Int = {
+    val j = java.util.Arrays.binarySearch(cws, r)
+    if (j >= 0) j + 1 else -(j + 1)
+  }
 
   /** Weight contract for the walk family (VERDICT r5 next #4): a `weight`
     * edge column switches every successor draw from uniform to
@@ -141,22 +144,22 @@ object MonteCarloPpr {
     * over `dsts`. Columns in scope: seed, walkId, cur (pre-move), and the
     * joined adjacency's outdeg (+ cws/totw when weighted). Step 1 always
     * traverses with the round-robin base `walkId` (run: :127-132). */
-  private def pickIdx(step: Int, salt: Long, weighted: Boolean): Column = {
+  private[graft] def pickIdx(step: Int, salt: Long, weighted: Boolean): Column = {
     val base =
       if (step == 1) col("walkId")
       else col("walkId") + mix31(col("seed"), col("cur"), lit(step), pickSalt(salt))
     if (weighted) {
       val r = pmod(base, col("totw"))
       // the answer is 1 + #{i : cws(i) <= r}. For short adjacency rows a
-      // linear filter wins; hub rows (outdeg >> 64) get an O(log outdeg)
+      // linear filter wins; hub rows (outdeg > 64) get an O(log outdeg)
       // binary search — cws is strictly increasing (positive integer
       // weights), expressed as a fixed 32-step fold over (lo, hi) with
       // invariant cws(lo-1) <= r < cws(hi) (0-based; cws(n-1) = totw > r,
-      // so hi = n-1 is valid); converged states are no-ops. Identical
-      // result to the linear scan on every row (VERDICT r6 next #2).
+      // so hi = n-1 is valid); converged states are no-ops. The two agree
+      // on every row (PprSpec property; BASELINE.md §WHUB: 21.9x on a
+      // 10^4-outdeg hub).
       val n = size(col("cws"))
       val linear = size(filter(col("cws"), c => c <= r)) + 1
-      if (linearWeightedPick) return linear.cast("int")
       val bsearch = aggregate(
         sequence(lit(1), lit(32)),
         struct(lit(0).as("lo"), (n - 1).as("hi")),
@@ -507,7 +510,6 @@ object MonteCarloPpr {
     val bc = spark.sparkContext.broadcast(amap)
     val sSalt = survivalSalt(salt)
     val pSalt = pickSalt(salt)
-    val linearPick = linearWeightedPick // captured driver-side into the closure
     // a stat only: a re-run task would count its origins twice
     val walking = spark.sparkContext.longAccumulator
     val baskets = verts.as[Long].mapPartitions { ids =>
@@ -532,23 +534,7 @@ object MonteCarloPpr {
                 val base = if (s == 1) w else w + mix31Scala(seed, cur, s, pSalt)
                 val idx =
                   if (cws == null) (base % dsts.length).toInt
-                  else { // cumulative-weight interval containing r:
-                    // first i with cws(i) > r via binary search — cws is
-                    // strictly increasing, so a found r sits at j with
-                    // cws(j) = r <= r (answer j+1) and a miss returns the
-                    // insertion point (the first element > r) directly.
-                    // Bit-identical to the linear scan, O(log outdeg) per
-                    // draw instead of O(outdeg) (VERDICT r6 next #2).
-                    val r = base % cws(cws.length - 1)
-                    if (linearPick) {
-                      var i = 0
-                      while (cws(i) <= r) i += 1
-                      i
-                    } else {
-                      val j = java.util.Arrays.binarySearch(cws, r)
-                      if (j >= 0) j + 1 else -(j + 1)
-                    }
-                  }
+                  else weightedPick(cws, base % cws(cws.length - 1))
                 cur = dsts(idx)
                 mine(cur) = mine.getOrElse(cur, 0L) + 1L
                 s += 1
@@ -583,20 +569,18 @@ object MonteCarloPpr {
       walkBaskets: DataFrame, stats: McWalkStats,
       ewOpt: Option[DataFrame]): (DataFrame, McWalkStats) = {
     val d = cfg.damping
-    // combine prune: under the "window" strategy use the ALIGNED shape —
-    // one repartition(seed) reused by the (seed,node) sum, the top-L rank
-    // AND the final top-K rank (GrankPruneBench measured aligned 10.0 s vs
-    // agg-then-window 13.9-14.7 s interleaved on the same gather volume).
-    // Every strategy gets cfg.quantize on purpose: with quantize > 0 the
-    // unweighted combine sum, too, is the fixed-point grid sum
-    // (addend-order-free, what the DuckDB oracle replays), not a raw
-    // double sum
+    // combine prune: the ALIGNED shape — one repartition(seed) reused by
+    // the (seed,node) sum, the top-L rank AND the final top-K rank
+    // (aligned 10.0 s against agg-then-window 13.9-14.7 s on the same
+    // gather volume: OPTIMIZATION_r07.md, GRank prune shape). It always
+    // gets cfg.quantize: with quantize > 0 the unweighted combine sum, too,
+    // is the fixed-point grid sum (addend-order-free, what the DuckDB oracle
+    // replays). Before the aligned shape was the only one, the unweighted
+    // combine under a non-window strategy summed raw doubles.
     val shufflePartitions = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     def combinePrune(df: DataFrame): DataFrame =
-      if (cfg.topLStrategy == "window")
-        TopK.pruneTopLAligned(df, cfg.L, shufflePartitions, cfg.quantize)
-      else TopK.pruneTopL(df, cfg.L, cfg.topLStrategy, cfg.quantize)
+      TopK.pruneTopLAligned(df, cfg.L, shufflePartitions, cfg.quantize)
     val combined = if (ewOpt.isDefined) {
       val ew = ewOpt.get // the run-wide persisted (src,dst,w) aggregation
       val ws = ew.groupBy(col("src")).agg(sum(col("w")).as("wsum"))

@@ -20,20 +20,11 @@ import graft.kernels.Grid
   *
   * Convergence: L1(old, new) < tolerance, same driver loop as PPR.
   *
-  * The dangling-mass scalar has two measured plan shapes (PrBench, sf0.1,
-  * interleaved same-JVM runs):
-  *  - "subquery" (default): the aggregate folded into the plan as a
-  *    broadcast 1-row relation — ONE job per superstep, no driver sync.
-  *  - "literal": one tiny aggregation job over the already-materialized
-  *    state, result inlined as a literal (the r1 shape).
-  * Measured steady supersteps are equivalent within this VM's noise band
-  * (sub 616-1035 ms vs lit 770-782 ms, interleaved) — the r2 bench
-  * "regression" (18.4 -> 36.0 s, VERDICT r2 #1) was NOT a plan cost: r1 ran
-  * tolerance=1e-8 and CONVERGED AFTER 11 ITERATIONS; the r2 verification
-  * config (tolerance=-1 for the unrolled DuckDB oracle) runs all 40.
-  * Same-JVM per-superstep cost is unchanged (551 ms r1-config vs 454 ms
-  * r2-config steady). "subquery" stays the default: zero driver round-trips
-  * per superstep is the shape that survives a 1000-executor cluster.
+  * The dangling-mass scalar is folded into the superstep plan as a
+  * broadcast 1-row relation: no driver round-trip per superstep, the shape
+  * that survives a 1000-executor cluster. (An inlined-literal variant, one
+  * `head()` per superstep, measured within this VM's noise of it:
+  * BASELINE.md "The q_pagerank 2x regression explained".)
   */
 object PageRank {
 
@@ -45,20 +36,17 @@ object PageRank {
 
   def runWithMetrics(edges: DataFrame, vertices: DataFrame,
       iterations: Int = 100, damping: Double = 0.85,
-      tolerance: Double = 1e-6, quantize: Double = 0.0,
-      lineageCutEvery: Int = 1, leakPlan: String = "subquery"): IterativeEngine.Result =
+      tolerance: Double = 1e-6, quantize: Double = 0.0): IterativeEngine.Result =
     // forLoop scope covers the adjacency persist too: a cached plan
     // compiled under AQE reports opaque output partitioning, defeating the
     // loop's co-partitioned join (IterTuning.forLoop scaladoc)
     graft.kernels.IterTuning.forLoop(edges.sparkSession) {
-      runInner(edges, vertices, iterations, damping, tolerance, quantize,
-        lineageCutEvery, leakPlan)
+      runInner(edges, vertices, iterations, damping, tolerance, quantize)
     }
 
   private def runInner(edges: DataFrame, vertices: DataFrame,
       iterations: Int, damping: Double,
-      tolerance: Double, quantize: Double,
-      lineageCutEvery: Int, leakPlan: String): IterativeEngine.Result = {
+      tolerance: Double, quantize: Double): IterativeEngine.Result = {
     val spark = edges.sparkSession
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // the teleport base re-reads `vertices` EVERY superstep — persist the
@@ -119,19 +107,9 @@ object PageRank {
     def superstep(state: DataFrame, i: Int): DataFrame = {
       val leakAgg = state.join(dangling, state("node") === dangling("id"), "left_semi")
         .agg(leakSum)
-      val base =
-        if (leakPlan == "literal") {
-          // state is a materialized localCheckpoint/persist — a cheap scan
-          // of cached blocks; keeps the main plan free of subquery/crossJoin
-          // nodes at the cost of a driver sync (see Scaladoc: within noise)
-          val leak = leakAgg.head().getDouble(0)
-          verts.select(col("id").as("node"),
-            lit((1.0 - damping) / n + damping / n * leak).as("score"))
-        } else {
-          verts.crossJoin(broadcast(leakAgg))
-            .select(col("id").as("node"),
-              (lit((1.0 - damping) / n) + lit(damping / n) * col("leak")).as("score"))
-        }
+      val base = verts.crossJoin(broadcast(leakAgg))
+        .select(col("id").as("node"),
+          (lit((1.0 - damping) / n) + lit(damping / n) * col("leak")).as("score"))
       val contribs = state.join(adj.hint("shuffle_hash"), state("node") === adj("src"))
         .select(col("dst").as("node"), (col("score") * col("factor")).as("score"))
       base.union(contribs)
@@ -140,8 +118,7 @@ object PageRank {
         .select(lit(0L).as("seed"), col("node"), col("score"))
     }
 
-    val res = IterativeEngine.run(init, superstep, iterations, tolerance,
-      lineageCutEvery = lineageCutEvery)
+    val res = IterativeEngine.run(init, superstep, iterations, tolerance)
     adj.unpersist(); dangling.unpersist(); release()
     res
   }

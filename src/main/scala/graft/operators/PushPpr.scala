@@ -50,10 +50,9 @@ object PushPpr {
       iterations: Int = 100,
       damping: Double = 0.85,
       tolerance: Double = -1,
-      quantize: Double = 0.0,
-      lineageCutEvery: Int = 1): IterativeEngine.Result =
+      quantize: Double = 0.0): IterativeEngine.Result =
     graft.kernels.IterTuning.withoutRuntimeFilters(edges.sparkSession) {
-      runInner(edges, seeds, rmax, iterations, damping, tolerance, quantize, lineageCutEvery)
+      runInner(edges, seeds, rmax, iterations, damping, tolerance, quantize)
     }
 
   private def runInner(
@@ -63,8 +62,7 @@ object PushPpr {
       iterations: Int,
       damping: Double,
       tolerance: Double,
-      quantize: Double,
-      lineageCutEvery: Int): IterativeEngine.Result = {
+      quantize: Double): IterativeEngine.Result = {
     require(rmax > 0, "rmax must be > 0")
     require(iterations > 0, "iterations must be > 0")
     require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
@@ -126,8 +124,7 @@ object PushPpr {
         .where(col("score") =!= 0 || col("residual") =!= 0)
     }
 
-    val res = IterativeEngine.run(init, superstep, iterations, tolerance,
-      lineageCutEvery = lineageCutEvery)
+    val res = IterativeEngine.run(init, superstep, iterations, tolerance)
     adj.unpersist(); degs.unpersist()
     res
   }

@@ -42,8 +42,8 @@ object StatsBarrier {
     * LogicalRDD reports UNKNOWN partitioning, so downstream joins on the
     * old key re-shuffle. Use the barrier only in loops whose join keys
     * change round to round anyway (SCC refinement, star contraction) — NOT
-    * in the iterative engine's persist-chain mode, which exists precisely
-    * to reuse the state's partitioning. */
+    * in the iterative engine's superstep loop, which reuses the state's
+    * partitioning. */
   def statsBarrier(df: DataFrame): DataFrame = {
     // the "apply only after localCheckpoint" usage rule, enforced: on a
     // non-materialized frame, toRdd would hand back the UNexecuted physical

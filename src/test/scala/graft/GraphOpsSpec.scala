@@ -108,22 +108,41 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
     vs.unpersist()
   }
 
-  test("pagerank: literal and subquery leak plans are bit-identical (quantized and not)") {
+  test("pagerank: matches a local power iteration with uniform dangling redistribution (quantized and not)") {
     val es = randomGraph(40, 70, seed = 7) ++ Seq((38L, 39L)) // ensure some dangling targets
-    val vids = (0L until 42L)
-    def run(plan: String, q: Double) =
+    val vids = (0L until 42L) // 40, 41: isolated, dangling
+    val d = 0.85
+    def run(q: Double) =
       PageRank.runWithMetrics(edgesDf(es), verticesDf(vids), iterations = 12,
-        tolerance = -1, quantize = q, leakPlan = plan)
-        .state.collect().map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    // fixed-point mode: addend order can't matter -> exact bit compare
-    assert(run("literal", 1e12).sameElements(run("subquery", 1e12)))
-    // q=0: per-node double sums depend on shuffle-fetch addend order, which
-    // Spark does not guarantee across the two plan shapes — compare within
-    // a few ulps instead of exactly (ADVICE r3)
-    val (a, b) = (run("literal", 0.0), run("subquery", 0.0))
-    assert(a.length == b.length)
-    a.zip(b).foreach { case ((n1, s1), (n2, s2)) =>
-      assert(n1 == n2 && math.abs(s1 - s2) <= 1e-12 * math.max(1.0, math.abs(s1)))
+        tolerance = -1, quantize = q)
+        .state.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    // the engine's arithmetic in plain Scala: every addend of a node's sum
+    // (and of the leak) rounds onto the 1/q grid when q > 0
+    def grid(x: Double): Long = {
+      val a = math.abs(x); val fl = math.floor(a)
+      (math.signum(x) * (fl + (if (a - fl >= 0.5) 1.0 else 0.0))).toLong
+    }
+    def sumOf(xs: Seq[Double], q: Double): Double =
+      if (q > 0) xs.map(x => grid(x * q)).sum / q else xs.sum
+    def local(q: Double): Map[Long, Double] = {
+      val n = vids.size
+      val outdeg = es.groupBy(_._1).map { case (u, out) => u -> out.size }
+      val dangling = vids.filterNot(outdeg.contains)
+      val in = es.groupBy(_._2)
+      var pr = vids.map(_ -> 1.0 / n).toMap
+      for (_ <- 1 to 12) {
+        val base = (1.0 - d) / n + d / n * sumOf(dangling.map(pr), q)
+        pr = vids.map(v => v -> sumOf(base +: in.getOrElse(v, Nil).map { case (u, _) =>
+          pr(u) * (d / outdeg(u)) }, q)).toMap
+      }
+      pr
+    }
+    for (q <- Seq(1e12, 0.0)) {
+      val (got, want) = (run(q), local(q))
+      assert(got.keySet == want.keySet, s"q=$q")
+      assert(math.abs(got.values.sum - 1.0) < 1e-9, s"q=$q: mass ${got.values.sum}")
+      for (v <- vids)
+        assert(math.abs(got(v) - want(v)) <= 1e-12, s"q=$q node $v: ${got(v)} vs ${want(v)}")
     }
   }
 

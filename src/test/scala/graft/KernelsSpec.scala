@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.kernels.{Grid, Metrics, TopK}
-import graft.model.NodeScore
 
 /** Kernel laws from the reference's unit suites (SURVEY.md §5 tier 1). */
 class KernelsSpec extends AnyFunSuite with GraphFixtures {
@@ -14,6 +13,10 @@ class KernelsSpec extends AnyFunSuite with GraphFixtures {
     import s.implicits._
     rows.toDF("seed", "node", "score")
   }
+
+  /** Local reference law: top L of (node, score) by score desc, node asc. */
+  private def cut(entries: Seq[(Long, Double)], l: Int): Map[Long, Double] =
+    entries.sortBy { case (node, score) => (-score, node) }.take(math.max(l, 0)).toMap
 
   // ---- keepTop laws (test/internal/keepTopTest.cc) ----------------------
   test("topL: L=0 empties the basket") {
@@ -29,28 +32,26 @@ class KernelsSpec extends AnyFunSuite with GraphFixtures {
 
   test("topL: exact cut with deterministic ties (score desc, node asc)") {
     val rows = Seq((1L, 10L, 3.0), (1L, 11L, 1.0), (1L, 12L, 3.0), (1L, 13L, 2.0))
-    for (fused <- Seq("fused", "bounded", "window")) {
-      val got = baskets(TopK.pruneTopL(stateDf(rows), 2, fused))
-      assert(got(1L) == Map(10L -> 3.0, 12L -> 3.0), s"fused=$fused")
-      val got3 = baskets(TopK.pruneTopL(stateDf(rows), 3, fused))
-      assert(got3(1L) == Map(10L -> 3.0, 12L -> 3.0, 13L -> 2.0), s"fused=$fused")
-    }
+    val got = baskets(TopK.pruneTopL(stateDf(rows), 2))
+    assert(got(1L) == Map(10L -> 3.0, 12L -> 3.0))
+    val got3 = baskets(TopK.pruneTopL(stateDf(rows), 3))
+    assert(got3(1L) == Map(10L -> 3.0, 12L -> 3.0, 13L -> 2.0))
   }
 
-  test("topL: duplicate nodes are summed before the cut (fused mode)") {
+  test("topL: duplicate nodes are summed before the cut (window path)") {
     val rows = Seq((1L, 10L, 1.0), (1L, 10L, 1.0), (1L, 11L, 1.5))
-    val got = baskets(TopK.pruneTopL(stateDf(rows), 1, "fused"))
+    val got = baskets(TopK.pruneTopL(stateDf(rows), 1))
     assert(got(1L) == Map(10L -> 2.0))
+    // the aligned superstep shape sums the same way
+    assert(baskets(TopK.pruneTopLAligned(stateDf(rows), 1, 3))(1L) == Map(10L -> 2.0))
   }
 
   test("topL: randomized cut matches local reference law on 500 keys") {
     val rnd = new scala.util.Random(7)
     val rows = (0 until 500).map(i => (1L, i.toLong, rnd.nextInt(100).toDouble))
-    for (fused <- Seq("fused", "bounded", "window"); l <- Seq(1, 50, 499, 500)) {
-      val got = baskets(TopK.pruneTopL(stateDf(rows), l, fused))(1L)
-      val want = TopK.cut(rows.map(r => NodeScore(r._2, r._3)), l)
-        .map(ns => ns.node -> ns.score).toMap
-      assert(got == want, s"fused=$fused L=$l")
+    for (l <- Seq(1, 50, 499, 500)) {
+      val got = baskets(TopK.pruneTopL(stateDf(rows), l))(1L)
+      assert(got == cut(rows.map(r => (r._2, r._3)), l), s"L=$l")
     }
   }
 

@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The engine layers take their behaviour from arguments and the session
+  * conf, not from the process environment: a measured decision keeps its
+  * winner and loses its switch. */
+class KnobsSpec extends AnyFunSuite {
+
+  private val layers = Seq("kernels", "operators", "functions", "model", "sources", "streaming")
+  // diagnostic hooks, not behaviour switches
+  private val allowed = Seq("SPARK_GRAFT_ITER_DEBUG", "SPARK_GRAFT_EXPLAIN_DIR")
+  private val read = """sys\.(props|env)|System\.(getenv|getProperty)""".r
+
+  test("engine layers read no env var or system property but the two diagnostic hooks") {
+    val files = layers.flatMap { l =>
+      val dir = Paths.get("src/main/scala/graft", l)
+      assert(Files.isDirectory(dir), s"missing source dir $dir")
+      Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }
+    assert(files.nonEmpty)
+    val offending = for {
+      f: Path <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if read.findFirstIn(line).isDefined && !allowed.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n"))
+  }
+}

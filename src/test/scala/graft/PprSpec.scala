@@ -81,15 +81,14 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     assertAllClose(g, o, 1e-6)
   }
 
-  test("grank: fused and bounded top-L strategies agree exactly; salting is a no-op semantically") {
+  test("grank: salting is a no-op semantically (window path, bit-identical at quantize 1e12)") {
     val es = edgesDf(randomGraph(15, 60, seed = 9)); val vs = verticesDf(0L until 15L)
-    val a = baskets(GRank.run(es, vs, PprConfig(4, 8, 12, tolerance = -1, topLStrategy = "fused")))
-    val b = baskets(GRank.run(es, vs, PprConfig(4, 8, 12, tolerance = -1, topLStrategy = "bounded")))
-    val c = baskets(GRank.run(es, vs, PprConfig(4, 8, 12, tolerance = -1, saltThreshold = 2, saltBuckets = 4)))
-    val d = baskets(GRank.run(es, vs, PprConfig(4, 8, 12, tolerance = -1, topLStrategy = "window")))
-    assertAllClose(a, b, 1e-12)
-    assertAllClose(a, c, 1e-12)
-    assertAllClose(a, d, 1e-12)
+    def run(salt: Int, q: Double) = baskets(GRank.run(es, vs,
+      PprConfig(4, 8, 12, tolerance = -1, saltThreshold = salt, saltBuckets = 4, quantize = q)))
+    // grid sums are addend-order-free: the salted plan's different
+    // shuffle order cannot move a bit
+    assert(run(0, 1e12) == run(2, 1e12))
+    assertAllClose(run(0, 0.0), run(2, 0.0), 1e-12)
   }
 
   test("grank: auto salt threshold reproduces the HubBench win/loss table and is semantics-neutral") {
@@ -123,6 +122,9 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     assertThrows[IllegalArgumentException](PprConfig(2, 1, 1))
     assertThrows[IllegalArgumentException](PprConfig(1, 1, 0))
     assertThrows[IllegalArgumentException](PprConfig(1, 1, 1, damping = 1.5))
+    // one top-L shape: the retired strategy names are rejected, not ignored
+    assertThrows[IllegalArgumentException](PprConfig(1, 1, 1, topLStrategy = "fused"))
+    assertThrows[IllegalArgumentException](PprConfig(1, 1, 1, topLStrategy = "bounded"))
   }
 
   // ---- Monte-Carlo scale contracts (mccompletepathv2Test.cc) -------------
@@ -233,6 +235,40 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val resumed = baskets(MonteCarloPpr.run(es, vs, cfg, maxSteps = 24,
       walkerBudget = 60, walkMode = "join", checkpoint = Some(mgr), resume = true))
     assertAllClose(straight, resumed, 0.0) // absolute-walkId draws: bit-identical
+  }
+
+  test("mc weighted pick: scalar and Column picks equal a linear scan at every interval edge (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    val s = spark
+    import s.implicits._
+    // strictly increasing positive prefix sums; lengths on both sides of
+    // the Column pick's 64-entry linear/binary-search cut
+    val genCws: Gen[Array[Long]] = for {
+      n <- Gen.frequency(3 -> Gen.choose(1, 200), 1 -> Gen.choose(60, 70))
+      w <- Gen.listOfN(n, Gen.frequency(4 -> Gen.choose(1L, 5L),
+        4 -> Gen.choose(1L, 1000L), 1 -> Gen.choose(1L, 1000000000L)))
+    } yield w.scanLeft(0L)(_ + _).tail.toArray
+    // reference: 0-based index of the interval [cws(i-1), cws(i)) holding r
+    def linear(cws: Array[Long], r: Long): Int = cws.count(_ <= r)
+    def draws(cws: Array[Long]): Seq[Long] = {
+      val totw = cws.last
+      (cws.toSeq.flatMap(c => Seq(c - 1, c)) ++ Seq(0L, totw - 1)).filter(r => r >= 0 && r < totw).distinct
+    }
+    val prop = Prop.forAll(Gen.listOfN(8, genCws)) { arrays =>
+      val cases = arrays.flatMap(cws => draws(cws).map(r => (cws, r)))
+      val scalarBad = cases.filter { case (cws, r) => MonteCarloPpr.weightedPick(cws, r) != linear(cws, r) }
+      // step 1 draws r = pmod(walkId, totw): walkId = r selects r directly
+      val columnBad = cases.map { case (cws, r) => (r, cws.toSeq, cws.last, linear(cws, r) + 1) }
+        .toDF("walkId", "cws", "totw", "want").repartition(2)
+        .select(col("walkId"), col("want"),
+          MonteCarloPpr.pickIdx(1, 42L, weighted = true).as("got"))
+        .where(col("got") =!= col("want")).collect()
+      (scalarBad.isEmpty :| s"scalar: ${scalarBad.take(3).map(c => (c._1.length, c._2)).mkString(", ")}") &&
+        (columnBad.isEmpty :| s"column: ${columnBad.take(3).mkString(", ")}")
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("mc weighted: local and join engines bit-identical; unit weights reduce to unweighted") {

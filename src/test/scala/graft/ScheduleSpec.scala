@@ -50,7 +50,7 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
       .repartition(4, col("dst")).persist()
     adj.count()
     val teleport = vs.select(col("id").as("seed"), col("id").as("node"), lit(0.15).as("score"))
-    // a state that carries hash(seed) partitioning in its plan (persist-chain shape)
+    // a state that carries hash(seed) partitioning in its plan (a persisted prune)
     val state = TopK.pruneTopLAligned(
       teleport.union(e.join(outdeg, "src").select(col("src").as("seed"),
         col("dst").as("node"), (lit(0.85) / col("outdeg")).as("score"))), 10, 4)
@@ -72,8 +72,9 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
 
   test("superstep from a localCheckpoint'ed state plans with ONE exchange (depth-1 lineage path)") {
     // Spark 4's LogicalRDD checkpoint PRESERVES hash output partitioning —
-    // the engine relies on this (lineageCutEvery = 1 default): constant-depth
-    // plans per iteration with no state-side re-shuffle in the gather join.
+    // the iterative engine relies on this (it cuts lineage every superstep):
+    // constant-depth plans per iteration with no state-side re-shuffle in
+    // the gather join.
     val e = edgesDf(randomGraph(30, 150, seed = 32)); val vs = verticesDf(0L until 30L)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val adj = e.join(outdeg, "src")
@@ -143,6 +144,28 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     // ride it as observed metrics), and the final mapping's collect
     assert(jobs.size == 1 + rounds + 1, s"clusters, $rounds rounds: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
     pairs.unpersist(); docs.unpersist()
+  }
+
+  test("job-count gate: simhash near-dup materializes its signatures with one job (AQE on)") {
+    // one-shot queries run with AQE on (Verify, Bench); there a persisted
+    // frame that no action has filled is filled by one cache-stage job per
+    // scan, and the candidate self-join scans the signatures twice
+    val docs = graft.sources.Synth.documents(spark, 300)
+      .union(graft.sources.Synth.documents(spark, 40).select(
+        (col("doc_id") + 1000L).as("doc_id"), col("text"), col("source"))) // 40 exact copies
+      .persist()
+    docs.count()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val (pairs, jobs) = try JobCounter.jobs(spark.sparkContext) {
+      Dedup.simhashNearDup(docs, "doc_id", "text").collect()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(pairs.count(r => r.getLong(1) == r.getLong(0) + 1000L && r.getInt(2) == 0) == 40)
+    // the signature checkpoint, the candidate plan's two broadcast
+    // exchanges, the result checkpoint and the collect (an unfilled
+    // persist of the signatures took one more: a fill per join side)
+    assert(jobs.size == 5, s"simhashNearDup: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    docs.unpersist()
   }
 
   test("grank result is invariant across shuffle-partition counts (grankMulti contract M4)") {

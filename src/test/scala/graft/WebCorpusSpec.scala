@@ -104,11 +104,11 @@ class WebCorpusSpec extends AnyFunSuite with GraphFixtures {
       && manifest.contains("\"wallMs\""))
   }
 
-  test("checkpoint/resume holds under the Bench/ScalingRun config (window strategy, salting, lineage cuts)") {
+  test("checkpoint/resume holds under the Bench/ScalingRun config (window strategy, salting)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-bench").toString
     val es = edgesDf(randomGraph(25, 150, seed = 11)); val vs = verticesDf(0L until 25L)
     def cfg(iters: Int, sub: String) = PprConfig(5, 10, iters, tolerance = -1,
-      topLStrategy = "window", saltThreshold = 3, saltBuckets = 4, lineageCutEvery = 8,
+      topLStrategy = "window", saltThreshold = 3, saltBuckets = 4,
       checkpointEvery = 2, checkpointDir = Some(s"$dir/$sub"))
     val full = baskets(GRank.run(es, vs, cfg(6, "full")))
     GRank.run(es, vs, cfg(4, "resume")).count() // "crash" at 4 (snapshots at 2, 4)
