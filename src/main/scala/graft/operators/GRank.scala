@@ -25,7 +25,12 @@ import graft.sources.EdgeSource
   *
   * Scale machinery (no reference analog — physical execution, SURVEY.md §4):
   *  - adjacency is shuffled ONCE (hash-partitioned by `dst`, the join key)
-  *    and persisted; every superstep's join reuses that partitioning.
+  *    and cut to a lazy `localCheckpoint`; every superstep's join reuses
+  *    that partitioning. The loop inputs (adjacency, teleport, schedule
+  *    halves) are all checkpoint leaves, never `persist()`ed plans: a
+  *    persisted input carries the caller's whole lineage into every
+  *    superstep as an InMemoryRelation child (84 planned operators against
+  *    16 on three LogicalRDD leaves, BASELINE.md "ppr_topk on leaf plans").
   *  - explicit skew handling: gather-join keys whose in-degree exceeds
   *    `cfg.saltThreshold` are split into `cfg.saltBuckets` salted copies
   *    (adjacency side salted by hash(src); the <=L state rows of hub seeds
@@ -124,39 +129,41 @@ object GRank {
     } else {
       adjBase.withColumn("salt", lit(0))
         .repartition(shufflePartitions, col("dst"))
-    }).persist()
+    }).localCheckpoint(eager = false) // filled by the init job, which reads every partition
     val hubSeeds =
-      if (salted) hubIds.toSeq.toDF("hub").persist()
+      if (salted) hubIds.toSeq.toDF("hub") // a local relation: already a leaf
       else null
 
     val teleport = vertices
       .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - cfg.damping).as("score"))
-      .persist()
+      .localCheckpoint(eager = false)
 
     // G5 partitioned schedule: 2-coloring + per-color adjacency/teleport
-    // halves (computed once). adjacency filtered by SOURCE color: only
+    // halves, computed once; each is a checkpoint leaf, filled by the first
+    // job that reads it. adjacency filtered by SOURCE color: only
     // active-color seeds gather in an active iteration.
     val colors =
       if (cfg.partitionedSchedule)
-        Components.twoColoring(edges, vertices).persist()
+        Components.twoColoring(edges, vertices).localCheckpoint(eager = false)
       else null
     def colorHalf(df: DataFrame, keyCol: String, c: Int): DataFrame =
       df.join(colors.where(col("color") === c).select(col("id").as("__cid")),
         col(keyCol) === col("__cid"), "left_semi")
     val adjHalves =
       if (cfg.partitionedSchedule)
-        Array(colorHalf(adj, "src", 0).persist(), colorHalf(adj, "src", 1).persist())
+        Array(0, 1).map(c => colorHalf(adj, "src", c).localCheckpoint(eager = false))
       else null
     val teleportHalves =
       if (cfg.partitionedSchedule)
-        Array(colorHalf(teleport, "seed", 0).persist(), colorHalf(teleport, "seed", 1).persist())
+        Array(0, 1).map(c => colorHalf(teleport, "seed", c).localCheckpoint(eager = false))
       else null
 
     // G2 state init: self teleport + one-hop scatter (the same per-edge
     // factor as the gather adjacency — weighted or uniform), pruned to L
     // (include/grank.h:64-83; += on duplicates handles self-loops). Scatters
-    // from the persisted `adj`, whose factors are already computed: from
-    // adjBase, the norm aggregate and its broadcast would run again
+    // from the checkpointed `adj`, whose factors are already computed: from
+    // adjBase, the norm aggregate and its broadcast would run again. Its job
+    // reads every partition of `adj` and `teleport`, which fills both
     val init = TopK.pruneTopL(
       teleport.union(
         adj.select(col("src").as("seed"), col("dst").as("node"),
@@ -219,12 +226,9 @@ object GRank {
     val finalState = TopK.topKWindow(
       res.state.select(col("seed"), col("node"), col("score")), cfg.K) // G6, grank.h:143-147
       .localCheckpoint(true)
-    adj.unpersist(); teleport.unpersist()
-    if (hubSeeds != null) hubSeeds.unpersist()
-    if (colors != null) {
-      colors.unpersist()
-      adjHalves.foreach(_.unpersist()); teleportHalves.foreach(_.unpersist())
-    }
+    (Seq(adj, teleport) ++ Seq(colors).filter(_ != null) ++
+      Option(adjHalves).toSeq.flatten ++ Option(teleportHalves).toSeq.flatten)
+      .foreach(IterativeEngine.freeCheckpointBlocks)
     IterativeEngine.Result(finalState, res.history)
   }
 }

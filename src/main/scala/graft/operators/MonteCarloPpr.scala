@@ -47,18 +47,23 @@ import graft.model.PprConfig
   * Scale design — TWO walk engines behind one draw function (`walkMode`):
   *
   *  - "local" (auto-chosen when the adjacency fits `broadcastEdgeLimit`):
-  *    the whole multi-step walk runs INSIDE one mapPartitions pass over the
-  *    vertex ids against a broadcast adjacency map — the Spark analog
-  *    of the reference's lazy per-node walkNode
-  *    (include/mccompletepathv2.h:230-241). ONE job for the entire walk
-  *    phase, zero walker rows materialized, no shuffle after it; an
-  *    origin's walks never leave its task, so each task emits finished
-  *    walk baskets — self-visits folded in, cut to L — and no (seed, node)
-  *    sum or top-L prune job follows. This is the genuine per-partition
-  *    imperative case where mapPartitions beats the declarative form: ~64
-  *    sequential join stages collapse into one stage, which also removes
-  *    the per-stage scheduling latency that dominated the join path's wall
-  *    at bench scale (~2.5x measured).
+  *    the whole multi-step walk AND the combine's scatter run INSIDE one
+  *    mapPartitions pass over the vertex ids against two broadcast maps
+  *    built from the one adjacency collect: the forward adjacency the walk
+  *    draws from and the reverse adjacency (each node's predecessors, one
+  *    entry per edge, with the combine factor of that edge). Both fall
+  *    under the same `broadcastEdgeLimit`: the reverse map holds one entry
+  *    per edge, as the forward one does. This is the Spark analog of the
+  *    reference's lazy per-node walkNode (include/mccompletepathv2.h:230-241):
+  *    an origin's walks never leave its task, so the task holds origin t's
+  *    complete visit counts, cuts its basket to L (self-visits folded in),
+  *    and emits the combine rows itself — t's self row and, for every
+  *    predecessor s, basket(t) keyed by s. ONE shuffle by seed then runs
+  *    the whole of phase 2 ([[localEngine]]). One job for walk plus
+  *    combine, zero walker rows materialized; ~64 sequential join stages
+  *    collapse into one stage, which removed the per-stage scheduling
+  *    latency that dominated the join path's wall at bench scale (~2.5x
+  *    measured).
   *  - "join" (auto-chosen above the broadcast limit — the 100-TB path):
   *    per `stepBatch` steps, chain join+project steps lazily with a
   *    per-step persist, then ONE action; visit counts fold into a bounded
@@ -67,7 +72,8 @@ import graft.model.PprConfig
   *    of <= walkerBudget/|origins| ids walked chunk-by-chunk — peak
   *    in-flight rows <= walkerBudget instead of |V|*floor(R*d) (at R=1000
   *    that is 850 rows PER VERTEX). Its visit counts sum per (seed, node)
-  *    in one shuffle and cut to L with the window rank.
+  *    in one shuffle and cut to L with the window rank; phase 2 is the
+  *    join-based [[combine]].
   *
   * Every draw is a pure function of (seed, ABSOLUTE walkId, step) through
   * the same mix31 mixer, so local, join, chunked and unchunked runs are all
@@ -214,7 +220,9 @@ object MonteCarloPpr {
     require(damping > 0 && damping <= 1, "damping must be in (0, 1]")
     val weighted = edges.columns.contains("weight")
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
-      val adjList = buildAdj(edges, weighted, dedup = true).persist()
+      // a lazy checkpoint leaf, filled by the first walker join: each step
+      // plans against it instead of an InMemoryRelation over the edge lineage
+      val adjList = buildAdj(edges, weighted, dedup = true).localCheckpoint(eager = false)
       var walkers = vertices.join(adjList, vertices("id") === adjList("src"))
         .select(col("id").as("seed"),
           explode(sequence(lit(0L), lit(walksPerNode - 1L))).as("walkId"),
@@ -241,7 +249,7 @@ object MonteCarloPpr {
         alive = walkers.count()
         step += 1
       }
-      adjList.unpersist()
+      IterativeEngine.freeCheckpointBlocks(adjList)
       traces.reduce(_ union _)
     }
   }
@@ -287,23 +295,8 @@ object MonteCarloPpr {
     val spark = edges.sparkSession
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-    // The walk is a traversal: every step joins walkers (keyed by the NEW
-    // position) against the adjacency, so the walker side must re-exchange
-    // each step — but the adjacency side must not. Below the broadcast
-    // limit the whole walk chain becomes broadcast-hash joins (a step batch
-    // is ONE narrow stage — the per-step shuffle latency was the dominant
-    // cost at small scale); above it, the adjacency is hash-partitioned by
-    // src once and reused every step.
     val weighted = edges.columns.contains("weight")
-    // the weighted (src,dst,w) aggregation is shared by the adjacency AND
-    // the combine-phase edge factor — persisted so it runs once, not twice
-    val ewOpt = if (weighted) Some(weightedEw(edges).persist()) else None
-    val adjBase = ewOpt.map(buildWeightedAdj)
-      .getOrElse(buildAdj(edges, weighted = false, dedup = false))
     val smallAdj = edges.count() <= broadcastEdgeLimit
-    val adjPersisted =
-      (if (smallAdj) adjBase else adjBase.repartition(shufflePartitions, col("src"))).persist()
-    val adjList = if (smallAdj) broadcast(adjPersisted) else adjPersisted
     // one basket per vertex id; the hash(id) exchange also spreads the
     // local engine's origins over the full task width
     val verts = vertices.select(col("id")).distinct()
@@ -323,12 +316,28 @@ object MonteCarloPpr {
       case _       => smallAdj // "auto": local walk iff the adjacency broadcasts
     }
 
-    if (useLocalWalk) {
-      val (walkBaskets, nOrigins) =
-        localWalk(verts, adjPersisted, cfg.L, r, effective, d, salt, maxSteps, weighted)
-      return combine(edges, verts, adjList, adjPersisted, cfg, walkBaskets,
-        McWalkStats(0L, 0, nOrigins, nOrigins * effective), ewOpt)
-    }
+    if (useLocalWalk)
+      return localEngine(verts, buildAdj(edges, weighted, dedup = false), cfg,
+        effective, salt, maxSteps, weighted)
+
+    // The walk is a traversal: every step joins walkers (keyed by the NEW
+    // position) against the adjacency, so the walker side must re-exchange
+    // each step — but the adjacency side must not. Below the broadcast
+    // limit the whole walk chain becomes broadcast-hash joins (a step batch
+    // is ONE narrow stage — the per-step shuffle latency was the dominant
+    // cost at small scale); above it, the adjacency is hash-partitioned by
+    // src once and reused every step. Either way it is a lazy checkpoint
+    // leaf, filled by the `walkOrigins` count, so no step plan carries the
+    // edge lineage.
+    // the weighted (src,dst,w) aggregation is shared by the adjacency AND
+    // the combine-phase edge factor — persisted so it runs once, not twice
+    val ewOpt = if (weighted) Some(weightedEw(edges).persist()) else None
+    val adjBase = ewOpt.map(buildWeightedAdj)
+      .getOrElse(buildAdj(edges, weighted = false, dedup = false))
+    val adjPersisted =
+      (if (smallAdj) adjBase else adjBase.repartition(shufflePartitions, col("src")))
+        .localCheckpoint(eager = false)
+    val adjList = if (smallAdj) broadcast(adjPersisted) else adjPersisted
 
     // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
     // one shape the single-machine reference never faces (its walkNode is
@@ -479,42 +488,72 @@ object MonteCarloPpr {
       McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective), ewOpt)
   }
 
-  /** The whole walk phase as ONE mapPartitions pass over the vertex ids
-    * against a broadcast adjacency map — same draws (mix31Scala is the
-    * Column mixer's scalar twin), same per-step semantics as [[oneStep]]:
-    * step 1 always traverses with round-robin pick walkId mod outdeg; later
-    * steps survive iff mix/P <= d and pick (walkId + mix) mod outdeg; a
-    * walk dies at a node with no successors.
+  /** The local engine: walk and combine in ONE job over the vertex ids.
     *
-    * An origin's walks all run in its task, so the task holds the origin's
-    * complete visit counts and emits its finished walk basket: the R
+    * Walk — same draws as [[oneStep]] (mix31Scala is the Column mixer's
+    * scalar twin): step 1 always traverses with round-robin pick walkId mod
+    * outdeg; later steps survive iff mix/P <= d and pick (walkId + mix) mod
+    * outdeg (weighted: the cumulative-weight interval); a walk dies at a
+    * node with no successors. Origin t's walks all run in its task, so the
+    * task holds t's complete visit counts and cuts its basket: the R
     * self-visits folded in (a vertex without successors never walks and
-    * gets {v: 1.0}), ranked by (visits desc, node asc) — the order of
-    * score = visits / R — and cut to L. No (seed, node) sum or top-L prune
-    * runs after it. Returns the (seed, node, score) baskets, materialized,
-    * and the number of walking origins. */
-  private def localWalk(verts: DataFrame, adjPersisted: DataFrame, l: Int, iterations: Int,
-      effective: Long, d: Double, salt: Long, maxSteps: Int,
-      weighted: Boolean): (DataFrame, Long) = {
+    * gets {t: 1.0}), ranked by (visits desc, node asc) — the order of
+    * score = visits / R — and cut to L.
+    *
+    * Scatter — the task then emits phase 2's input rows for t: the self
+    * row (t, t, 1/factor_t) and, per predecessor edge s -> t (duplicate
+    * edges repeat, self-loops included), the rows (s, node, score) for
+    * basket(t). The rows are exactly those [[combine]] builds from
+    * `edges ⋈ baskets` and the factor join, so one `repartition(seed)` does
+    * the grid sum, the L cut, the ×factor rescale and the K cut
+    * ([[scatteredCombine]]). Weighted input applies the per-edge factor d·w/Σw before
+    * the sum, as [[combine]] does. Returns the materialized result and the
+    * walk stats. */
+  private def localEngine(verts: DataFrame, adjBase: DataFrame, cfg: PprConfig,
+      effective: Long, salt: Long, maxSteps: Int,
+      weighted: Boolean): (DataFrame, McWalkStats) = {
+    import scala.collection.mutable.ArrayBuilder
     import graft.kernels.Mix.mix31Scala
     val spark = verts.sparkSession
     import spark.implicits._
+    val iterations = cfg.iterations
+    val d = cfg.damping
+    val l = cfg.L
     // weighted entries carry the cumulative-weight array next to the dsts
     // (null when unweighted) — the scalar twin of the Column-side pickIdx
     val adjRows =
-      (if (weighted) adjPersisted.select(col("src"), col("dsts"), col("cws"))
-       else adjPersisted.select(col("src"), col("dsts"))).collect()
+      (if (weighted) adjBase.select(col("src"), col("dsts"), col("cws"))
+       else adjBase.select(col("src"), col("dsts"))).collect()
     val amap = new java.util.HashMap[Long, (Array[Long], Array[Long])](adjRows.length * 2)
     adjRows.foreach(row => amap.put(row.getLong(0),
       (row.getSeq[Long](1).toArray, if (weighted) row.getSeq[Long](2).toArray else null)))
-    val bc = spark.sparkContext.broadcast(amap)
+    // reverse adjacency t -> (predecessors s, factor of edge s -> t), from
+    // the same rows: d/outdeg(s), or d·w(s,t)/Σ_out w(s) when weighted
+    // (w(s,t) = cws(i) - cws(i-1) and Σ_out w(s) = cws.last, both exact)
+    val acc = scala.collection.mutable.LongMap.empty[(ArrayBuilder.ofLong, ArrayBuilder.ofDouble)]
+    amap.forEach { (s, entry) =>
+      val (dsts, cws) = entry
+      for (i <- dsts.indices) {
+        val f =
+          if (cws == null) d / dsts.length
+          else d * (cws(i) - (if (i == 0) 0L else cws(i - 1))) / cws(cws.length - 1)
+        val (ps, fs) = acc.getOrElseUpdate(dsts(i), (new ArrayBuilder.ofLong, new ArrayBuilder.ofDouble))
+        ps += s; fs += f
+      }
+    }
+    val rev = new java.util.HashMap[Long, (Array[Long], Array[Double])](acc.size * 2)
+    acc.foreach { case (t, (ps, fs)) => rev.put(t, (ps.result(), fs.result())) }
+    val bcFwd = spark.sparkContext.broadcast(amap)
+    val bcRev = spark.sparkContext.broadcast(rev)
     val sSalt = survivalSalt(salt)
     val pSalt = pickSalt(salt)
     // a stat only: a re-run task would count its origins twice
     val walking = spark.sparkContext.longAccumulator
-    val baskets = verts.as[Long].mapPartitions { ids =>
-      val adj = bc.value
-      ids.flatMap { seed =>
+
+    // origin `seed`'s walk basket, cut to L: (node, score) by score desc (a
+    // function value, not a local def: that would capture this object)
+    val basket: (java.util.HashMap[Long, (Array[Long], Array[Long])], Long) => Array[(Long, Double)] =
+      (adj, seed) => {
         val mine = scala.collection.mutable.LongMap.empty[Long]
         mine(seed) = iterations.toLong // origin counted R times (:124, :162-163)
         val origin = adj.get(seed) // null: dangling, never walks
@@ -545,25 +584,79 @@ object MonteCarloPpr {
         }
         mine.toArray
           .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
-          .iterator.take(l)
-          .map { case (node, n) => (seed, node, n.toDouble / iterations) }
+          .take(l)
+          .map { case (node, n) => (node, n.toDouble / iterations) }
+        }
+
+    // rows (seed, node, score, factor, own): `factor` is the seed's
+    // post-sum rescale (1.0 when weighted — scores arrive pre-scaled) and
+    // `own` marks the self row, which only a seed in `verts` emits
+    val rows = verts.as[Long].mapPartitions { ids =>
+      val adj = bcFwd.value
+      val preds = bcRev.value
+      ids.flatMap { t =>
+        val b = basket(adj, t)
+        val self =
+          if (weighted) (t, t, 1.0, 1.0, true)
+          else {
+            val e = adj.get(t)
+            val factor = if (e == null || e._1.length == 0) 1.0 else d / e._1.length
+            (t, t, 1.0 / factor, factor, true)
+          }
+        val in = preds.get(t)
+        val scattered =
+          if (in == null) Iterator.empty
+          else in._1.indices.iterator.flatMap { j =>
+            val (s, f) = (in._1(j), in._2(j))
+            if (weighted) b.iterator.map { case (node, sc) => (s, node, sc * f, 1.0, false) }
+            else b.iterator.map { case (node, sc) => (s, node, sc, f, false) }
+          }
+        Iterator.single(self) ++ scattered
       }
-    }.toDF("seed", "node", "score")
-    // materialize before the broadcast can be dropped by downstream actions
-    val out = baskets.localCheckpoint(true)
-    bc.unpersist(false)
-    (out, walking.value)
+    }.toDF("seed", "node", "score", "factor", "own")
+    // materialize before the broadcasts can be dropped
+    val result = scatteredCombine(rows, cfg).localCheckpoint(true)
+    bcFwd.unpersist(false)
+    bcRev.unpersist(false)
+    val nOrigins = walking.sum
+    (result, McWalkStats(0L, 0, nOrigins, nOrigins * effective))
   }
 
-  /** Phase 2, shared by both walk engines: the one gather superstep
-    * (:211-250) over the L-cut walk baskets.
+  /** The local engine's phase 2 over its scattered rows, on ONE
+    * `repartition(seed)`: the (seed, node) grid sum, the top-L rank, the
+    * ×factor rescale and the top-K rank all reuse that partitioning (the
+    * aligned prune shape of [[TopK.pruneTopLAligned]]). A seed outside
+    * `verts` has no self row and gets no basket. */
+  private def scatteredCombine(rows: DataFrame, cfg: PprConfig): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val partitions = rows.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val bySeed = Window.partitionBy("seed").orderBy(col("score").desc, col("node").asc)
+    val cut = rows.repartition(partitions, col("seed"))
+      .groupBy(col("seed"), col("node"))
+      .agg(TopK.sumScore(cfg.quantize), max(col("factor")).as("factor"), max(col("own")).as("own"))
+      .select(col("seed"), col("node"), col("score"), col("factor"),
+        row_number().over(bySeed).as("rn"),
+        max(col("own")).over(bySeed.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as("member"))
+      .where(col("member") && col("rn") <= cfg.L)
+      .select(col("seed"), col("node"), (col("score") * col("factor")).as("score"))
+    TopK.topKWindow(cut, cfg.K)
+  }
+
+  /** Phase 2 of the join engine: the one gather superstep (:211-250) over
+    * the L-cut walk baskets, as joins — `edges ⋈ baskets`, the per-seed
+    * factor join and the rescale join. It reads nothing but frames, so it
+    * runs above the broadcast limit; the local engine builds the same rows
+    * in its walk tasks instead ([[localEngine]]).
     *
     * Weighted combine: the per-node factor d/outdeg generalizes to the
     * PER-EDGE factor d·w(s,t)/Σ_out w(s), so scaling moves from after the
     * prune to inside the gather (for the unweighted case the two orders are
     * equivalent — the factor is a positive per-seed constant, so pre- and
     * post-scale top-L agree; per-edge factors force scale-then-prune). The
-    * self entry is exactly 1.0 either way (:124's origin-counts-itself). */
+    * self entry is exactly 1.0 either way (:124's origin-counts-itself).
+    * Both drop seeds outside `verts`: an edge whose source is not a vertex
+    * contributes to no basket. */
   private def combine(edges: DataFrame, verts: DataFrame,
       adjList: DataFrame, adjPersisted: DataFrame, cfg: PprConfig,
       walkBaskets: DataFrame, stats: McWalkStats,
@@ -588,7 +681,9 @@ object MonteCarloPpr {
         .select(col("src"), col("dst"), (lit(d) * col("w") / col("wsum")).as("efactor"))
       val selfRows = verts.select(col("id").as("seed"), col("id").as("node"),
         lit(1.0).as("score"))
-      val succRows = edgeFactor.join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
+      val succRows = edgeFactor
+        .join(verts, edgeFactor("src") === verts("id"), "left_semi")
+        .join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
         .select(edgeFactor("src").as("seed"), col("node"),
           (col("score") * col("efactor")).as("score"))
       combinePrune(selfRows.union(succRows))
@@ -608,7 +703,7 @@ object MonteCarloPpr {
 
     val result = TopK.topKWindow(combined, cfg.K).localCheckpoint(true)
     IterativeEngine.freeCheckpointBlocks(walkBaskets) // result materialized
-    adjPersisted.unpersist()
+    IterativeEngine.freeCheckpointBlocks(adjPersisted)
     ewOpt.foreach(_.unpersist())
     (result, stats)
   }

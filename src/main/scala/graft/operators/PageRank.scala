@@ -81,9 +81,11 @@ object PageRank {
     // state side keeps hash(node) partitioning across supersteps (the
     // groupBy(node) output partitioning survives Spark 4's localCheckpoint),
     // so the per-superstep gather join inserts NO exchange on either side.
-    // The SHUFFLE_HASH hint keeps the planner from broadcasting the
-    // adjacency (the |E|-sized side — re-serialized every superstep, and
-    // the side that can never broadcast at 100 TB).
+    // The SHUFFLE_HASH hint on the |V|-row state makes it the hash-table
+    // build side, as in Hits and GRank: the |E|-row adjacency streams, so a
+    // hub's many out-edges never sit in one task's hash table, and the
+    // planner cannot broadcast the adjacency (re-serialized every
+    // superstep, and the side that can never broadcast at 100 TB).
     val adj = pos.join(srcNorm, "src")
       .select(col("src"), col("dst"),
         (if (weighted) lit(damping) * col("weight") / col("norm")
@@ -110,7 +112,7 @@ object PageRank {
       val base = verts.crossJoin(broadcast(leakAgg))
         .select(col("id").as("node"),
           (lit((1.0 - damping) / n) + lit(damping / n) * col("leak")).as("score"))
-      val contribs = state.join(adj.hint("shuffle_hash"), state("node") === adj("src"))
+      val contribs = state.hint("shuffle_hash").join(adj, state("node") === adj("src"))
         .select(col("dst").as("node"), (col("score") * col("factor")).as("score"))
       base.union(contribs)
         .groupBy(col("node"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Hits, PageRank, Triangles}
 import graft.sources.EdgeSource
+import org.apache.spark.grafttest.SqlPlans
 
 class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
 
@@ -108,42 +109,74 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
     vs.unpersist()
   }
 
-  test("pagerank: matches a local power iteration with uniform dangling redistribution (quantized and not)") {
-    val es = randomGraph(40, 70, seed = 7) ++ Seq((38L, 39L)) // ensure some dangling targets
-    val vids = (0L until 42L) // 40, 41: isolated, dangling
-    val d = 0.85
-    def run(q: Double) =
-      PageRank.runWithMetrics(edgesDf(es), verticesDf(vids), iterations = 12,
-        tolerance = -1, quantize = q)
-        .state.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    // the engine's arithmetic in plain Scala: every addend of a node's sum
-    // (and of the leak) rounds onto the 1/q grid when q > 0
+  /** PageRank's arithmetic in plain Scala: uniform teleport, dangling mass
+    * redistributed uniformly; every addend of a node's sum (and of the
+    * leak) rounds onto the 1/q grid when q > 0. */
+  private def localPageRank(es: Seq[(Long, Long)], vids: Seq[Long], iterations: Int,
+      q: Double, d: Double = 0.85): Map[Long, Double] = {
     def grid(x: Double): Long = {
       val a = math.abs(x); val fl = math.floor(a)
       (math.signum(x) * (fl + (if (a - fl >= 0.5) 1.0 else 0.0))).toLong
     }
-    def sumOf(xs: Seq[Double], q: Double): Double =
+    def sumOf(xs: Seq[Double]): Double =
       if (q > 0) xs.map(x => grid(x * q)).sum / q else xs.sum
-    def local(q: Double): Map[Long, Double] = {
-      val n = vids.size
-      val outdeg = es.groupBy(_._1).map { case (u, out) => u -> out.size }
-      val dangling = vids.filterNot(outdeg.contains)
-      val in = es.groupBy(_._2)
-      var pr = vids.map(_ -> 1.0 / n).toMap
-      for (_ <- 1 to 12) {
-        val base = (1.0 - d) / n + d / n * sumOf(dangling.map(pr), q)
-        pr = vids.map(v => v -> sumOf(base +: in.getOrElse(v, Nil).map { case (u, _) =>
-          pr(u) * (d / outdeg(u)) }, q)).toMap
-      }
-      pr
+    val n = vids.size
+    val outdeg = es.groupBy(_._1).map { case (u, out) => u -> out.size }
+    val dangling = vids.filterNot(outdeg.contains)
+    val in = es.groupBy(_._2)
+    var pr = vids.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iterations) {
+      val base = (1.0 - d) / n + d / n * sumOf(dangling.map(pr))
+      pr = vids.map(v => v -> sumOf(base +: in.getOrElse(v, Nil).map { case (u, _) =>
+        pr(u) * (d / outdeg(u)) })).toMap
     }
+    pr
+  }
+
+  test("pagerank: matches a local power iteration with uniform dangling redistribution (quantized and not)") {
+    val es = randomGraph(40, 70, seed = 7) ++ Seq((38L, 39L)) // ensure some dangling targets
+    val vids = (0L until 42L) // 40, 41: isolated, dangling
+    def run(q: Double) =
+      PageRank.runWithMetrics(edgesDf(es), verticesDf(vids), iterations = 12,
+        tolerance = -1, quantize = q)
+        .state.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     for (q <- Seq(1e12, 0.0)) {
-      val (got, want) = (run(q), local(q))
+      val (got, want) = (run(q), localPageRank(es, vids, 12, q))
       assert(got.keySet == want.keySet, s"q=$q")
       assert(math.abs(got.values.sum - 1.0) < 1e-9, s"q=$q: mass ${got.values.sum}")
       for (v <- vids)
         assert(math.abs(got(v) - want(v)) <= 1e-12, s"q=$q node $v: ${got(v)} vs ${want(v)}")
     }
+  }
+
+  test("pagerank: the state side builds the gather hash table, no exchange under the join; planted hub exact") {
+    // hub 0 links to 300 leaves (its 300 adjacency rows stream past the
+    // hash table, which holds one state row per node); a random graph on
+    // 300..339 links back into the hub
+    val es = (1L to 300L).map(i => (0L, i)) ++ randomGraph(40, 90, seed = 17).map {
+      case (a, b) => (a + 300L, if (b % 7 == 0) 0L else b + 300L) }
+    val vids = (0L to 339L)
+    val (res, plans) = SqlPlans.capture(spark.sparkContext) {
+      PageRank.runWithMetrics(edgesDf(es), verticesDf(vids), iterations = 6,
+        tolerance = -1, quantize = 1e12).state.collect()
+    }
+    val steps = plans.filter(_.description.contains("Iterative.scala")).drop(1) // the init cut first
+    assert(steps.size == 6, plans.map(_.description).mkString(" | "))
+    for ((p, i) <- steps.zipWithIndex) {
+      val joins = p.nodes.filter(_.nodeName == "ShuffledHashJoin")
+      assert(joins.size == 1 && joins.head.simpleString.contains("BuildLeft") &&
+        joins.head.simpleString.contains("[node#"), s"build side:\n${p.plan}")
+      // down to the leaves: the state's checkpoint scan and the cached
+      // adjacency. The first superstep reads the unpartitioned init state;
+      // from then on the state is hash(node) partitioned
+      def exchanges(n: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+        if (n.nodeName.startsWith("InMemoryTableScan")) 0
+        else (if (n.nodeName.contains("Exchange")) 1 else 0) + n.children.map(exchanges).sum
+      assert(exchanges(joins.head) == (if (i == 0) 1 else 0), s"superstep $i, exchanges under the gather join:\n${p.plan}")
+    }
+    val got = res.map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    val want = localPageRank(es, vids, 6, 1e12)
+    for (v <- vids) assert(got(v) == want(v), s"node $v: ${got(v)} vs ${want(v)}")
   }
 
   // ---- connected components ----------------------------------------------

@@ -183,11 +183,20 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
   private val cutEdges = starOut(12) :+ ((13L, 0L))
   private val cutVertices = (0L to 13L) :+ 20L
 
+  /** Combine edge cases on top of the basket-cut fixture: a duplicate edge
+    * (21 -> 22 twice), self-loops (22, 24), a dangling target (25), vertex
+    * 30 without edges, and source 40, which is no vertex, pointing into the
+    * graph (40 -> 21, 40 -> 13). */
+  private val mixEdges = cutEdges ++ Seq((21L, 22L), (21L, 22L), (21L, 23L), (22L, 22L),
+    (22L, 21L), (23L, 24L), (24L, 24L), (24L, 21L), (24L, 25L), (13L, 21L), (40L, 21L), (40L, 13L))
+  private val mixVertices = cutVertices ++ Seq(21L, 22L, 23L, 24L, 25L, 30L)
+
   test("mc: local-walk engine is bit-identical to the join engine (and is the auto choice)") {
     // several shapes: random digraph (some dangling), star out, cycle, the
-    // basket-cut edge cases
+    // basket-cut and combine edge cases
     for ((es, ids) <- Seq((randomGraph(24, 70, seed = 11), 0L until 24L),
-        (starOut(6), 0L until 7L), (cycle(9).toSeq, 0L until 9L), (cutEdges, cutVertices))) {
+        (starOut(6), 0L until 7L), (cycle(9).toSeq, 0L until 9L), (cutEdges, cutVertices),
+        (mixEdges, mixVertices))) {
       val (vs, ed) = (verticesDf(ids), edgesDf(es))
       // quantize: phase-2 re-aggregates successor contributions with a
       // DOUBLE sum, whose addend order differs with the walk engine's
@@ -199,6 +208,20 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
       assertAllClose(baskets(local), baskets(join), 0.0)
       val (_, sAuto) = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24)
       assert(sAuto.maxInFlight == 0L, "auto on a broadcastable graph must take the local engine")
+    }
+  }
+
+  test("mc: an edge whose source is no vertex gives that source no basket (weighted too, both engines)") {
+    val s = spark
+    import s.implicits._
+    val es = Seq((0L, 1L), (1L, 2L), (2L, 0L), (5L, 1L))
+    val vs = verticesDf(Seq(0L, 1L, 2L))
+    val weighted = es.map { case (a, b) => (a, b, 1L + a) }.toDF("src", "dst", "weight")
+    val cfg = PprConfig(3, 3, 40, topLStrategy = "window", quantize = 1e12)
+    for ((ed, name) <- Seq((edgesDf(es), "unweighted"), (weighted, "weighted"));
+         mode <- Seq("local", "join")) {
+      val got = baskets(MonteCarloPpr.run(ed, vs, cfg, maxSteps = 24, walkMode = mode))
+      assert(got.keySet == Set(0L, 1L, 2L), s"$name/$mode: seeds ${got.keySet}")
     }
   }
 
@@ -283,7 +306,10 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     // equal weights keep the basket-cut fixture's ties: 0's first hops pick
     // leaf (w mod 24) / 2 + 1, so leaves 1-5 get four visits, 6-12 two
     val wCut = cutEdges.map { case (a, b) => (a, b, 2L) }.toDF("src", "dst", "weight")
-    for ((we, ws) <- Seq((wEdges, vs), (wCut, verticesDf(cutVertices)))) {
+    // unequal weights on the combine edge cases; the duplicate edge sums
+    val wMix = mixEdges.map { case (a, b) => (a, b, 1L + (a * 31 + b * 17) % 5) }
+      .toDF("src", "dst", "weight")
+    for ((we, ws) <- Seq((wEdges, vs), (wCut, verticesDf(cutVertices)), (wMix, verticesDf(mixVertices)))) {
       val local = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "local")._1
       val join = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "join")._1
       assertAllClose(baskets(local), baskets(join), 0.0)

@@ -7,7 +7,7 @@ import graft.kernels.TopK
 import graft.model.PprConfig
 import graft.functions.Dedup
 import graft.operators.{Components, ExactPpr, GRank, MonteCarloPpr}
-import org.apache.spark.grafttest.JobCounter
+import org.apache.spark.grafttest.{JobCounter, SqlPlans}
 
 /** G5 partitioned schedule + physical-plan and parallelism-invariance
   * contracts (SURVEY.md §2.3-§2.4). */
@@ -101,14 +101,14 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     val vs = verticesDf(0L until 32L).persist() // 30, 31: absent from the edges
     e.count(); vs.count()
     val sc = spark.sparkContext
-    // MC: edge count, adjacency collect, the walk (emits L-cut baskets: no
-    // sum or prune job follows), three broadcasts and the result of the
-    // combine superstep
+    // MC: edge count, adjacency collect, and one job that walks, scatters
+    // each walk basket to the origin's predecessors and combines them on one
+    // shuffle (no basket checkpoint, no factor or edge joins)
     val (_, mc) = JobCounter.jobs(sc) {
       MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, topLStrategy = "window", quantize = 1e12),
         maxSteps = 24, walkMode = "local")
     }
-    assert(mc.size == 7, s"MC local engine: ${mc.size} jobs: ${mc.mkString(" | ")}")
+    assert(mc.size == 3, s"MC local engine: ${mc.size} jobs: ${mc.mkString(" | ")}")
     // GRank (tolerance -1): set-up is the hub collect, the norm broadcast
     // and the state init; then one job per superstep and the final cut
     for (it <- Seq(2, 5)) {
@@ -117,6 +117,26 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
           topLStrategy = "window", quantize = 1e12))
       }
       assert(g.size == 3 + it + 1, s"GRank, $it supersteps: ${g.size} jobs: ${g.mkString(" | ")}")
+    }
+    e.unpersist(); vs.unpersist()
+  }
+
+  test("leaf-plan gate: GRank supersteps plan against checkpoint leaves, never a cached relation") {
+    // the caller's inputs are cached, as in the benchmark: a persisted loop
+    // input would carry their lineage into every superstep as an
+    // InMemoryRelation child
+    val e = edgesDf(randomGraph(30, 120, seed = 37)).persist()
+    val vs = verticesDf(0L until 32L).persist()
+    e.count(); vs.count()
+    for (cfg <- Seq(PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12),
+        PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12, saltThreshold = 2, saltBuckets = 3),
+        PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12, partitionedSchedule = true))) {
+      val (_, plans) = SqlPlans.capture(spark.sparkContext)(GRank.run(e, vs, cfg).collect())
+      // the init cut and one cut per superstep
+      val loop = plans.filter(_.description.contains("Iterative.scala"))
+      assert(loop.size == 1 + cfg.iterations, s"$cfg: ${plans.map(_.description).mkString(" | ")}")
+      for (p <- loop) assert(!p.nodes.exists(_.nodeName.startsWith("InMemoryTableScan")),
+        s"$cfg: a loop plan scans a cached relation:\n${p.plan}")
     }
     e.unpersist(); vs.unpersist()
   }
