@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.Grid
+import graft.kernels.{Grid, Materialize}
 
 /** Text-analysis operators for large-scale training-data pipelines (task
   * brief: language-ID, quality scoring, token counting, fingerprinting).
@@ -126,7 +126,7 @@ object TextAnalysis {
       textCol: String = "text"): DataFrame = {
     val docTok = df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("dc"))
-      .persist()
+      .localCheckpoint(eager = false)
     val freq = docTok.groupBy(col("tok")).agg(sum(col("dc")).as("c"))
     val n = freq.agg(sum(col("c")).cast("double").as("nt"))
     val lp = docTok.join(freq, "tok").crossJoin(broadcast(n))
@@ -137,7 +137,7 @@ object TextAnalysis {
         ((sum(col("dc") * Grid.roundLong(col("lp") * 1e12)) / 1e12)
           / sum(col("dc"))).as("avg_logprob"))
       .localCheckpoint(true)
-    docTok.unpersist()
+    Materialize.free(docTok)
     res
   }
 
@@ -160,7 +160,7 @@ object TextAnalysis {
     require(topN > 0, "topN must be > 0")
     val docTok = df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
-      .persist()
+      .localCheckpoint(eager = false)
     val dfreq = docTok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).cast("double").as("nd"))
     val w = org.apache.spark.sql.expressions.Window
@@ -172,7 +172,7 @@ object TextAnalysis {
       .withColumn("rank", row_number().over(w).cast("long")) // BIGINT, like SQL row_number
       .where(col("rank") <= topN)
       .localCheckpoint(true)
-    docTok.unpersist()
+    Materialize.free(docTok)
     res
   }
 
@@ -206,10 +206,10 @@ object TextAnalysis {
       .select(col("bg.a").as("a"), col("bg.b").as("b"))
     val cAb = bigrams.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
       .where(col("c_ab") >= minCount)
-      .persist()
+      .localCheckpoint(eager = false)
     val uni = toks.select(explode(col("ts")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .persist()
+      .localCheckpoint(eager = false)
     val totals = uni.agg(sum(col("c")).cast("double").as("nu"))
       .crossJoin(bigrams.agg(count(lit(1)).cast("double").as("nb")))
     val res = cAb
@@ -223,7 +223,7 @@ object TextAnalysis {
       .orderBy(col("pmi").desc, col("a").asc, col("b").asc)
       .limit(topN)
       .localCheckpoint(true)
-    cAb.unpersist(); uni.unpersist()
+    Materialize.free(cAb, uni)
     res
   }
 
@@ -249,7 +249,7 @@ object TextAnalysis {
       .select(col(idCol), col("ts"),
         size(col("ts")).cast("long").as("n"),
         size(array_distinct(col("ts"))).cast("long").as("nd"))
-      .persist()
+      .localCheckpoint(eager = false)
     val bigramTop = base.where(col("n") >= 2)
       .select(col(idCol), explode(transform(sequence(lit(1), (col("n") - 1).cast("int")),
         i => struct(element_at(col("ts"), i).as("a"),
@@ -263,7 +263,7 @@ object TextAnalysis {
         when(col("n") >= 2, coalesce(col("maxc"), lit(0L)).cast("double") / (col("n") - 1))
           .otherwise(lit(0.0)).as("top_bigram_frac"))
       .localCheckpoint(true)
-    base.unpersist()
+    Materialize.free(base)
     res
   }
 

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Materialize
 import graft.sources.EdgeSource
 
 /** Connected components, label propagation, and the reference's approximate
@@ -81,29 +82,23 @@ object Components {
         .dropDuplicates("src", "dst")
     // every cut materializes ONE job: the set fingerprint (row count +
     // commutative hash XOR — the edge set is deduplicated, and XOR cannot
-    // overflow under ANSI mode) rides the checkpoint as observed metrics.
-    // Each cut also routes through the stats barrier: localCheckpoint
-    // carries the plan's size estimate into the next round, where
-    // large-star's union alone doubles it (the Scc pathology — see
-    // StatsBarrier's Scaladoc)
+    // overflow under ANSI mode) is observed on the checkpoint. Each cut is
+    // read through the stats barrier: localCheckpoint carries the plan's
+    // size estimate into the next round, where large-star's union alone
+    // doubles it (the Scc pathology — see StatsBarrier's Scaladoc)
     import org.apache.spark.sql.graft.StatsBarrier.statsBarrier
-    def cut(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = Observation()
-      val ck = e.observe(obs, count(lit(1)).as("n"),
-          coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("x"))
-        .localCheckpoint(true)
-      val m = obs.get
-      (statsBarrier(ck), (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-    }
-    var (e, fp) = cut(EdgeSource.undirected(edges)
-      .where(col("src") < col("dst"))) // one canonical row per undirected pair
-    var done = fp._1 == 0L
+    val edgeXor = coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))
+    var (e, fp) = Materialize(EdgeSource.undirected(edges)
+      .where(col("src") < col("dst")), edgeXor) // one canonical row per undirected pair
+    e = statsBarrier(e)
+    var done = fp.getLong(0) == 0L
     var i = 0
     while (!done && i < maxIterations) {
-      val (next, nfp) = cut(smallStar(largeStar(e)))
+      val (next, nfp) = Materialize(smallStar(largeStar(e)), edgeXor)
       done = nfp == fp
       fp = nfp
-      e = next
+      Materialize.free(e)
+      e = statsBarrier(next)
       i += 1
     }
     // fixpoint edges are (child -> component-min root); roots and isolated
@@ -121,22 +116,23 @@ object Components {
     * Rounds = graph diameter — fine on small-diameter graphs, pathological
     * on chains; the default entry point is [[connectedComponentsStar]]. */
   def connectedComponentsMinId(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame = {
-    val und = EdgeSource.undirected(edges).persist()
+    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
     var state = vertices.select(col("id"), col("id").as("comp")).localCheckpoint(true)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIterations) {
       val nbrMin = state.join(und, state("id") === und("src"))
         .groupBy(col("dst").as("id2")).agg(min(col("comp")).as("nbrComp"))
-      val next = state.join(nbrMin, state("id") === nbrMin("id2"), "left")
+      // the round's change count is observed on its own cut
+      val (next, m) = Materialize(state.join(nbrMin, state("id") === nbrMin("id2"), "left")
         .select(col("id"), least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"),
-          col("comp").as("prev"))
-        .localCheckpoint(true)
-      changed = next.where(col("comp") =!= col("prev")).count()
+          col("comp").as("prev")), count(when(col("comp") =!= col("prev"), 1)))
+      changed = m.getLong(1)
+      Materialize.free(state)
       state = next.select(col("id"), col("comp"))
       i += 1
     }
-    und.unpersist()
+    Materialize.free(und)
     state
   }
 
@@ -147,7 +143,7 @@ object Components {
     * the round count IS part of the operator's contract. Deterministic.
     * Returns (id, label). */
   def labelPropagation(edges: DataFrame, vertices: DataFrame, rounds: Int): DataFrame = {
-    val und = EdgeSource.undirected(edges).persist()
+    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
     var state = vertices.select(col("id"), col("id").as("label")).localCheckpoint(true)
     var i = 0
     while (i < rounds) {
@@ -161,12 +157,14 @@ object Components {
       val winner = freq.groupBy(col("v"))
         .agg(min(struct((-col("cnt")).as("negCnt"), col("label").as("l"))).as("best"))
         .select(col("v"), col("best.l").as("newLabel"))
-      state = state.join(winner, state("id") === winner("v"), "left")
+      val next = state.join(winner, state("id") === winner("v"), "left")
         .select(col("id"), coalesce(col("newLabel"), col("label")).as("label"))
         .localCheckpoint(true)
+      Materialize.free(state)
+      state = next
       i += 1
     }
-    und.unpersist()
+    Materialize.free(und)
     state
   }
 
@@ -237,7 +235,7 @@ object Components {
   }
 
   def twoColoring(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame = {
-    val und = EdgeSource.undirected(edges).persist()
+    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
     // dist(v) starts at 0 for every vertex paired with root candidate = own id;
     // propagate (root=min comp id, dist) — equivalent to multi-source BFS from
     // all vertices where only the minimum root survives per vertex.
@@ -247,18 +245,24 @@ object Components {
     var i = 0
     while (changed > 0 && i < maxIterations) {
       val prop = state.join(und, state("id") === und("src"))
-        .select(col("dst").as("id"), col("root"), (col("dist") + 1).as("dist"))
-      val next = state.select(col("id"), col("root"), col("dist")).union(prop)
+        .select(col("dst").as("id"), col("root"), (col("dist") + 1).as("dist"), lit(false).as("own"))
+      // a vertex's own row carries its previous (root, dist) through the
+      // aggregate, and the round's change count is observed on its cut (an
+      // id new to the state has no previous value and counts as no change)
+      val (next, m) = Materialize(state.select(col("id"), col("root"), col("dist"), lit(true).as("own"))
+        .union(prop)
         .groupBy(col("id"))
-        .agg(min(struct(col("root"), col("dist"))).as("best"))
-        .select(col("id"), col("best.root").as("root"), col("best.dist").as("dist"))
-        .localCheckpoint(true)
-      changed = next.join(state.withColumnsRenamed(Map("root" -> "pRoot", "dist" -> "pDist")), Seq("id"))
-        .where(col("root") =!= col("pRoot") || col("dist") =!= col("pDist")).count()
-      state = next
+        .agg(min(struct(col("root"), col("dist"))).as("best"),
+          max(when(col("own"), struct(col("root"), col("dist")))).as("prev"))
+        .select(col("id"), col("best.root").as("root"), col("best.dist").as("dist"),
+          col("prev.root").as("pRoot"), col("prev.dist").as("pDist")),
+        count(when(col("root") =!= col("pRoot") || col("dist") =!= col("pDist"), 1)))
+      changed = m.getLong(1)
+      Materialize.free(state)
+      state = next.select(col("id"), col("root"), col("dist"))
       i += 1
     }
-    und.unpersist()
+    Materialize.free(und)
     state.select(col("id"), pmod(col("dist"), lit(2L)).cast("int").as("color"))
   }
 }

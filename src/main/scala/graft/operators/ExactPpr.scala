@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.EdgeSource
+import graft.kernels.Materialize
 
 /** Exact single-source personalized PageRank power iteration — the
   * correctness oracle (include/internal/pprSingleSource.h:29-75), batched
@@ -31,12 +31,12 @@ object ExactPpr {
     require(iterations > 0, "iterations must be > 0")
     require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
 
-    val adj = adjacency(edges, damping).persist()
+    val adj = adjacency(edges, damping).localCheckpoint(eager = false)
 
     val init = seeds.select(col("id").as("seed"), col("id").as("node"), lit(1.0).as("score"))
     val teleport = seeds
       .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - damping).as("score"))
-      .persist()
+      .localCheckpoint(eager = false)
 
     def superstep(state: DataFrame, i: Int): DataFrame =
       state.join(adj, state("node") === adj("src"))
@@ -46,7 +46,7 @@ object ExactPpr {
         .agg(graft.kernels.TopK.sumScore(quantize))
 
     val res = IterativeEngine.run(init, superstep, iterations, tolerance)
-    adj.unpersist(); // teleport stays referenced by the lazily-evaluated result
+    Materialize.free(adj, teleport)
     res.state
   }
 
@@ -72,11 +72,11 @@ object ExactPpr {
       quantize: Double = 0.0): DataFrame = graft.kernels.IterTuning.withoutRuntimeFilters(edges.sparkSession) {
     require(iterations > 0, "iterations must be > 0")
     require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
-    val adj = adjacency(edges, damping).persist()
+    val adj = adjacency(edges, damping).localCheckpoint(eager = false)
     val init = teleport.select(lit(0L).as("seed"), col("id").as("node"),
       col("mass").as("score"))
     val tele = teleport.select(lit(0L).as("seed"), col("id").as("node"),
-      (lit(1.0 - damping) * col("mass")).as("score")).persist()
+      (lit(1.0 - damping) * col("mass")).as("score")).localCheckpoint(eager = false)
     def superstep(state: DataFrame, i: Int): DataFrame =
       state.join(adj, state("node") === adj("src"))
         .select(col("seed"), col("dst").as("node"), (col("score") * col("factor")).as("score"))
@@ -84,7 +84,7 @@ object ExactPpr {
         .groupBy(col("seed"), col("node"))
         .agg(graft.kernels.TopK.sumScore(quantize))
     val res = IterativeEngine.run(init, superstep, iterations, tolerance)
-    adj.unpersist()
+    Materialize.free(adj, tele)
     res.state.select(col("node"), col("score"))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.TopK
+import graft.kernels.{Materialize, TopK}
 import graft.model.PprConfig
 import graft.sources.EdgeSource
 
@@ -139,13 +139,10 @@ object GRank {
       .localCheckpoint(eager = false)
 
     // G5 partitioned schedule: 2-coloring + per-color adjacency/teleport
-    // halves, computed once; each is a checkpoint leaf, filled by the first
-    // job that reads it. adjacency filtered by SOURCE color: only
+    // halves, computed once; each half is a checkpoint leaf, filled by the
+    // first job that reads it. adjacency filtered by SOURCE color: only
     // active-color seeds gather in an active iteration.
-    val colors =
-      if (cfg.partitionedSchedule)
-        Components.twoColoring(edges, vertices).localCheckpoint(eager = false)
-      else null
+    val colors = if (cfg.partitionedSchedule) Components.twoColoring(edges, vertices) else null
     def colorHalf(df: DataFrame, keyCol: String, c: Int): DataFrame =
       df.join(colors.where(col("color") === c).select(col("id").as("__cid")),
         col(keyCol) === col("__cid"), "left_semi")
@@ -226,9 +223,8 @@ object GRank {
     val finalState = TopK.topKWindow(
       res.state.select(col("seed"), col("node"), col("score")), cfg.K) // G6, grank.h:143-147
       .localCheckpoint(true)
-    (Seq(adj, teleport) ++ Seq(colors).filter(_ != null) ++
-      Option(adjHalves).toSeq.flatten ++ Option(teleportHalves).toSeq.flatten)
-      .foreach(IterativeEngine.freeCheckpointBlocks)
+    Materialize.free(Seq(adj, teleport, res.state) ++ Option(colors) ++
+      Option(adjHalves).toSeq.flatten ++ Option(teleportHalves).toSeq.flatten: _*)
     IterativeEngine.Result(finalState, res.history)
   }
 }

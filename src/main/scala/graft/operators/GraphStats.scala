@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Materialize
 import graft.sources.EdgeSource
 
 /** Whole-graph scalar statistics a web link-graph profile needs next to the
@@ -20,7 +21,7 @@ object GraphStats {
     * pairs whose reverse is also present (so a mutual pair contributes 2). */
   def reciprocity(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().persist()
+      .where(col("src") =!= col("dst")).distinct().localCheckpoint(eager = false)
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
     val mutual = e.join(rev, Seq("src", "dst"), "left_semi")
     val res = e.agg(count(lit(1)).as("n_directed"))
@@ -28,7 +29,7 @@ object GraphStats {
       .select(col("n_directed"), col("n_reciprocal"),
         (col("n_reciprocal").cast("double") / col("n_directed")).as("reciprocity"))
       .localCheckpoint(true)
-    e.unpersist()
+    Materialize.free(e)
     res
   }
 
@@ -44,7 +45,7 @@ object GraphStats {
     * global aggregate; nothing iterates. */
   def assortativity(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().persist()
+      .where(col("src") =!= col("dst")).distinct().localCheckpoint(eager = false)
     val outd = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("x"))
     val ind = e.groupBy(col("dst").as("v")).agg(count(lit(1)).as("y"))
     val xy = e.join(outd, e("src") === outd("u")).join(ind, e("dst") === ind("v"))
@@ -61,7 +62,7 @@ object GraphStats {
       (round(when(col("m") > 1 && dx > 0 && dy > 0, num / sqrt(dx * dy))
         .otherwise(lit(0.0)) * lit(1e6)) / 1e6).as("assortativity"))
       .localCheckpoint(true)
-    e.unpersist()
+    Materialize.free(e)
     res
   }
 
@@ -91,18 +92,19 @@ object GraphStats {
   /** One row: (n_wedges, n_triangles, transitivity = 3T / wedges) over the
     * canonical undirected simple graph; wedges = sum_v C(deg(v), 2). */
   def transitivity(edges: DataFrame): DataFrame = {
-    val e = EdgeSource.canonical(edges).persist()
+    val e = EdgeSource.canonical(edges).localCheckpoint(eager = false)
+    val triangles = Triangles.countAll(e)
     val wedges = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
       .agg(coalesce(sum(col("deg") * (col("deg") - 1)), lit(0L)).as("w2"))
       .select(shiftright(col("w2"), 1).as("n_wedges")) // w2 is even; exact halving
-    val res = wedges.crossJoin(Triangles.countAll(e))
+    val res = wedges.crossJoin(triangles)
       .select(col("n_wedges"), col("n_triangles"),
         when(col("n_wedges") > 0,
           (lit(3L) * col("n_triangles")).cast("double") / col("n_wedges"))
           .otherwise(lit(0.0)).as("transitivity"))
       .localCheckpoint(true)
-    e.unpersist()
+    Materialize.free(e, triangles)
     res
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.Grid
+import graft.kernels.{Grid, Materialize}
 
 /** HITS hubs and authorities (Kleinberg 1999) — the second classic
   * link-analysis fixpoint next to PageRank, and the one that separates
@@ -23,13 +23,13 @@ import graft.kernels.Grid
   * State rides the shared iterative engine as (seed 0 = auth, seed 1 = hub,
   * node, score): the engine's per-seed L1 norm then measures BOTH vectors'
   * movement, its checkpoint/resume machinery applies unchanged, and each
-  * iteration is two gather exchanges (auth from hubs, hub from fresh auths)
-  * plus two broadcast 1-row normalizer joins — no driver sync in the loop.
+  * iteration is two gather exchanges (auth from hubs, hub from fresh auths),
+  * each cut with its normalizer observed on the same job.
   *
   * 100-TB shape: the gathers are map-side-combinable sums over the
   * src-/dst-keyed adjacency (same exchange shape as PageRank's superstep,
-  * with the same hub-skew behavior); the normalizers are 1-row broadcast
-  * subqueries like PageRank's "subquery" leak plan.
+  * with the same hub-skew behavior); each normalizer is an aggregate over
+  * the gather rows as they are checkpointed, read back as a literal.
   */
 object Hits {
 
@@ -53,11 +53,11 @@ object Hits {
     // the |E|-row side on any of the 2·iterations joins; only the |V|-row
     // vector side moves. The SHUFFLE_HASH hints below keep the planner
     // from auto-broadcasting the edge side (the side that cannot
-    // broadcast at 100 TB).
+    // broadcast at 100 TB). Both copies are leaves the first gathers fill.
     val eDedup = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .dropDuplicates("src", "dst")
-    val eFwd = eDedup.repartition(shufflePartitions, col("src")).persist()
-    val eBwd = eDedup.repartition(shufflePartitions, col("dst")).persist()
+    val eFwd = eDedup.repartition(shufflePartitions, col("src")).localCheckpoint(eager = false)
+    val eBwd = eDedup.repartition(shufflePartitions, col("dst")).localCheckpoint(eager = false)
     val n = vertices.count()
     require(n > 0, "empty vertex set")
 
@@ -77,33 +77,25 @@ object Hits {
     // at the end. The engine's L1 norm already treats missing entries as 0
     // (Metrics.norm1PerSeed).
     //
-    // Each raw gather is CHECKPOINTED before normalizing and the normalizer
-    // is inlined as a LITERAL: the broadcast-subquery form re-executes the
-    // gather subplan for the 1-row aggregate (measured 2x the superstep
-    // cost), while the literal form reads the materialized blocks once —
-    // HITS normalization is a global barrier either way, so the driver
-    // sync adds no extra synchronization (PageRank's two leak plans
-    // measured within noise of each other; here the gather is NOT a cheap
-    // cached scan, which is what tips the choice to literal).
+    // Each raw gather is CHECKPOINTED with its normalizer observed on the
+    // same job and inlined as a LITERAL: a broadcast-subquery normalizer
+    // re-executes the gather subplan (measured 2x the superstep cost), and
+    // HITS normalization is a global barrier either way.
     var staleBlocks = List.empty[DataFrame]
     def superstep(state: DataFrame, i: Int): DataFrame = {
-      staleBlocks.foreach(IterativeEngine.freeCheckpointBlocks)
+      Materialize.free(staleBlocks: _*)
       val hub = state.where(col("seed") === 1).select(col("node"), col("score"))
       // a zero gather sum (all hub mass on dangling nodes, or every
       // contribution rounding to 0 on the quantize grid) would make raw/s
       // NaN and poison all remaining iterations — normalize by 1 instead,
       // which keeps the (all-zero) vector exact (ADVICE r5)
-      val araw = hub.hint("shuffle_hash").join(eFwd, hub("node") === eFwd("src"))
-        .groupBy(col("dst").as("node")).agg(gsum(col("score")).as("raw"))
-        .localCheckpoint(true)
-      val sA0 = araw.agg(gsum(col("raw")).as("s")).head().getDouble(0)
-      val sA = if (sA0 == 0.0) 1.0 else sA0
+      val (araw, a) = Materialize(hub.hint("shuffle_hash").join(eFwd, hub("node") === eFwd("src"))
+        .groupBy(col("dst").as("node")).agg(gsum(col("score")).as("raw")), gsum(col("raw")))
+      val sA = if (a.getDouble(1) == 0.0) 1.0 else a.getDouble(1)
       val auth = araw.select(col("node"), grid(col("raw") / lit(sA)).as("score"))
-      val hraw = auth.hint("shuffle_hash").join(eBwd, auth("node") === eBwd("dst"))
-        .groupBy(col("src").as("node")).agg(gsum(col("score")).as("raw"))
-        .localCheckpoint(true)
-      val sH0 = hraw.agg(gsum(col("raw")).as("s")).head().getDouble(0)
-      val sH = if (sH0 == 0.0) 1.0 else sH0
+      val (hraw, h) = Materialize(auth.hint("shuffle_hash").join(eBwd, auth("node") === eBwd("dst"))
+        .groupBy(col("src").as("node")).agg(gsum(col("score")).as("raw")), gsum(col("raw")))
+      val sH = if (h.getDouble(1) == 0.0) 1.0 else h.getDouble(1)
       val hubNext = hraw.select(col("node"), grid(col("raw") / lit(sH)).as("score"))
       staleBlocks = List(araw, hraw)
       auth.select(lit(0L).as("seed"), col("node"), col("score"))
@@ -111,8 +103,7 @@ object Hits {
     }
 
     val res = IterativeEngine.run(init, superstep, iterations, tolerance)
-    staleBlocks.foreach(IterativeEngine.freeCheckpointBlocks)
-    eFwd.unpersist(); eBwd.unpersist()
+    Materialize.free(eFwd +: eBwd +: staleBlocks: _*)
     val sparse = res.state.groupBy(col("node"))
       .agg(min(when(col("seed") === 0, col("score"))).as("a0"),
         min(when(col("seed") === 1, col("score"))).as("h0"))

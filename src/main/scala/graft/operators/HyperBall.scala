@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Grid, Mix}
+import graft.kernels.{Grid, Materialize, Mix}
 
 /** HyperBall (Boldi & Vigna, "In-core computation of geometric centralities
   * with HyperBall", 2013): per-vertex HyperLogLog sketches of the forward
@@ -46,7 +46,7 @@ object HyperBall {
     val m = 1 << p
     // forward-ball gather joins successors' registers on edge src
     val adj = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("dst")).persist()
+      .repartition(col("dst")).localCheckpoint(eager = false)
 
     val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
     val w = shiftright(h.cast("long"), p)
@@ -64,7 +64,7 @@ object HyperBall {
     }
 
     val res = IterativeEngine.run(init, superstep, rounds, tolerance)
-    adj.unpersist()
+    Materialize.free(adj)
     res.state.select(col("seed").as("id"), col("node").cast("int").as("bucket"),
       col("score").cast("int").as("rho"))
   }
@@ -172,16 +172,10 @@ object HyperBall {
     require(p >= 4 && p <= 16, "p must be in [4, 16]")
     val m = 1 << p
     val adj = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("dst")).persist()
+      .repartition(col("dst")).localCheckpoint(eager = false)
     val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
     val w = shiftright(h.cast("long"), p)
     val rho = lit(31 - p + 1) - length(ltrim(bin(w), "0"))
-    var state = vertices.select(col("id"),
-      pmod(h, lit(m.toLong)).cast("long").as("bucket"), rho.cast("int").as("rho"))
-      .localCheckpoint(true)
-    def est(): DataFrame =
-      graft.functions.Sketch.estimateFrom(state, p, Seq("id"))
-        .localCheckpoint(true)
     // EXACT fixpoint probe (r7): registers only ever GROW under max-merge
     // (rho per (id, bucket) is non-decreasing; rows are only added), so
     // the state is unchanged iff (row count, Σrho) is unchanged — and a
@@ -189,11 +183,13 @@ object HyperBall {
     // every further round is the identity. Stagnant tail rounds are
     // skipped and their est frames reuse the fixpoint frame (identical
     // values — the unrolled oracle replays the skipped rounds as no-ops).
-    def fingerprint(): (Long, Long) = {
-      val r = state.agg(count(lit(1)), coalesce(sum(col("rho")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var fp = fingerprint()
+    // The fingerprint is observed on the state's own checkpoint job.
+    val rhoSum = coalesce(sum(col("rho")), lit(0L))
+    var (state, fp) = Materialize(vertices.select(col("id"),
+      pmod(h, lit(m.toLong)).cast("long").as("bucket"), rho.cast("int").as("rho")), rhoSum)
+    def est(): DataFrame =
+      graft.functions.Sketch.estimateFrom(state, p, Seq("id"))
+        .localCheckpoint(true)
     val out = Seq.newBuilder[DataFrame]
     var last = est()
     out += last
@@ -202,21 +198,18 @@ object HyperBall {
     while (t <= rounds && !fixed) {
       val gathered = adj.join(state, adj("dst") === state("id"))
         .select(adj("src").as("id"), col("bucket"), col("rho"))
-      val prev = state
-      state = state.union(gathered)
+      val (next, nfp) = Materialize(state.union(gathered)
         .groupBy(col("id"), col("bucket"))
-        .agg(max(col("rho")).as("rho"))
-        .localCheckpoint(true)
-      IterativeEngine.freeCheckpointBlocks(prev)
-      val nfp = fingerprint()
+        .agg(max(col("rho")).as("rho")), rhoSum)
+      Materialize.free(state)
+      state = next
       if (nfp == fp) fixed = true // est unchanged too — reuse `last`
       else { fp = nfp; last = est() }
       out += last
       t += 1
     }
     while (t <= rounds) { out += last; t += 1 } // fixpoint tail: identity rounds
-    IterativeEngine.freeCheckpointBlocks(state)
-    adj.unpersist()
+    Materialize.free(state, adj)
     out.result()
   }
 }

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.kernels.Metrics
+import graft.kernels.{Materialize, Metrics}
 
-/** Per-superstep metrics row (checkpoint manifest + BENCH evidence). */
+/** Per-superstep metrics row (checkpoint manifest + BENCH evidence).
+  * `rows` is the new state's row count, observed on its checkpoint job. */
 final case class IterMetrics(iteration: Int, maxDiff: Double, rows: Long, wallMs: Long)
 
 /** Superstep-boundary snapshots: state parquet + a JSON manifest carrying
@@ -66,7 +67,12 @@ final class CheckpointManager(dir: String) {
 }
 
 /** The one driver loop every iterative operator instantiates (SURVEY.md §7.1):
-  * superstep -> convergence scalar -> lineage cut -> optional checkpoint.
+  * superstep -> lineage cut -> convergence scalar -> optional checkpoint.
+  *
+  * A superstep is one [[graft.kernels.Materialize]] job (the cut, its row
+  * count observed) plus, under a tolerance, the norm1 job. Loop inputs are
+  * the caller's lazy `localCheckpoint(eager = false)` leaves, which the
+  * caller frees after the loop.
   *
   * Loop contract mirrors include/grank.h:86-92: `maxDiff` starts at
   * `tolerance` so the loop always runs at least once; a NEGATIVE tolerance
@@ -76,18 +82,6 @@ final class CheckpointManager(dir: String) {
 object IterativeEngine {
 
   final case class Result(state: DataFrame, history: Vector[IterMetrics])
-
-  /** Drop the cached blocks behind a localCheckpoint'ed frame (safe only
-    * once nothing will read it again — checkpointed lineage can NOT be
-    * recomputed). Shared with the MC walk loop, whose per-batch
-    * accumulator re-checkpoints have the same stale-block-set hazard. */
-  private[operators] def freeCheckpointBlocks(df: DataFrame): Unit =
-    try {
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ =>
-      }
-    } catch { case _: Throwable => () }
 
   def run(
       init: DataFrame,
@@ -156,24 +150,20 @@ object IterativeEngine {
           java.nio.file.Paths.get(s"$d/${label}_superstep.txt"),
           stepDf.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
-      val next = stepDf.localCheckpoint(true)
+      val (next, observed) = Materialize(stepDf)
       val tMat = System.nanoTime()
       maxDiff = if (tolerance < 0) Double.NaN else Metrics.maxNorm1(state, next)
-      val tNorm = System.nanoTime()
       if (tolerance >= 0) recent = recent.tail :+ maxDiff
-      val needRows = checkpoint.isDefined || tolerance >= 0
-      val rows = if (needRows) next.count() else -1L
       if (debugTiming)
-        println(s"ITERDEBUG it=$i mat=${(tMat - t0) / 1000000}ms norm=${(tNorm - tMat) / 1000000}ms " +
-          s"count=${(System.nanoTime() - tNorm) / 1000000}ms")
+        println(s"ITERDEBUG it=$i mat=${(tMat - t0) / 1000000}ms norm=${(System.nanoTime() - tMat) / 1000000}ms")
       val wallMs = (System.nanoTime() - t0) / 1000000
       // the previous state's checkpoint blocks are unreachable from here on;
       // free them NOW instead of waiting for the ContextCleaner (otherwise
       // |V|*L-row block sets pile up per iteration until a GC storm).
-      freeCheckpointBlocks(state)
+      Materialize.free(state)
       state = next
       i += 1
-      val m = IterMetrics(i, maxDiff, rows, wallMs)
+      val m = IterMetrics(i, maxDiff, observed.getLong(0), wallMs)
       history :+= m
       if (checkpointEvery > 0 && checkpoint.isDefined && i % checkpointEvery == 0)
         checkpoint.get.save(state, i, m, history)

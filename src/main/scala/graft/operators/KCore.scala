@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Materialize
+
 /** k-core decomposition (coreness per vertex) via the synchronous h-index
   * iteration (Lü et al., "The H-index of a network node and its relation to
   * degree and coreness", Nat. Commun. 2016): every vertex starts at its
@@ -57,7 +59,7 @@ object KCore {
       .union(edges.where(col("src") =!= col("dst")).select(col("dst"), col("src")))
       .distinct()
       .repartition(col("dst"))
-      .persist()
+      .localCheckpoint(eager = false)
 
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val init = vertices.join(deg, vertices("id") === deg("src"), "left")
@@ -85,7 +87,7 @@ object KCore {
     }
 
     val res = IterativeEngine.run(init, superstep, rounds, tolerance)
-    und.unpersist()
+    Materialize.free(und)
     res.state.select(col("node").as("id"), col("score").cast("int").as("coreness"))
   }
 }

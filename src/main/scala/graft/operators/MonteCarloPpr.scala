@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{IterTuning, TopK}
+import graft.kernels.{IterTuning, Materialize, TopK}
 import graft.model.PprConfig
 
 /** MCCompletePathV2 — Monte-Carlo complete-path all-sources PPR
@@ -65,8 +65,8 @@ import graft.model.PprConfig
   *    latency that dominated the join path's wall at bench scale (~2.5x
   *    measured).
   *  - "join" (auto-chosen above the broadcast limit — the 100-TB path):
-  *    per `stepBatch` steps, chain join+project steps lazily with a
-  *    per-step persist, then ONE action; visit counts fold into a bounded
+  *    per `stepBatch` steps, chain join+project steps as lazy checkpoint
+  *    leaves, then ONE action; visit counts fold into a bounded
   *    accumulator (constant plan depth). Walker VOLUME is bounded by
   *    `walkerBudget`: the walkId range [0, floor(R*d)) is split into chunks
   *    of <= walkerBudget/|origins| ids walked chunk-by-chunk — peak
@@ -223,33 +223,32 @@ object MonteCarloPpr {
       // a lazy checkpoint leaf, filled by the first walker join: each step
       // plans against it instead of an InMemoryRelation over the edge lineage
       val adjList = buildAdj(edges, weighted, dedup = true).localCheckpoint(eager = false)
-      var walkers = vertices.join(adjList, vertices("id") === adjList("src"))
+      // each walker cut observes its own row count: the survivors
+      var (walkers, alive) = Materialize(vertices.join(adjList, vertices("id") === adjList("src"))
         .select(col("id").as("seed"),
           explode(sequence(lit(0L), lit(walksPerNode - 1L))).as("walkId"),
-          col("id").as("cur"))
-        .localCheckpoint(true)
+          col("id").as("cur")))
       // per-step trace frames read the checkpointed walker frames — those
       // blocks stay alive through the final union (bounded by maxSteps)
       var traces = List(walkers.select(col("seed"), col("walkId").as("walk_id"),
         lit(0).as("step"), col("cur").as("node")))
-      var alive = walkers.count()
       var step = 1
-      while (alive > 0 && step <= maxSteps) {
+      while (alive.getLong(0) > 0 && step <= maxSteps) {
         val survivors =
           if (step == 1) walkers // first edge always traversed (run: :127-132)
           else walkers.where(
             (mix31(col("seed"), col("walkId"), lit(step), survivalSalt(salt))
               / lit(P.toDouble)) <= damping)
-        walkers = survivors.join(adjList, survivors("cur") === adjList("src"))
+        val (next, m) = Materialize(survivors.join(adjList, survivors("cur") === adjList("src"))
           .select(col("seed"), col("walkId"),
-            element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur"))
-          .localCheckpoint(true)
+            element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur")))
+        walkers = next
+        alive = m
         traces ::= walkers.select(col("seed"), col("walkId").as("walk_id"),
           lit(step).as("step"), col("cur").as("node"))
-        alive = walkers.count()
         step += 1
       }
-      IterativeEngine.freeCheckpointBlocks(adjList)
+      Materialize.free(adjList)
       traces.reduce(_ union _)
     }
   }
@@ -327,17 +326,17 @@ object MonteCarloPpr {
     // is ONE narrow stage — the per-step shuffle latency was the dominant
     // cost at small scale); above it, the adjacency is hash-partitioned by
     // src once and reused every step. Either way it is a lazy checkpoint
-    // leaf, filled by the `walkOrigins` count, so no step plan carries the
+    // leaf, filled by the `walkOrigins` cut, so no step plan carries the
     // edge lineage.
     // the weighted (src,dst,w) aggregation is shared by the adjacency AND
-    // the combine-phase edge factor — persisted so it runs once, not twice
-    val ewOpt = if (weighted) Some(weightedEw(edges).persist()) else None
+    // the combine-phase edge factor — a leaf, so it runs once, not twice
+    val ewOpt = if (weighted) Some(weightedEw(edges).localCheckpoint(eager = false)) else None
     val adjBase = ewOpt.map(buildWeightedAdj)
       .getOrElse(buildAdj(edges, weighted = false, dedup = false))
-    val adjPersisted =
+    val adjLeaf =
       (if (smallAdj) adjBase else adjBase.repartition(shufflePartitions, col("src")))
         .localCheckpoint(eager = false)
-    val adjList = if (smallAdj) broadcast(adjPersisted) else adjPersisted
+    val adjList = if (smallAdj) broadcast(adjLeaf) else adjLeaf
 
     // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
     // one shape the single-machine reference never faces (its walkNode is
@@ -346,11 +345,10 @@ object MonteCarloPpr {
     // loop runs once per chunk — every mix31 draw is a pure function of
     // (seed, ABSOLUTE walkId, step), so chunked and unchunked runs are
     // bit-identical; only peak in-flight rows change.
-    val walkOrigins = verts
+    val (walkOrigins, origins) = Materialize(verts
       .join(adjList, verts("id") === adjList("src"), "inner") // dangling origins never walk
-      .select(col("id").as("seed"), col("id").as("cur"))
-      .persist()
-    val nOrigins = walkOrigins.count()
+      .select(col("id").as("seed"), col("id").as("cur")))
+    val nOrigins = origins.getLong(0)
     val chunkSize =
       if (walkerBudget <= 0 || nOrigins == 0) math.max(effective, 1L)
       else math.max(1L, math.min(effective, walkerBudget / nOrigins))
@@ -366,10 +364,10 @@ object MonteCarloPpr {
           element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur"))
     }
 
-    // Per batch: chain `stepBatch` steps lazily with a per-step persist;
-    // the batch-end checkpoint materializes every step once (the persists
-    // keep the chain from recomputing), then visit counts PARTIAL-aggregate
-    // within the batch. Batch partials merge ONCE per chunk, chunk partials
+    // Per batch: chain `stepBatch` steps as lazy checkpoint leaves; the
+    // batch-end cut (which observes the surviving walker count) fills every
+    // leaf once, then visit counts PARTIAL-aggregate within the batch.
+    // Batch partials merge ONCE per chunk, chunk partials
     // union once at the end (phase 1.5 below runs the final (seed,node)
     // sum) — total shuffle volume ~2x the visit count. The r2 design
     // instead re-shuffled a single ever-growing accumulator every batch:
@@ -392,38 +390,31 @@ object MonteCarloPpr {
       val tChunk = System.nanoTime()
       val chunkHi = math.min(effective, chunkLo + chunkSize)
       nChunks += 1
-      var walkers = walkOrigins
+      var (walkers, alive) = Materialize(walkOrigins
         .select(col("seed"), col("cur"),
-          explode(sequence(lit(chunkLo), lit(chunkHi - 1))).as("walkId"))
-        .localCheckpoint(true)
+          explode(sequence(lit(chunkLo), lit(chunkHi - 1))).as("walkId")))
       var step = 1
-      var alive = walkers.count()
-      maxInFlight = math.max(maxInFlight, alive)
+      maxInFlight = math.max(maxInFlight, alive.getLong(0))
       var batchAggs = List.empty[DataFrame]
-      while (alive > 0 && step <= maxSteps) {
+      while (alive.getLong(0) > 0 && step <= maxSteps) {
         val end = math.min(step + stepBatch - 1, maxSteps)
-        var stepFrames = List.empty[DataFrame]
-        val prevWalkers = walkers
+        var leaves = List.empty[DataFrame]
         var cur = walkers
-        var s = step
-        while (s <= end) {
-          cur = oneStep(cur, s).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          stepFrames ::= cur
-          s += 1
-        }
-        walkers = cur.localCheckpoint(true) // ONE action materializes the batch
-        alive = walkers.count()             // cheap on the checkpointed blocks
-        val batchVisits = stepFrames
+        for (s <- step until end) { cur = oneStep(cur, s).localCheckpoint(eager = false); leaves ::= cur }
+        // ONE job fills the batch's leaves and cuts its last step
+        val (next, m) = Materialize(oneStep(cur, end))
+        val batchVisits = (next :: leaves)
           .map(_.groupBy(col("seed"), col("cur").as("node")).agg(count(lit(1)).as("visits")))
           .reduce(_ union _)
           .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
-          .localCheckpoint(true) // reads the cached step frames; bounded depth
+          .localCheckpoint(true) // reads the filled step leaves; bounded depth
         batchAggs ::= batchVisits
-        stepFrames.foreach(_.unpersist(false))
-        IterativeEngine.freeCheckpointBlocks(prevWalkers)
+        Materialize.free(walkers :: leaves: _*)
+        walkers = next
+        alive = m
         step = end + 1
       }
-      IterativeEngine.freeCheckpointBlocks(walkers) // chunk done: all dead
+      Materialize.free(walkers) // chunk done: all dead
       val chunkAgg = batchAggs match {
         case Nil         => null
         case one :: Nil  => one
@@ -431,7 +422,7 @@ object MonteCarloPpr {
           val merged = many.reduce(_ union _)
             .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
             .localCheckpoint(true)
-          many.foreach(IterativeEngine.freeCheckpointBlocks)
+          Materialize.free(many: _*)
           merged
       }
       if (chunkAgg != null) chunkAggs ::= chunkAgg
@@ -448,7 +439,7 @@ object MonteCarloPpr {
             val m = many.reduce(_ union _)
               .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
               .localCheckpoint(true)
-            many.foreach(IterativeEngine.freeCheckpointBlocks)
+            Materialize.free(many: _*)
             m
         }
         if (merged != null) {
@@ -460,7 +451,7 @@ object MonteCarloPpr {
         }
       }
     }
-    walkOrigins.unpersist()
+    Materialize.free(walkOrigins)
 
     // ---- phase 1.5: walk baskets -----------------------------------------
     // fold the origin self-visits into the raw union of chunk partials
@@ -483,8 +474,8 @@ object MonteCarloPpr {
     // visitAgg is now superseded — free the blocks instead of waiting for
     // the ContextCleaner (the same pileup class the per-batch fix removed;
     // a many-chunk budget-bound run otherwise keeps nChunks frames cached)
-    if (visitAgg != null) IterativeEngine.freeCheckpointBlocks(visitAgg)
-    combine(edges, verts, adjList, adjPersisted, cfg, walkBaskets,
+    if (visitAgg != null) Materialize.free(visitAgg)
+    combine(edges, verts, adjList, adjLeaf, cfg, walkBaskets,
       McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective), ewOpt)
   }
 
@@ -616,8 +607,8 @@ object MonteCarloPpr {
     }.toDF("seed", "node", "score", "factor", "own")
     // materialize before the broadcasts can be dropped
     val result = scatteredCombine(rows, cfg).localCheckpoint(true)
-    bcFwd.unpersist(false)
-    bcRev.unpersist(false)
+    bcFwd.destroy()
+    bcRev.destroy()
     val nOrigins = walking.sum
     (result, McWalkStats(0L, 0, nOrigins, nOrigins * effective))
   }
@@ -658,7 +649,7 @@ object MonteCarloPpr {
     * Both drop seeds outside `verts`: an edge whose source is not a vertex
     * contributes to no basket. */
   private def combine(edges: DataFrame, verts: DataFrame,
-      adjList: DataFrame, adjPersisted: DataFrame, cfg: PprConfig,
+      adjList: DataFrame, adjLeaf: DataFrame, cfg: PprConfig,
       walkBaskets: DataFrame, stats: McWalkStats,
       ewOpt: Option[DataFrame]): (DataFrame, McWalkStats) = {
     val d = cfg.damping
@@ -702,9 +693,7 @@ object MonteCarloPpr {
     }
 
     val result = TopK.topKWindow(combined, cfg.K).localCheckpoint(true)
-    IterativeEngine.freeCheckpointBlocks(walkBaskets) // result materialized
-    IterativeEngine.freeCheckpointBlocks(adjPersisted)
-    ewOpt.foreach(_.unpersist())
+    Materialize.free(Seq(walkBaskets, adjLeaf) ++ ewOpt: _*) // result materialized
     (result, stats)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.Grid
+import graft.kernels.{Grid, Materialize}
 
 /** Global PageRank (north-rule extra; the reference computes only the
   * personalized variant — this is the classic teleport-to-all limit).
@@ -37,9 +37,9 @@ object PageRank {
   def runWithMetrics(edges: DataFrame, vertices: DataFrame,
       iterations: Int = 100, damping: Double = 0.85,
       tolerance: Double = 1e-6, quantize: Double = 0.0): IterativeEngine.Result =
-    // forLoop scope covers the adjacency persist too: a cached plan
-    // compiled under AQE reports opaque output partitioning, defeating the
-    // loop's co-partitioned join (IterTuning.forLoop scaladoc)
+    // forLoop scope covers the adjacency leaf too: a plan compiled under
+    // AQE reports opaque output partitioning, defeating the loop's
+    // co-partitioned join (IterTuning.forLoop scaladoc)
     graft.kernels.IterTuning.forLoop(edges.sparkSession) {
       runInner(edges, vertices, iterations, damping, tolerance, quantize)
     }
@@ -49,19 +49,15 @@ object PageRank {
       tolerance: Double, quantize: Double): IterativeEngine.Result = {
     val spark = edges.sparkSession
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // the teleport base re-reads `vertices` EVERY superstep — persist the
-    // |V|-row id projection once instead of re-running the vertex-closure
-    // aggregation (2 scans + 3 exchanges per superstep at bench scale;
-    // plans/r07/sup_before/q_pagerank_superstep.txt) (guide §2.4). A caller's
-    // cached single-`id` frame is the same plan to the CacheManager: reuse
-    // it, and leave its cache entry alone at the end
-    val ids = vertices.select(col("id"))
-    val ownVerts = ids.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val verts = if (ownVerts) ids.persist() else ids
-    def release(): Unit = if (ownVerts) verts.unpersist()
+    // the teleport base re-reads `vertices` EVERY superstep — cut the
+    // |V|-row id projection to a leaf once instead of re-running the
+    // vertex-closure aggregation (2 scans + 3 exchanges per superstep at
+    // bench scale; plans/r07/sup_before/q_pagerank_superstep.txt) (guide
+    // §2.4). The count fills it; a leaf never touches a caller's cache entry
+    val verts = vertices.select(col("id")).localCheckpoint(eager = false)
     val n = verts.count()
     if (n == 0) {
-      release()
+      Materialize.free(verts)
       return IterativeEngine.Result(
         vertices.select(lit(0L).as("seed"), col("id").as("node"), lit(0.0).as("score")),
         Vector.empty)
@@ -91,12 +87,12 @@ object PageRank {
         (if (weighted) lit(damping) * col("weight") / col("norm")
          else lit(damping) / col("norm")).as("factor"))
       .repartition(shufflePartitions, col("src"))
-      .persist()
+      .localCheckpoint(eager = false)
     // dangling (no positive-outgoing-mass) vertex set, computed once — the
     // per-superstep leak aggregate only semi-joins against THIS (usually
     // small) relation instead of the full degree table
     val dangling = verts.join(srcNorm, verts("id") === srcNorm("src"), "left_anti")
-      .select(col("id")).persist()
+      .select(col("id")).localCheckpoint(eager = false)
 
     val init = verts.select(lit(0L).as("seed"), col("id").as("node"),
       lit(1.0 / n).as("score"))
@@ -121,7 +117,7 @@ object PageRank {
     }
 
     val res = IterativeEngine.run(init, superstep, iterations, tolerance)
-    adj.unpersist(); dangling.unpersist(); release()
+    Materialize.free(adj, dangling, verts)
     res
   }
 }

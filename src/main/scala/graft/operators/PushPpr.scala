@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.Grid
+import graft.kernels.{Grid, Materialize}
 
 /** Forward-push personalized PageRank (Andersen–Chung–Lang local push,
   * FOCS'06), in its SYNCHRONOUS batched form: every superstep pushes ALL
@@ -83,8 +83,9 @@ object PushPpr {
     val weighted = edges.columns.contains("weight")
     val pos = if (weighted) edges.where(col("weight") > 0) else edges
 
-    // loop-invariant sides pre-partitioned on their join keys once: the
-    // per-superstep joins then re-shuffle only the (smaller) state side
+    // loop-invariant sides pre-partitioned on their join keys once, as
+    // leaves the first superstep fills: the per-superstep joins then
+    // re-shuffle only the (smaller) state side
     val outdeg = pos.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val adjBase =
       if (weighted) {
@@ -94,9 +95,9 @@ object PushPpr {
       } else
         pos.join(outdeg, "src")
           .select(col("src"), col("dst"), (lit(damping) / col("deg")).as("factor"))
-    val adj = adjBase.repartition(col("src")).persist()
+    val adj = adjBase.repartition(col("src")).localCheckpoint(eager = false)
     val degs = outdeg.select(col("src").as("node"), col("deg"))
-      .repartition(col("node")).persist()
+      .repartition(col("node")).localCheckpoint(eager = false)
 
     def qsum(c: String) =
       if (quantize > 0) (sum(Grid.roundLong(col(c) * quantize)) / quantize).as(c)
@@ -125,7 +126,7 @@ object PushPpr {
     }
 
     val res = IterativeEngine.run(init, superstep, iterations, tolerance)
-    adj.unpersist(); degs.unpersist()
+    Materialize.free(adj, degs)
     res
   }
 }

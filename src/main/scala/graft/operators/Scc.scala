@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.IterTuning
+import graft.kernels.{IterTuning, Materialize}
 
 /** Strongly connected components and the web bow-tie decomposition
   * (Broder et al., "Graph structure in the web", 2000) — the directed-graph
@@ -44,30 +44,22 @@ import graft.kernels.IterTuning
   * gather shape; a 10^7-in-degree hub's incoming labels partial-aggregate
   * before the shuffle). The convergence probe is label monotonicity: the
   * exact DECIMAL(38,0) label sum strictly decreases until the fixpoint —
-  * one 1-row aggregation per round, no compare join. Propagation rounds
-  * are bounded by the in-class forward diameter — small for web graphs
+  * observed on the round's own checkpoint job, no compare join. Propagation
+  * rounds are bounded by the in-class forward diameter — small for web graphs
   * (effective diameter O(log n)); refinement rounds by the
   * reachability-class structure, a handful for the web's bow tie (driver
   * fixture: 6 refinement rounds, ≤26 propagation rounds).
   *
-  * Every lineage cut routes through StatsBarrier.statsBarrier: this
+  * Every lineage cut is read through StatsBarrier.statsBarrier: this
   * operator is the worst case of Spark 4's localCheckpoint stats-carry
   * pathology (cand = fwd ⋈ bwd and e ⋈ active ⋈ active double the carried
   * sizeInBytes BigInt's bit-length at every cut; measured 0.4 s → 76 s per
   * superstep before the barrier — see StatsBarrier's Scaladoc).
+  * `Materialize.free` on a barrier view frees the checkpoint behind it.
   */
 object Scc {
 
   import org.apache.spark.sql.graft.StatsBarrier.statsBarrier
-
-  /** A lineage cut: `frame` is the stats-fresh view downstream code reads;
-    * `blocks` owns the checkpoint blocks for freeing. */
-  private final case class Cut(frame: DataFrame, blocks: DataFrame)
-  private def cut(df: DataFrame): Cut = {
-    val ck = df.localCheckpoint(true)
-    Cut(statsBarrier(ck), ck)
-  }
-  private def free(c: Cut): Unit = IterativeEngine.freeCheckpointBlocks(c.blocks)
 
   /** (id, scc) with scc = minimum vertex id of v's strongly connected
     * component. Self-loops are irrelevant to SCC membership and dropped.
@@ -86,53 +78,51 @@ object Scc {
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
       resume: Boolean = false, labelDoubling: Boolean = true): DataFrame =
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
-      val e0 = cut(edges
+      val e0 = statsBarrier(edges
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .dropDuplicates("src", "dst"))
-      var active = cut(vertices.select(col("id").cast("long").as("id"),
-        lit(0L).as("cf"), lit(0L).as("cb")))
+        .dropDuplicates("src", "dst").localCheckpoint(true))
       var finalized = List.empty[DataFrame]
       var round = 0
-      if (resume) checkpoint.flatMap(_.latest(edges.sparkSession)).foreach { case (i, df) =>
-        round = i
-        val loaded = df.localCheckpoint(true)
-        finalized = List(loaded.where(col("done")).select(col("id"), col("a").as("scc")))
-        val prev = active
-        active = cut(loaded.where(!col("done"))
-          .select(col("id"), col("a").as("cf"), col("b").as("cb")))
-        free(prev)
+      val open = checkpoint.filter(_ => resume).flatMap(_.latest(edges.sparkSession)) match {
+        case Some((i, df)) =>
+          round = i
+          val loaded = df.localCheckpoint(true)
+          finalized = List(loaded.where(col("done")).select(col("id"), col("a").as("scc")))
+          loaded.where(!col("done")).select(col("id"), col("a").as("cf"), col("b").as("cb"))
+        case None =>
+          vertices.select(col("id").cast("long").as("id"), lit(0L).as("cf"), lit(0L).as("cb"))
       }
-      var activeCount = active.frame.count()
+      // the open-vertex count is observed on each `active` cut
+      val (ck, observed) = Materialize(open)
+      var active = statsBarrier(ck)
+      var activeCount = observed.getLong(0)
       var history = Vector.empty[IterMetrics]
       while (activeCount > 0 && round < maxRefineRounds) {
         val tRound = System.nanoTime()
-        val a1 = active.frame.select(col("id").as("sid"), col("cf").as("scf"), col("cb").as("scb"))
-        val a2 = active.frame.select(col("id").as("did"), col("cf").as("dcf"), col("cb").as("dcb"))
-        val eAct = cut(e0.frame
-          .join(a1, e0.frame("src") === a1("sid"))
-          .join(a2, e0.frame("dst") === a2("did"))
+        val a1 = active.select(col("id").as("sid"), col("cf").as("scf"), col("cb").as("scb"))
+        val a2 = active.select(col("id").as("did"), col("cf").as("dcf"), col("cb").as("dcb"))
+        val eAct = statsBarrier(e0
+          .join(a1, e0("src") === a1("sid"))
+          .join(a2, e0("dst") === a2("did"))
           .where(col("scf") === col("dcf") && col("scb") === col("dcb"))
-          .select(col("src"), col("dst")))
-        val cand = cut(biMinPropagate(eAct.frame, active.frame.select(col("id")),
-          maxPropagateRounds, labelDoubling))
-        free(eAct)
-        // finalized frames are kept alive to the end — only their Cut
-        // bookkeeping wrapper is dropped
-        finalized ::= cut(cand.frame.where(col("f") === col("b"))
-          .select(col("id"), col("f").as("scc"))).frame
-        val prevActive = active
-        active = cut(cand.frame.where(col("f") =!= col("b"))
+          .select(col("src"), col("dst")).localCheckpoint(true))
+        val cand = biMinPropagate(eAct, active.select(col("id")), maxPropagateRounds, labelDoubling)
+        Materialize.free(eAct)
+        // finalized frames are kept alive to the end
+        finalized ::= statsBarrier(cand.where(col("f") === col("b"))
+          .select(col("id"), col("f").as("scc")).localCheckpoint(true))
+        val (next, m) = Materialize(cand.where(col("f") =!= col("b"))
           .select(col("id"), col("f").as("cf"), col("b").as("cb")))
-        free(prevActive)
-        free(cand)
-        activeCount = active.frame.count()
+        Materialize.free(active, cand)
+        active = statsBarrier(next)
+        activeCount = m.getLong(0)
         round += 1
         if (checkpointEvery > 0 && checkpoint.isDefined && round % checkpointEvery == 0) {
           val snapshot = finalized
             .map(_.select(col("id"), lit(true).as("done"),
               col("scc").as("a"), lit(null).cast("long").as("b")))
-            .foldLeft(active.frame.select(col("id"), lit(false).as("done"),
+            .foldLeft(active.select(col("id"), lit(false).as("done"),
               col("cf").as("a"), col("cb").as("b")))(_ union _)
           val m = IterMetrics(round, Double.NaN, activeCount, (System.nanoTime() - tRound) / 1000000)
           history :+= m
@@ -141,7 +131,7 @@ object Scc {
       }
       require(activeCount == 0,
         s"SCC refinement did not converge within $maxRefineRounds rounds ($activeCount vertices open)")
-      free(e0)
+      Materialize.free(e0, active)
       finalized.reduce(_ union _)
     }
 
@@ -162,25 +152,28 @@ object Scc {
       maxPropagateRounds: Int = 500,
       precomputedScc: Option[DataFrame] = None): DataFrame =
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
+      val own = Option.when(precomputedScc.isEmpty)(
+        scc(edges, vertices, maxRefineRounds, maxPropagateRounds))
       val comp = precomputedScc
         .map(_.select(col("id").cast("long").as("id"), col("scc").cast("long").as("scc")))
-        .getOrElse(scc(edges, vertices, maxRefineRounds, maxPropagateRounds))
+        .orElse(own).get
         .localCheckpoint(true)
+      own.foreach(Materialize.free(_)) // its rows live on in comp
       // largest SCC, ties to min id — combinable min-struct argmax, then one
       // 1-row action (the audited driver-scalar pattern)
       val coreRow = comp.groupBy(col("scc")).agg(count(lit(1)).as("n"))
         .agg(min(struct((-col("n")).as("negN"), col("scc").as("s"))).as("best"))
         .head()
       val core = coreRow.getStruct(0).getLong(1)
-      val e0 = cut(edges
+      val e0 = statsBarrier(edges
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .dropDuplicates("src", "dst"))
+        .dropDuplicates("src", "dst").localCheckpoint(true))
       val ids = vertices.select(col("id").cast("long").as("id"))
       // dir 0: flood along edges (descendants of core = OUT ∪ CORE);
       // dir 1: flood along reversed edges (ancestors = IN ∪ CORE)
-      val reach = biReachableFrom(e0.frame, ids, core, maxPropagateRounds)
-      free(e0)
+      val reach = biReachableFrom(e0, ids, core, maxPropagateRounds)
+      Materialize.free(e0)
       comp
         .join(reach, Seq("id"), "left")
         .select(col("id"),
@@ -198,7 +191,7 @@ object Scc {
   /** Fused forward/backward min-label propagation: lab(v, dir) starts at v;
     * each superstep lab(v, dir) ← min(lab(v, dir), dir-tagged in-neighbor
     * labels) as ONE union + map-side-combinable min aggregation. Returns
-    * (id, f, b).
+    * (id, f, b), cut and read through the stats barrier.
     *
     * `doubling` adds a pointer-doubling hop per round (VERDICT r5 #6 — the
     * round-BATCHING experiment was measured slower and reverted; this is
@@ -211,53 +204,47 @@ object Scc {
     * dominate — measured on the bench graphs, recorded in BASELINE.md. */
   private def biMinPropagate(e: DataFrame, verts: DataFrame, maxRounds: Int,
       doubling: Boolean = false): DataFrame = {
-    val eBi = cut(biEdges(e))
-    var state = cut(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))
-      .select(col("id"), col("dir"), col("id").as("lab")))
-    def labSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("lab").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    val debug = sys.env.get("SPARK_GRAFT_ITER_DEBUG").contains("1")
-    var prevSum = labSum(state.frame)
+    val eBi = statsBarrier(biEdges(e).localCheckpoint(true))
+    // the exact label sum is observed on each state cut (null on no rows)
+    val labSum = sum(col("lab").cast("decimal(38,0)"))
+    val (ck, s0) = Materialize(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))
+      .select(col("id"), col("dir"), col("id").as("lab")), labSum)
+    var state = statsBarrier(ck)
+    var prevSum = s0.get(1)
     var moving = true
     var i = 0
     while (moving && i < maxRounds) {
-      val t0 = System.nanoTime()
-      val gathered = state.frame
-        .join(eBi.frame, state.frame("id") === eBi.frame("src") &&
-          state.frame("dir") === eBi.frame("dir"))
-        .select(eBi.frame("dst").as("id"), eBi.frame("dir").as("dir"), col("lab"))
+      val gathered = state
+        .join(eBi, state("id") === eBi("src") && state("dir") === eBi("dir"))
+        .select(eBi("dst").as("id"), eBi("dir").as("dir"), col("lab"))
       val contributions =
-        if (!doubling) state.frame.union(gathered)
+        if (!doubling) state.union(gathered)
         else {
           // pointer-doubling hop: follow v's current label to ITS label —
           // lab(v)=u and lab(u)=w imply w ⇝ u ⇝ v in this direction
-          val s2 = state.frame.select(col("id").as("lid"), col("dir").as("ldir"),
+          val s2 = state.select(col("id").as("lid"), col("dir").as("ldir"),
             col("lab").as("llab"))
-          val hop = state.frame
-            .join(s2, state.frame("lab") === s2("lid") && state.frame("dir") === s2("ldir"))
-            .select(state.frame("id"), state.frame("dir"), col("llab").as("lab"))
-          state.frame.union(gathered).union(hop)
+          val hop = state
+            .join(s2, state("lab") === s2("lid") && state("dir") === s2("ldir"))
+            .select(state("id"), state("dir"), col("llab").as("lab"))
+          state.union(gathered).union(hop)
         }
-      val next = cut(contributions
+      val (next, m) = Materialize(contributions
         .groupBy(col("id"), col("dir"))
-        .agg(min(col("lab")).as("lab")))
-      val tMat = System.nanoTime()
-      val curSum = labSum(next.frame)
-      moving = curSum.compareTo(prevSum) != 0
-      prevSum = curSum
-      free(state)
-      state = next
+        .agg(min(col("lab")).as("lab")), labSum)
+      moving = m.get(1) != prevSum
+      prevSum = m.get(1)
+      Materialize.free(state)
+      state = statsBarrier(next)
       i += 1
-      if (debug) System.err.println(s"SCCDEBUG prop round=$i mat=${(tMat - t0) / 1000000}ms " +
-        s"probe=${(System.nanoTime() - tMat) / 1000000}ms")
     }
     require(!moving, s"min-label propagation still moving after $maxRounds rounds")
-    free(eBi)
-    state.frame.groupBy(col("id"))
+    val labels = statsBarrier(state.groupBy(col("id"))
       .agg(min(when(col("dir") === 0, col("lab"))).as("f"),
         min(when(col("dir") === 1, col("lab"))).as("b"))
+      .localCheckpoint(true))
+    Materialize.free(eBi, state)
+    labels
   }
 
   /** Fused bidirectional reachability flood from `root`:
@@ -266,33 +253,31 @@ object Scc {
     * reached-count is the convergence probe. */
   private def biReachableFrom(e: DataFrame, verts: DataFrame, root: Long,
       maxRounds: Int): DataFrame = {
-    val eBi = cut(biEdges(e))
-    var state = cut(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))
-      .select(col("id"), col("dir"), (col("id") === root).cast("int").as("reach")))
-    def reachedCount(df: DataFrame): Long = {
-      val r = df.agg(sum(col("reach"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    var prevReached = reachedCount(state.frame)
+    val eBi = statsBarrier(biEdges(e).localCheckpoint(true))
+    // the reached count is observed on each state cut (null on no rows)
+    val reached = sum(col("reach"))
+    val (ck, r0) = Materialize(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))
+      .select(col("id"), col("dir"), (col("id") === root).cast("int").as("reach")), reached)
+    var state = statsBarrier(ck)
+    var prevReached = r0.get(1)
     var moving = true
     var i = 0
     while (moving && i < maxRounds) {
-      val front = state.frame.where(col("reach") === 1)
+      val front = state.where(col("reach") === 1)
       val gathered = front
-        .join(eBi.frame, front("id") === eBi.frame("src") && front("dir") === eBi.frame("dir"))
-        .select(eBi.frame("dst").as("id"), eBi.frame("dir").as("dir"), front("reach"))
-      val next = cut(state.frame.union(gathered)
+        .join(eBi, front("id") === eBi("src") && front("dir") === eBi("dir"))
+        .select(eBi("dst").as("id"), eBi("dir").as("dir"), front("reach"))
+      val (next, m) = Materialize(state.union(gathered)
         .groupBy(col("id"), col("dir"))
-        .agg(max(col("reach")).as("reach")))
-      val cur = reachedCount(next.frame)
-      moving = cur != prevReached
-      prevReached = cur
-      free(state)
-      state = next
+        .agg(max(col("reach")).as("reach")), reached)
+      moving = m.get(1) != prevReached
+      prevReached = m.get(1)
+      Materialize.free(state)
+      state = statsBarrier(next)
       i += 1
     }
-    free(eBi)
-    state.frame.groupBy(col("id"))
+    Materialize.free(eBi)
+    state.groupBy(col("id"))
       .agg(max(when(col("dir") === 0, col("reach"))).as("f0"),
         max(when(col("dir") === 1, col("reach"))).as("t0"))
       .select(col("id"), (coalesce(col("f0"), lit(0)) === 1).as("fromCore"),

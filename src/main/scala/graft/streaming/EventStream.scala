@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.kernels.Grid
+import graft.kernels.{Grid, Materialize}
 
 /** Structured-Streaming operators over the `events` table shape
   * (event_id, ts TIMESTAMP, user_id, event_type, value, props).
@@ -121,14 +121,15 @@ object EventStream {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      val top = batch.orderBy(col("ts").desc).limit(1).persist()
+      // one row both sentinel writes copy: a leaf the first write fills
+      val top = batch.orderBy(col("ts").desc).limit(1).localCheckpoint(eager = false)
       for (days <- Seq(100, 200)) {
         top.withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
           .withColumn("user_id", lit(sentinel))
           .write.mode("append").parquet(dir)
         q.processAllAvailable()
       }
-      top.unpersist()
+      Materialize.free(top)
     } finally q.stop()
     drainSink(spark, name, dir, _.where(col("user_id") =!= sentinel))
   }

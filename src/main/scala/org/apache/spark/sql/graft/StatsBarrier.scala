@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Spark-internal escape hatch for an iterative-plan pathology.
   *
@@ -21,9 +22,9 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
   * `rewriteStatsAndConstraints`).
   *
   * [[statsBarrier]] rebuilds a frame as a fresh `LogicalRDD` WITHOUT the
-  * stats rewrite: the physical `InternalRow` RDD is reused as-is — zero
-  * copy, no re-encoding, same partitioning data — and the statistics reset
-  * to the session default estimate. Loops that compound multiplicatively
+  * stats rewrite: the checkpointed `InternalRow` RDD itself is reused —
+  * zero copy, no re-encoding, same partitioning data — and the statistics
+  * reset to the session default estimate. Loops that compound multiplicatively
   * call it right after each lineage cut; the default (conservative, huge)
   * estimate merely disables broadcast choices inside the loop, which these
   * tiny-state loops never want anyway.
@@ -35,26 +36,28 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 object StatsBarrier {
 
   /** `df` re-wrapped as a stats-fresh LogicalRDD over the same rows.
-    * NOTE: the result reads the same underlying blocks as `df` — freeing
-    * df's checkpoint blocks invalidates both. NOTE also: unlike Spark 4's
-    * localCheckpoint (which preserves hash output partitioning — the
-    * engine's ScheduleSpec-gated exchange-reuse contract), the rebuilt
+    * NOTE: the view's LogicalRDD holds df's checkpointed RDD, so
+    * `graft.kernels.Materialize.free` on either one frees the blocks both
+    * read. NOTE also: unlike Spark 4's localCheckpoint (which preserves
+    * hash output partitioning — the engine's ScheduleSpec-gated
+    * exchange-reuse contract), the rebuilt
     * LogicalRDD reports UNKNOWN partitioning, so downstream joins on the
     * old key re-shuffle. Use the barrier only in loops whose join keys
     * change round to round anyway (SCC refinement, star contraction) — NOT
     * in the iterative engine's superstep loop, which reuses the state's
     * partitioning. */
   def statsBarrier(df: DataFrame): DataFrame = {
-    // the "apply only after localCheckpoint" usage rule, enforced: on a
-    // non-materialized frame, toRdd would hand back the UNexecuted physical
-    // RDD — every action on the rebuilt LogicalRDD would re-run the whole
-    // upstream plan (and a nondeterministic source could produce
-    // inconsistent reads across those re-runs). A checkpointed frame
-    // analyzes to a bare LogicalRDD; anything else is a misuse (ADVICE r5).
-    require(df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-      "statsBarrier requires an already-materialized frame " +
-        s"(df.localCheckpoint(true) first); got plan ${df.queryExecution.analyzed.nodeName}")
-    val spark = df.sparkSession.asInstanceOf[ClassicSession]
-    spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
+    // the "apply only after localCheckpoint" usage rule, enforced: a
+    // non-materialized frame has no RDD of its rows, and re-wrapping its
+    // physical plan would re-run the whole upstream plan on every action
+    // (and a nondeterministic source could produce inconsistent reads
+    // across those re-runs). A checkpointed frame analyzes to a bare
+    // LogicalRDD; anything else is a misuse (ADVICE r5).
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        df.sparkSession.asInstanceOf[ClassicSession].internalCreateDataFrame(l.rdd, df.schema)
+      case p => throw new IllegalArgumentException("statsBarrier requires an already-" +
+        s"materialized frame (df.localCheckpoint(true) first); got plan ${p.nodeName}")
+    }
   }
 }

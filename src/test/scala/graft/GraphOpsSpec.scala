@@ -160,7 +160,8 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
       PageRank.runWithMetrics(edgesDf(es), verticesDf(vids), iterations = 6,
         tolerance = -1, quantize = 1e12).state.collect()
     }
-    val steps = plans.filter(_.description.contains("Iterative.scala")).drop(1) // the init cut first
+    // the superstep cuts (the engine's init cut runs in Iterative.scala)
+    val steps = plans.filter(_.description.contains("Materialize.scala"))
     assert(steps.size == 6, plans.map(_.description).mkString(" | "))
     for ((p, i) <- steps.zipWithIndex) {
       val joins = p.nodes.filter(_.nodeName == "ShuffledHashJoin")
@@ -451,5 +452,85 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
     val t2 = GraphStats.transitivity(edgesDf(Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L)))).head()
     assert(t2.getLong(0) == 5L && t2.getLong(1) == 1L)
     assert(math.abs(t2.getDouble(2) - 0.6) < 1e-15)
+  }
+
+  // ---- materialized state ---------------------------------------------------
+  /** RDD ids a frame's plan can still read: the RDD of every LogicalRDD in
+    * it and their dependencies. A stats-barrier view reads its checkpoint
+    * through one map over the checkpointed RDD, so plan leaves alone miss
+    * it. */
+  private def lineage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    def walk(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      r.dependencies.map(_.rdd).toSet.flatMap(walk) + r.id
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.toSet.flatMap(walk)
+  }
+
+  private def cacheEntries(): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[IndexedSeq[_]].size
+  }
+
+  test("operators leave no materialized state behind but what their result reads") {
+    import graft.functions.TextAnalysis
+    import graft.model.PprConfig
+    import graft.operators._
+    val e = edgesDf(randomGraph(30, 120, seed = 37))
+    val vs = verticesDf(0L until 32L)
+    val ew = e.withColumn("weight", (col("src") % 3 + 1).cast("long"))
+    val seeds = verticesDf(Seq(0L, 5L, 9L))
+    val tele = seeds.select(col("id"), lit(1.0 / 3).as("mass"))
+    val docs = graft.sources.Synth.documents(spark, 40)
+    val cfg = PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12)
+    val ops: Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      "pagerank" -> (() => Seq(PageRank.run(e, vs, 4, tolerance = -1))),
+      "pagerank weighted" -> (() => Seq(PageRank.run(ew, vs, 4, tolerance = 1e-3))),
+      "hits" -> (() => Seq(Hits.run(e, vs, 3, tolerance = -1))),
+      "scc" -> (() => Seq(Scc.scc(e, vs))),
+      "bowtie" -> (() => Seq(Scc.bowtie(e, vs))),
+      "hyperball registers" -> (() => Seq(HyperBall.registers(e, vs, 3))),
+      "hyperball sweep" -> (() => HyperBall.sweep(e, vs, 3)),
+      "kcore" -> (() => Seq(KCore.coreness(e, vs, 4))),
+      "cc star" -> (() => Seq(Components.connectedComponents(e, vs))),
+      "cc min-id" -> (() => Seq(Components.connectedComponentsMinId(e, vs))),
+      "label propagation" -> (() => Seq(Components.labelPropagation(e, vs, 3))),
+      "twoColoring" -> (() => Seq(Components.twoColoring(e, vs))),
+      "twoColoringContract" -> (() => Seq(Components.twoColoringContract(e, vs))),
+      "exact ppr" -> (() => Seq(ExactPpr.run(e, seeds, 4, tolerance = -1))),
+      "exact ppr vector" -> (() => Seq(ExactPpr.runVector(e, tele, 4, tolerance = -1))),
+      "push ppr" -> (() => Seq(PushPpr.run(e, seeds, 1e-3, 5).state)),
+      "grank" -> (() => Seq(GRank.run(e, vs, cfg))),
+      "grank partitioned" -> (() => Seq(GRank.run(e, vs, cfg.copy(partitionedSchedule = true)))),
+      "mc join" -> (() => Seq(MonteCarloPpr.run(e, vs, cfg.copy(iterations = 10), maxSteps = 12,
+        walkMode = "join", walkerBudget = 100L))),
+      "mc join weighted" -> (() => Seq(MonteCarloPpr.run(ew, vs, cfg.copy(iterations = 10),
+        maxSteps = 12, walkMode = "join"))),
+      "walkTrace" -> (() => Seq(MonteCarloPpr.walkTrace(e, vs, 2, 3))),
+      "wedgeCounts" -> (() => Seq(Triangles.wedgeCounts(e))),
+      "triangles" -> (() => Seq(Triangles.countAll(e), Triangles.countByDegreeOrder(e))),
+      "graph stats" -> (() => Seq(GraphStats.reciprocity(e), GraphStats.assortativity(e),
+        GraphStats.transitivity(e))),
+      "unigramLogprob" -> (() => Seq(TextAnalysis.unigramLogprob(docs))),
+      "tfidf" -> (() => Seq(TextAnalysis.tfidfTopTerms(docs))),
+      "pmi" -> (() => Seq(TextAnalysis.pmiBigrams(docs, minCount = 2))),
+      "repetition" -> (() => Seq(TextAnalysis.repetitionStats(docs))))
+    val sc = spark.sparkContext
+    val failures = ops.flatMap { case (name, op) =>
+      val (entries, persisted) = (cacheEntries(), sc.getPersistentRDDs.keySet)
+      val out = op()
+      val reads = out.flatMap(lineage).toSet
+      val left = sc.getPersistentRDDs.keySet -- persisted
+      val stray = left -- reads
+      val msg =
+        (if (cacheEntries() != entries) Seq(s"$name: ${cacheEntries() - entries} CacheManager entries added") else Nil) ++
+        (if (stray.nonEmpty) Seq(s"$name: ${stray.size} persisted RDDs the result cannot read") else Nil)
+      out.foreach(_.collect()) // the result still reads its blocks
+      left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      msg
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Grid, Metrics, TopK}
+import graft.kernels.{Grid, Materialize, Metrics, TopK}
 
 /** Kernel laws from the reference's unit suites (SURVEY.md §5 tier 1). */
 class KernelsSpec extends AnyFunSuite with GraphFixtures {
@@ -149,5 +149,34 @@ class KernelsSpec extends AnyFunSuite with GraphFixtures {
     val got = Metrics.kendallPerSeed(pairs).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 1.0, 2L -> -1.0))
+  }
+
+  // ---- Materialize ----------------------------------------------------------
+  test("materialize: one job checkpoints and observes the row count and metrics; empty frames read as SQL") {
+    val df = stateDf((1L to 40L).map(i => (i % 3, i, i * 0.5))).repartition(4)
+    val ((ck, row), jobs) = org.apache.spark.grafttest.JobCounter.jobs(spark.sparkContext)(
+      Materialize(df, sum(col("node")), max(col("score"))))
+    assert(jobs.size == 1, jobs.mkString(" | "))
+    assert(row.toSeq == Seq(40L, 820L, 20.0))
+    assert(ck.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    assert(ck.count() == 40)
+    for (empty <- Seq(df.where(col("node") < 0), spark.emptyDataFrame.select(lit(1L).as("node")))) {
+      val (e, r) = Materialize(empty, sum(col("node")))
+      assert(r.getLong(0) == 0L && r.isNullAt(1))
+      assert(e.count() == 0)
+    }
+  }
+
+  test("materialize: free drops a checkpoint's blocks, through a stats-barrier view too") {
+    import org.apache.spark.sql.graft.StatsBarrier.statsBarrier
+    val sc = spark.sparkContext
+    def persisted() = sc.getPersistentRDDs.keySet
+    val before = persisted()
+    val (ck, _) = Materialize(stateDf(Seq((1L, 2L, 3.0), (4L, 5L, 6.0))))
+    val lazyLeaf = stateDf(Seq((7L, 8L, 9.0))).localCheckpoint(eager = false)
+    val view = statsBarrier(Materialize(stateDf(Seq((1L, 1L, 1.0))))._1)
+    assert((persisted() -- before).size == 3)
+    Materialize.free(ck.select(col("seed")), lazyLeaf, view)
+    assert((persisted() -- before).isEmpty)
   }
 }

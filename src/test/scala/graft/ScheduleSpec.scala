@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.kernels.TopK
 import graft.model.PprConfig
 import graft.functions.Dedup
-import graft.operators.{Components, ExactPpr, GRank, MonteCarloPpr}
+import graft.operators.{Components, ExactPpr, GRank, Hits, HyperBall, KCore, MonteCarloPpr, Scc}
 import org.apache.spark.grafttest.{JobCounter, SqlPlans}
 
 /** G5 partitioned schedule + physical-plan and parallelism-invariance
@@ -132,13 +132,80 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
         PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12, saltThreshold = 2, saltBuckets = 3),
         PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12, partitionedSchedule = true))) {
       val (_, plans) = SqlPlans.capture(spark.sparkContext)(GRank.run(e, vs, cfg).collect())
-      // the init cut and one cut per superstep
-      val loop = plans.filter(_.description.contains("Iterative.scala"))
+      // the engine's init cut (Iterative.scala) and one cut per superstep
+      // (Materialize.scala); the 2-coloring's cuts run before the init cut
+      val loop = plans.dropWhile(!_.description.contains("Iterative.scala"))
+        .filter(d => d.description.contains("Iterative.scala") || d.description.contains("Materialize.scala"))
       assert(loop.size == 1 + cfg.iterations, s"$cfg: ${plans.map(_.description).mkString(" | ")}")
       for (p <- loop) assert(!p.nodes.exists(_.nodeName.startsWith("InMemoryTableScan")),
         s"$cfg: a loop plan scans a cached relation:\n${p.plan}")
     }
     e.unpersist(); vs.unpersist()
+  }
+
+  /** Spark jobs `body` starts on the 32-vertex, 120-edge job-gate fixture. */
+  private def gateJobs(body: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => Any): Seq[String] = {
+    val e = edgesDf(randomGraph(30, 120, seed = 37)).persist()
+    val vs = verticesDf(0L until 32L).persist()
+    e.count(); vs.count()
+    try JobCounter.jobs(spark.sparkContext)(body(e, vs))._2
+    finally { e.unpersist(); vs.unpersist() }
+  }
+
+  test("job-count gate: HITS normalizers ride the gather checkpoints") {
+    // set-up is the vertex count and the init cut, then per iteration the
+    // authority gather, the hub gather and the engine's cut; the collect
+    for (it <- Seq(2, 4)) {
+      val jobs = gateJobs((e, vs) => Hits.run(e, vs, it, tolerance = -1, quantize = 1e12).collect())
+      assert(jobs.size == 3 * it + 3, s"HITS, $it iterations: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    }
+  }
+
+  test("job-count gate: SCC and HyperBall fixpoint probes ride the checkpoint they read") {
+    // SCC: 13 cuts (the active count and the label sum are observed on
+    // them) and the collect; the parent ran 8 probe jobs more
+    val scc = gateJobs((e, vs) => Scc.scc(e, vs).collect())
+    assert(scc.size == 14, s"SCC: ${scc.size} jobs: ${scc.mkString(" | ")}")
+    // HyperBall: the init cut and est_0, then per round the register cut
+    // (its fingerprint observed), the adjacency broadcast and est_t
+    for (r <- Seq(2, 4)) {
+      val hb = gateJobs((e, vs) => HyperBall.sweep(e, vs, r))
+      assert(hb.size == 3 * r + 2, s"HyperBall sweep, $r rounds: ${hb.size} jobs: ${hb.mkString(" | ")}")
+    }
+  }
+
+  test("job-count gate: label fixpoints count their changes on the round's checkpoint") {
+    // three rounds each: the init cut, then per round the state cut and
+    // its broadcast(s), and the collect; the parent ran one count job more
+    // per round
+    val minId = gateJobs((e, vs) => Components.connectedComponentsMinId(e, vs).collect())
+    assert(minId.size == 9, s"CC min-id: ${minId.size} jobs: ${minId.mkString(" | ")}")
+    val twoColor = gateJobs((e, vs) => Components.twoColoring(e, vs).collect())
+    assert(twoColor.size == 8, s"twoColoring: ${twoColor.size} jobs: ${twoColor.mkString(" | ")}")
+  }
+
+  test("job-count gate: walks count survivors on the walker checkpoint") {
+    // walkTrace: the origin cut, then per step the walker cut and the
+    // adjacency broadcast, and the collect (the parent counted the walkers
+    // after every cut: 13 jobs)
+    val trace = gateJobs((e, vs) => MonteCarloPpr.walkTrace(e, vs, 2, 3).collect())
+    assert(trace.size == 9, s"walkTrace, 3 steps: ${trace.size} jobs: ${trace.mkString(" | ")}")
+    // MC join engine: the edge count that picks the engine is the only
+    // count; origins, walkers and batch ends are observed on their cuts
+    val mc = gateJobs((e, vs) => MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, quantize = 1e12),
+      maxSteps = 24, walkMode = "join", walkerBudget = 200L).collect())
+    val counts = mc.filter(_.startsWith("count at"))
+    assert(counts.size == 1, s"MC join engine counts: ${counts.mkString(" | ")}")
+  }
+
+  test("job-count gate: the engine reads its row count off the superstep checkpoint (k-core, tolerance 0.5)") {
+    // per superstep the cut and the convergence norm (plus the gather's
+    // broadcast); k-core converges after 5 supersteps on this fixture. The
+    // parent counted the rows in one more job per superstep
+    for ((r, want) <- Seq(3 -> 13, 6 -> 19)) {
+      val jobs = gateJobs((e, vs) => KCore.coreness(e, vs, r).collect())
+      assert(jobs.size == want, s"k-core, $r rounds: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    }
   }
 
   test("job-count gate: dedup clusters run one job per contraction round") {
