@@ -280,14 +280,14 @@ object SparkEntry {
       MonteCarloPpr.run(e, v, PprConfig(K = 10, L = 20, iterations = 30,
         topLStrategy = "window", quantize = 1e12), maxSteps = 64)
     }),
-    // the non-broadcastable-adjacency (100-TB) walk engine, pinned — auto
-    // picks the local engine at driver scales, so without this row the
-    // chunked join path would only be ScalaTest-gated; same oracle (the
-    // walk replay is engine-agnostic)
+    // the non-broadcastable-adjacency (100-TB) walk engine, forced by a
+    // zero broadcast limit — at driver scales the adjacency fits it, so
+    // without this row the chunked join path would only be ScalaTest-gated;
+    // same oracle (the walk replay is engine-agnostic)
     "q_mc_ppr_join" -> ((s, dir) => {
       val (e, v) = graph(s, dir)
       MonteCarloPpr.run(e, v, PprConfig(K = 10, L = 20, iterations = 30,
-        topLStrategy = "window", quantize = 1e12), maxSteps = 64, walkMode = "join")
+        topLStrategy = "window", quantize = 1e12), maxSteps = 64, broadcastEdgeLimit = 0L)
     }),
     // the weight contract on the MC family (r6): weighted successor draws
     // in the walk phase + the per-edge combine factor d*w/sum_out w

@@ -35,8 +35,8 @@ object Sketch {
     * Choosing p: the estimate's standard error is ±1.04/√m with m = 2^p
     * registers (Flajolet et al. 2007, Thm 1) — p=8 → ±6.5%, p=10 → ±3.25%,
     * p=12 → ±1.6%, p=14 → ±0.8%; memory is m registers (≤ m rows here).
-    * Measured sweep vs exact countDistinct: BASELINE.md §HLL (PipeScaleSuite
-    * HLLSWEEP — observed error sits inside the bound at every p). */
+    * Measured sweep vs exact countDistinct: BASELINE.md §HLLSWEEP (the
+    * observed error sits inside the bound at every p). */
   def hllRegisters(values: DataFrame, valueCol: String, p: Int = 8,
       salt: Long = 42L): DataFrame = {
     require(p >= 4 && p <= 16, "p must be in [4, 16]")

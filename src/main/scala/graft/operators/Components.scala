@@ -168,19 +168,6 @@ object Components {
     state
   }
 
-  /** findPartitions — approximate 2-coloring by BFS over the undirected
-    * closure (include/internal/pprInternal.h:30-99): every unvisited root
-    * gets color 0 ("partition 1", :58-63); each newly visited neighbor takes
-    * the complement of its discoverer's color (:74-75). A proper 2-coloring
-    * iff the graph is bipartite, an approximation otherwise (thesis §4.1.1).
-    *
-    * Distributed formulation with identical results on bipartite graphs:
-    * color(v) = parity of the BFS distance from v's component's minimum-id
-    * vertex. On non-bipartite graphs a vertex reachable at both parities is
-    * assigned its SHORTEST-distance parity (deterministic; the reference's
-    * choice depends on hash-map iteration order — its own tests only assert
-    * partition SIZES on bipartite/star/complete fixtures). Returns (id, color).
-    */
   /** O(log n) 2-coloring via the DOUBLED-graph reduction — the 100-TB scale
     * path next to the diameter-round [[twoColoring]]: every vertex v splits
     * into (v, even) and (v, odd), and each undirected edge {u, w} becomes
@@ -234,6 +221,19 @@ object Components {
     (res, rounds)
   }
 
+  /** findPartitions — approximate 2-coloring by BFS over the undirected
+    * closure (include/internal/pprInternal.h:30-99): every unvisited root
+    * gets color 0 ("partition 1", :58-63); each newly visited neighbor takes
+    * the complement of its discoverer's color (:74-75). A proper 2-coloring
+    * iff the graph is bipartite, an approximation otherwise (thesis §4.1.1).
+    *
+    * Distributed formulation with identical results on bipartite graphs:
+    * color(v) = parity of the BFS distance from v's component's minimum-id
+    * vertex. On non-bipartite graphs a vertex reachable at both parities is
+    * assigned its SHORTEST-distance parity (deterministic; the reference's
+    * choice depends on hash-map iteration order — its own tests only assert
+    * partition SIZES on bipartite/star/complete fixtures). Returns (id, color).
+    */
   def twoColoring(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame = {
     val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
     // dist(v) starts at 0 for every vertex paired with root candidate = own id;

@@ -14,16 +14,15 @@ import graft.kernels.{Grid, Materialize, Mix}
   * distance / effective diameter on web-scale graphs where exact all-pairs
   * BFS is impossible.
   *
-  * Composition of two existing pieces: functions.Sketch's SQL-replayable
-  * HLL register layout (same mixer hash, same bin/ltrim rho idiom — INTEGER
-  * state throughout, so every round replays hash-exactly with no grid) and
-  * the shared IterativeEngine loop. State is relational (one row per
-  * non-empty (vertex, bucket)): |V|·2^p rows at most, merged with MAX —
-  * fully map-side combinable, the same property that makes plain HLL
-  * shard-mergeable. The engine column mapping is seed=vertex, node=bucket,
-  * score=rho, which makes the engine's L1 convergence norm equal the total
-  * register movement per round — 0 exactly at the ball fixpoint, so the
-  * standard tolerance gate (0.5 on integer registers) stops the loop.
+  * Built on functions.Sketch's SQL-replayable HLL register layout (same
+  * mixer hash, same bin/ltrim rho idiom — INTEGER state throughout, so
+  * every round replays hash-exactly with no grid). State is relational (one
+  * row per non-empty (vertex, bucket)): |V|·2^p rows at most, merged with
+  * MAX — fully map-side combinable, the same property that makes plain HLL
+  * shard-mergeable. ONE register loop ([[registerLoop]]) serves every
+  * entry point: it stops at the exact ball fixpoint, read off a (count,
+  * Σrho) fingerprint observed on each round's checkpoint, so a round costs
+  * no probe job of its own.
   *
   * 100-TB shape per round: one join of the register table against the
   * src-partitioned adjacency (gather successors' registers) + one
@@ -40,34 +39,9 @@ object HyperBall {
     * state is |V|·2^p register rows — the p knob trades one directly for
     * the other (Boldi & Vigna run p=4..12 at web scale for this reason). */
   def registers(edges: DataFrame, vertices: DataFrame, rounds: Int,
-      p: Int = 6, salt: Long = 42L, tolerance: Double = 0.5): DataFrame = {
-    require(rounds > 0, "rounds must be > 0")
-    require(p >= 4 && p <= 16, "p must be in [4, 16]")
-    val m = 1 << p
-    // forward-ball gather joins successors' registers on edge src
-    val adj = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("dst")).localCheckpoint(eager = false)
-
-    val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
-    val w = shiftright(h.cast("long"), p)
-    val rho = lit(31 - p + 1) - length(ltrim(bin(w), "0"))
-    // engine mapping: seed = vertex id, node = bucket, score = rho
-    val init = vertices.select(col("id").as("seed"),
-      pmod(h, lit(m.toLong)).cast("long").as("node"), rho.cast("double").as("score"))
-
-    def superstep(state: DataFrame, i: Int): DataFrame = {
-      val gathered = adj.join(state, adj("dst") === state("seed"))
-        .select(adj("src").as("seed"), col("node"), col("score"))
-      state.union(gathered)
-        .groupBy(col("seed"), col("node"))
-        .agg(max(col("score")).as("score"))
-    }
-
-    val res = IterativeEngine.run(init, superstep, rounds, tolerance)
-    Materialize.free(adj)
-    res.state.select(col("seed").as("id"), col("node").cast("int").as("bucket"),
-      col("score").cast("int").as("rho"))
-  }
+      p: Int = 6, salt: Long = 42L): DataFrame =
+    registerLoop(edges, vertices, rounds, p, salt)(_ => ())
+      .select(col("id"), col("bucket").cast("int").as("bucket"), col("rho"))
 
   /** Per-vertex ball-size estimates: (id, est DOUBLE on the 1e-6 grid,
     * filled) — Sketch's shared estimate math, grouped per vertex. */
@@ -82,18 +56,13 @@ object HyperBall {
   /** ONE register sweep shared by the whole HyperBall family (r7
     * optimization, the scc+bowtie composition pattern): the per-round
     * estimate frames est_0..est_rounds as (id, est, filled), each
-    * localCheckpointed. `sweep(...).last` equals [[neighborhood]] (the
-    * register fixpoint is reached at or before `rounds`, so running the
-    * loop without the engine's early-stop probe yields the same registers
-    * and hence the same estimates — test-gated), and
-    * [[centralitiesFrom]] / [[neighborhoodFunctionFrom]] consume the same
-    * frames — a caller wanting all three artifacts pays for one sweep
-    * instead of three. */
+    * localCheckpointed. `sweep(...).last` equals [[neighborhood]] (both
+    * read the same register loop), and [[centralitiesFrom]] /
+    * [[neighborhoodFunctionFrom]] consume the same frames — a caller
+    * wanting all three artifacts pays for one sweep instead of three. */
   def sweep(edges: DataFrame, vertices: DataFrame, rounds: Int,
       p: Int = 6, salt: Long = 42L): Seq[DataFrame] =
-    graft.kernels.IterTuning.withoutRuntimeFilters(edges.sparkSession) {
-      estimatesPerRound(edges, vertices, rounds, p, salt)
-    }
+    estimatesPerRound(edges, vertices, rounds, p, salt)
 
   /** [[centralities]] over a precomputed [[sweep]] (est_0..est_rounds). */
   def centralitiesFrom(ests: Seq[DataFrame], rounds: Int): DataFrame = {
@@ -165,51 +134,61 @@ object HyperBall {
 
   /** The per-round ball-size estimate frames est_0..est_rounds as
     * (id, est, filled), each materialized (small: |V| rows) so the register
-    * state backing it can be freed as the ball advances. */
+    * state backing it can be freed as the ball advances. A round after the
+    * fixpoint reuses the fixpoint's frame (identical values — the unrolled
+    * oracle replays those rounds as no-ops). */
   private def estimatesPerRound(edges: DataFrame, vertices: DataFrame,
       rounds: Int, p: Int, salt: Long): Seq[DataFrame] = {
-    require(rounds > 0, "rounds must be > 0")
-    require(p >= 4 && p <= 16, "p must be in [4, 16]")
-    val m = 1 << p
-    val adj = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("dst")).localCheckpoint(eager = false)
-    val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
-    val w = shiftright(h.cast("long"), p)
-    val rho = lit(31 - p + 1) - length(ltrim(bin(w), "0"))
-    // EXACT fixpoint probe (r7): registers only ever GROW under max-merge
-    // (rho per (id, bucket) is non-decreasing; rows are only added), so
-    // the state is unchanged iff (row count, Σrho) is unchanged — and a
-    // round that changes nothing proves the ball fixpoint, after which
-    // every further round is the identity. Stagnant tail rounds are
-    // skipped and their est frames reuse the fixpoint frame (identical
-    // values — the unrolled oracle replays the skipped rounds as no-ops).
-    // The fingerprint is observed on the state's own checkpoint job.
-    val rhoSum = coalesce(sum(col("rho")), lit(0L))
-    var (state, fp) = Materialize(vertices.select(col("id"),
-      pmod(h, lit(m.toLong)).cast("long").as("bucket"), rho.cast("int").as("rho")), rhoSum)
-    def est(): DataFrame =
-      graft.functions.Sketch.estimateFrom(state, p, Seq("id"))
-        .localCheckpoint(true)
-    val out = Seq.newBuilder[DataFrame]
-    var last = est()
-    out += last
-    var t = 1
-    var fixed = false
-    while (t <= rounds && !fixed) {
-      val gathered = adj.join(state, adj("dst") === state("id"))
-        .select(adj("src").as("id"), col("bucket"), col("rho"))
-      val (next, nfp) = Materialize(state.union(gathered)
-        .groupBy(col("id"), col("bucket"))
-        .agg(max(col("rho")).as("rho")), rhoSum)
-      Materialize.free(state)
-      state = next
-      if (nfp == fp) fixed = true // est unchanged too — reuse `last`
-      else { fp = nfp; last = est() }
-      out += last
-      t += 1
-    }
-    while (t <= rounds) { out += last; t += 1 } // fixpoint tail: identity rounds
-    Materialize.free(state, adj)
-    out.result()
+    val out = Vector.newBuilder[DataFrame]
+    val last = registerLoop(edges, vertices, rounds, p, salt)(state =>
+      out += graft.functions.Sketch.estimateFrom(state, p, Seq("id")).localCheckpoint(true))
+    Materialize.free(last)
+    val ests = out.result()
+    ests ++ Seq.fill(rounds + 1 - ests.size)(ests.last)
   }
+
+  /** The register loop: (id, bucket, rho) after `rounds` rounds of gather
+    * + max-merge, or at the fixpoint if that comes first. `moved` sees the
+    * initial state and each state a round changed, before the loop frees
+    * it; the returned final state is the caller's to free.
+    *
+    * EXACT fixpoint probe (r7): registers only ever GROW under max-merge
+    * (rho per (id, bucket) is non-decreasing; rows are only added), so the
+    * state is unchanged iff (row count, Σrho) is unchanged — and a round
+    * that changes nothing proves the ball fixpoint, after which every
+    * further round is the identity. The fingerprint is observed on the
+    * state's own checkpoint job. */
+  private def registerLoop(edges: DataFrame, vertices: DataFrame,
+      rounds: Int, p: Int, salt: Long)(moved: DataFrame => Unit): DataFrame =
+    graft.kernels.IterTuning.withoutRuntimeFilters(edges.sparkSession) {
+      require(rounds > 0, "rounds must be > 0")
+      require(p >= 4 && p <= 16, "p must be in [4, 16]")
+      val m = 1 << p
+      // forward-ball gather joins successors' registers on edge src
+      val adj = edges.select(col("src"), col("dst")).distinct()
+        .repartition(col("dst")).localCheckpoint(eager = false)
+      val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
+      val w = shiftright(h.cast("long"), p)
+      val rho = lit(31 - p + 1) - length(ltrim(bin(w), "0"))
+      val rhoSum = coalesce(sum(col("rho")), lit(0L))
+      var (state, fp) = Materialize(vertices.select(col("id"),
+        pmod(h, lit(m.toLong)).cast("long").as("bucket"), rho.cast("int").as("rho")), rhoSum)
+      moved(state)
+      var t = 1
+      var fixed = false
+      while (t <= rounds && !fixed) {
+        val gathered = adj.join(state, adj("dst") === state("id"))
+          .select(adj("src").as("id"), col("bucket"), col("rho"))
+        val (next, nfp) = Materialize(state.union(gathered)
+          .groupBy(col("id"), col("bucket"))
+          .agg(max(col("rho")).as("rho")), rhoSum)
+        Materialize.free(state)
+        state = next
+        fixed = nfp == fp
+        if (!fixed) { fp = nfp; moved(state) }
+        t += 1
+      }
+      Materialize.free(adj)
+      state
+    }
 }

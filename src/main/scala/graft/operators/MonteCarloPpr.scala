@@ -44,10 +44,12 @@ import graft.model.PprConfig
   *  - the capped-L basket insert during a walk (:152-153, first-seen
   *    priority) becomes a top-L-by-count truncation at aggregation time.
   *
-  * Scale design — TWO walk engines behind one draw function (`walkMode`):
+  * Scale design — two walk engines behind one draw function ([[walkStep]]
+  * and its scalar twin), chosen by `broadcastEdgeLimit`, and ONE phase 2
+  * ([[scatteredCombine]]) that both feed with the same rows:
   *
-  *  - "local" (auto-chosen when the adjacency fits `broadcastEdgeLimit`):
-  *    the whole multi-step walk AND the combine's scatter run INSIDE one
+  *  - local (the adjacency fits `broadcastEdgeLimit`): the whole
+  *    multi-step walk AND the combine's scatter run INSIDE one
   *    mapPartitions pass over the vertex ids against two broadcast maps
   *    built from the one adjacency collect: the forward adjacency the walk
   *    draws from and the reverse adjacency (each node's predecessors, one
@@ -58,26 +60,28 @@ import graft.model.PprConfig
   *    an origin's walks never leave its task, so the task holds origin t's
   *    complete visit counts, cuts its basket to L (self-visits folded in),
   *    and emits the combine rows itself — t's self row and, for every
-  *    predecessor s, basket(t) keyed by s. ONE shuffle by seed then runs
-  *    the whole of phase 2 ([[localEngine]]). One job for walk plus
-  *    combine, zero walker rows materialized; ~64 sequential join stages
-  *    collapse into one stage, which removed the per-stage scheduling
-  *    latency that dominated the join path's wall at bench scale (~2.5x
-  *    measured).
-  *  - "join" (auto-chosen above the broadcast limit — the 100-TB path):
-  *    per `stepBatch` steps, chain join+project steps as lazy checkpoint
-  *    leaves, then ONE action; visit counts fold into a bounded
-  *    accumulator (constant plan depth). Walker VOLUME is bounded by
-  *    `walkerBudget`: the walkId range [0, floor(R*d)) is split into chunks
-  *    of <= walkerBudget/|origins| ids walked chunk-by-chunk — peak
-  *    in-flight rows <= walkerBudget instead of |V|*floor(R*d) (at R=1000
-  *    that is 850 rows PER VERTEX). Its visit counts sum per (seed, node)
-  *    in one shuffle and cut to L with the window rank; phase 2 is the
-  *    join-based [[combine]].
+  *    predecessor s, basket(t) keyed by s ([[localEngine]]). One job for
+  *    walk plus combine, zero walker rows materialized; ~64 sequential join
+  *    stages collapse into one stage, which removed the per-stage
+  *    scheduling latency that dominated the join path's wall at bench
+  *    scale (~2.5x measured).
+  *  - join (above the broadcast limit — the 100-TB path): per `stepBatch`
+  *    steps, chain join+project steps against the src-partitioned
+  *    adjacency as lazy checkpoint leaves, then ONE action; visit counts
+  *    fold into a bounded accumulator (constant plan depth). Walker VOLUME
+  *    is bounded by `walkerBudget`: the walkId range [0, floor(R*d)) is
+  *    split into chunks of <= walkerBudget/|origins| ids walked
+  *    chunk-by-chunk — peak in-flight rows <= walkerBudget instead of
+  *    |V|*floor(R*d) (at R=1000 that is 850 rows PER VERTEX). Its visit
+  *    counts sum per (seed, node) in one shuffle and cut to L with the
+  *    window rank; the combine rows then come from joins: self rows from
+  *    `verts ⋈ adj`, successor rows from a per-edge factor frame joined to
+  *    the baskets.
   *
   * Every draw is a pure function of (seed, ABSOLUTE walkId, step) through
   * the same mix31 mixer, so local, join, chunked and unchunked runs are all
-  * bit-identical (test-gated) and the DuckDB oracle replays any of them.
+  * bit-identical (test-gated) and the DuckDB oracle replays any of them;
+  * phase 2's grid sum does not depend on addend order.
   * The operator runs AQE-off, in the iterative-loop scope
   * ([[graft.kernels.IterTuning.forLoop]]): its joins and prunes keep the
   * fixed shuffle partitioning, and no stage waits on an AQE
@@ -183,14 +187,31 @@ object MonteCarloPpr {
     } else (pmod(base, col("outdeg")) + 1).cast("int")
   }
 
+  /** One walk step: walkers (seed, walkId, cur) that survive step `step`
+    * move to a successor of `cur` drawn from `adj` (src, dsts[, cws, totw]);
+    * a walker at a node without successors drops out. Step 1 always
+    * traverses (run: :127-132). The local engine's walk task is its scalar
+    * twin. */
+  private def walkStep(walkers: DataFrame, adj: DataFrame, damping: Double,
+      step: Int, salt: Long, weighted: Boolean): DataFrame = {
+    val survivors =
+      if (step == 1) walkers
+      else walkers.where(
+        (mix31(col("seed"), col("walkId"), lit(step), survivalSalt(salt))
+          / lit(P.toDouble)) <= damping)
+    survivors.join(adj, survivors("cur") === adj("src"))
+      .select(col("seed"), col("walkId"),
+        element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur"))
+  }
+
   def run(edges: DataFrame, vertices: DataFrame, cfg: PprConfig,
       salt: Long = 42L, maxSteps: Int = 200, stepBatch: Int = 8,
       broadcastEdgeLimit: Long = 4000000L,
-      walkerBudget: Long = 100000000L, walkMode: String = "auto",
+      walkerBudget: Long = 100000000L,
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
       resume: Boolean = false): DataFrame =
     runWithStats(edges, vertices, cfg, salt, maxSteps, stepBatch,
-      broadcastEdgeLimit, walkerBudget, walkMode, checkpoint, checkpointEvery,
+      broadcastEdgeLimit, walkerBudget, checkpoint, checkpointEvery,
       resume)._1
 
   /** Random-walk CORPUS generator — the walk TRACE rather than the visit
@@ -234,14 +255,7 @@ object MonteCarloPpr {
         lit(0).as("step"), col("cur").as("node")))
       var step = 1
       while (alive.getLong(0) > 0 && step <= maxSteps) {
-        val survivors =
-          if (step == 1) walkers // first edge always traversed (run: :127-132)
-          else walkers.where(
-            (mix31(col("seed"), col("walkId"), lit(step), survivalSalt(salt))
-              / lit(P.toDouble)) <= damping)
-        val (next, m) = Materialize(survivors.join(adjList, survivors("cur") === adjList("src"))
-          .select(col("seed"), col("walkId"),
-            element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur")))
+        val (next, m) = Materialize(walkStep(walkers, adjList, damping, step, salt, weighted))
         walkers = next
         alive = m
         traces ::= walkers.select(col("seed"), col("walkId").as("walk_id"),
@@ -270,21 +284,19 @@ object MonteCarloPpr {
   def runWithStats(edges: DataFrame, vertices: DataFrame, cfg: PprConfig,
       salt: Long = 42L, maxSteps: Int = 200, stepBatch: Int = 8,
       broadcastEdgeLimit: Long = 4000000L,
-      walkerBudget: Long = 100000000L, walkMode: String = "auto",
+      walkerBudget: Long = 100000000L,
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
       resume: Boolean = false): (DataFrame, McWalkStats) =
     IterTuning.forLoop(edges.sparkSession) {
       runInner(edges, vertices, cfg, salt, maxSteps, stepBatch, broadcastEdgeLimit,
-        walkerBudget, walkMode, checkpoint, checkpointEvery, resume)
+        walkerBudget, checkpoint, checkpointEvery, resume)
     }
 
   private def runInner(edges: DataFrame, vertices: DataFrame, cfg: PprConfig,
       salt: Long, maxSteps: Int, stepBatchRaw: Int, broadcastEdgeLimit: Long,
-      walkerBudget: Long, walkMode: String,
+      walkerBudget: Long,
       checkpoint: Option[CheckpointManager], checkpointEvery: Int,
       resume: Boolean): (DataFrame, McWalkStats) = {
-    require(Set("auto", "local", "join")(walkMode),
-      s"walkMode must be auto|local|join, got '$walkMode'")
     // Catalyst cost grows super-linearly with chained join depth: a 16-step
     // lazy chain was measured to take minutes to PLAN where 8 executes in
     // seconds — cap the batch size.
@@ -295,48 +307,28 @@ object MonteCarloPpr {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     val weighted = edges.columns.contains("weight")
-    val smallAdj = edges.count() <= broadcastEdgeLimit
     // one basket per vertex id; the hash(id) exchange also spreads the
     // local engine's origins over the full task width
     val verts = vertices.select(col("id")).distinct()
 
     // ---- phase 1: walk simulation --------------------------------------
     val effective = math.floor(r * d).toLong // floor(R*d), :127-132
-    val useLocalWalk = walkMode match {
-      case "local" =>
-        // forced local collects the whole adjacency to the driver — refuse
-        // above the broadcast limit rather than risk a driver OOM ("auto"
-        // already falls back to the join engine there)
-        require(smallAdj, s"walkMode=local forced but the adjacency " +
-          s"(> $broadcastEdgeLimit edges) exceeds broadcastEdgeLimit; " +
-          "use walkMode=auto or join")
-        true
-      case "join"  => false
-      case _       => smallAdj // "auto": local walk iff the adjacency broadcasts
-    }
-
-    if (useLocalWalk)
+    if (edges.count() <= broadcastEdgeLimit)
       return localEngine(verts, buildAdj(edges, weighted, dedup = false), cfg,
         effective, salt, maxSteps, weighted)
 
     // The walk is a traversal: every step joins walkers (keyed by the NEW
     // position) against the adjacency, so the walker side must re-exchange
-    // each step — but the adjacency side must not. Below the broadcast
-    // limit the whole walk chain becomes broadcast-hash joins (a step batch
-    // is ONE narrow stage — the per-step shuffle latency was the dominant
-    // cost at small scale); above it, the adjacency is hash-partitioned by
-    // src once and reused every step. Either way it is a lazy checkpoint
-    // leaf, filled by the `walkOrigins` cut, so no step plan carries the
-    // edge lineage.
-    // the weighted (src,dst,w) aggregation is shared by the adjacency AND
+    // each step — but the adjacency side must not: it is hash-partitioned
+    // by src once and reused every step, a lazy checkpoint leaf filled by
+    // the `walkOrigins` cut, so no step plan carries the edge lineage.
+    // The weighted (src,dst,w) aggregation is shared by the adjacency AND
     // the combine-phase edge factor — a leaf, so it runs once, not twice
     val ewOpt = if (weighted) Some(weightedEw(edges).localCheckpoint(eager = false)) else None
-    val adjBase = ewOpt.map(buildWeightedAdj)
+    val adjList = ewOpt.map(buildWeightedAdj)
       .getOrElse(buildAdj(edges, weighted = false, dedup = false))
-    val adjLeaf =
-      (if (smallAdj) adjBase else adjBase.repartition(shufflePartitions, col("src")))
-        .localCheckpoint(eager = false)
-    val adjList = if (smallAdj) broadcast(adjLeaf) else adjLeaf
+      .repartition(shufflePartitions, col("src"))
+      .localCheckpoint(eager = false)
 
     // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
     // one shape the single-machine reference never faces (its walkNode is
@@ -352,17 +344,6 @@ object MonteCarloPpr {
     val chunkSize =
       if (walkerBudget <= 0 || nOrigins == 0) math.max(effective, 1L)
       else math.max(1L, math.min(effective, walkerBudget / nOrigins))
-
-    def oneStep(cur: DataFrame, step: Int): DataFrame = {
-      val survivors =
-        if (step == 1) cur // first edge always traversed (:127-132)
-        else cur.where(
-          (mix31(col("seed"), col("walkId"), lit(step), survivalSalt(salt))
-            / lit(P.toDouble)) <= d)
-      survivors.join(adjList, survivors("cur") === adjList("src"))
-        .select(col("seed"), col("walkId"),
-          element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur"))
-    }
 
     // Per batch: chain `stepBatch` steps as lazy checkpoint leaves; the
     // batch-end cut (which observes the surviving walker count) fills every
@@ -400,9 +381,12 @@ object MonteCarloPpr {
         val end = math.min(step + stepBatch - 1, maxSteps)
         var leaves = List.empty[DataFrame]
         var cur = walkers
-        for (s <- step until end) { cur = oneStep(cur, s).localCheckpoint(eager = false); leaves ::= cur }
+        for (s <- step until end) {
+          cur = walkStep(cur, adjList, d, s, salt, weighted).localCheckpoint(eager = false)
+          leaves ::= cur
+        }
         // ONE job fills the batch's leaves and cuts its last step
-        val (next, m) = Materialize(oneStep(cur, end))
+        val (next, m) = Materialize(walkStep(cur, adjList, d, end, salt, weighted))
         val batchVisits = (next :: leaves)
           .map(_.groupBy(col("seed"), col("cur").as("node")).agg(count(lit(1)).as("visits")))
           .reduce(_ union _)
@@ -475,13 +459,37 @@ object MonteCarloPpr {
     // the ContextCleaner (the same pileup class the per-batch fix removed;
     // a many-chunk budget-bound run otherwise keeps nChunks frames cached)
     if (visitAgg != null) Materialize.free(visitAgg)
-    combine(edges, verts, adjList, adjLeaf, cfg, walkBaskets,
-      McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective), ewOpt)
+
+    // ---- phase 2: the combine rows of [[localEngine]], from joins ----------
+    // (seed, node, score, factor, own): the self row of every vertex from
+    // `verts ⋈ adj`, and per edge s -> t the rows of basket(t) keyed by s.
+    // Unweighted, the factor d/outdeg(s) rescales after the sum; weighted,
+    // the per-edge factor d·w/Σw scales each score before it (factor 1.0)
+    val factor =
+      if (weighted) lit(1.0) else coalesce(lit(d) / col("outdeg"), lit(1.0)) // dangling: 1.0
+    val selfRows = verts.join(adjList, verts("id") === adjList("src"), "left")
+      .select(col("id").as("seed"), col("id").as("node"), (lit(1.0) / factor).as("score"),
+        factor.as("factor"), lit(true).as("own"))
+    val edgeFactor = ewOpt match {
+      case Some(ew) =>
+        ew.join(ew.groupBy(col("src")).agg(sum(col("w")).as("wsum")), "src")
+          .select(col("src"), col("dst"), (lit(d) * col("w") / col("wsum")).as("pre"),
+            lit(1.0).as("factor"))
+      case None =>
+        adjList.select(col("src"), explode(col("dsts")).as("dst"), lit(1.0).as("pre"),
+          factor.as("factor"))
+    }
+    val succRows = edgeFactor.join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
+      .select(edgeFactor("src").as("seed"), col("node"), (col("score") * col("pre")).as("score"),
+        col("factor"), lit(false).as("own"))
+    val result = scatteredCombine(selfRows.union(succRows), cfg).localCheckpoint(true)
+    Materialize.free(Seq(walkBaskets, adjList) ++ ewOpt: _*) // result materialized
+    (result, McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective))
   }
 
   /** The local engine: walk and combine in ONE job over the vertex ids.
     *
-    * Walk — same draws as [[oneStep]] (mix31Scala is the Column mixer's
+    * Walk — same draws as [[walkStep]] (mix31Scala is the Column mixer's
     * scalar twin): step 1 always traverses with round-robin pick walkId mod
     * outdeg; later steps survive iff mix/P <= d and pick (walkId + mix) mod
     * outdeg (weighted: the cumulative-weight interval); a walk dies at a
@@ -494,12 +502,11 @@ object MonteCarloPpr {
     * Scatter — the task then emits phase 2's input rows for t: the self
     * row (t, t, 1/factor_t) and, per predecessor edge s -> t (duplicate
     * edges repeat, self-loops included), the rows (s, node, score) for
-    * basket(t). The rows are exactly those [[combine]] builds from
-    * `edges ⋈ baskets` and the factor join, so one `repartition(seed)` does
-    * the grid sum, the L cut, the ×factor rescale and the K cut
-    * ([[scatteredCombine]]). Weighted input applies the per-edge factor d·w/Σw before
-    * the sum, as [[combine]] does. Returns the materialized result and the
-    * walk stats. */
+    * basket(t). The join engine builds the same rows with joins, and one
+    * `repartition(seed)` does the grid sum, the L cut, the ×factor rescale
+    * and the K cut ([[scatteredCombine]]). Weighted input applies the
+    * per-edge factor d·w/Σw before the sum. Returns the materialized result
+    * and the walk stats. */
   private def localEngine(verts: DataFrame, adjBase: DataFrame, cfg: PprConfig,
       effective: Long, salt: Long, maxSteps: Int,
       weighted: Boolean): (DataFrame, McWalkStats) = {
@@ -613,11 +620,16 @@ object MonteCarloPpr {
     (result, McWalkStats(0L, 0, nOrigins, nOrigins * effective))
   }
 
-  /** The local engine's phase 2 over its scattered rows, on ONE
-    * `repartition(seed)`: the (seed, node) grid sum, the top-L rank, the
-    * ×factor rescale and the top-K rank all reuse that partitioning (the
-    * aligned prune shape of [[TopK.pruneTopLAligned]]). A seed outside
-    * `verts` has no self row and gets no basket. */
+  /** Phase 2, the one gather superstep (:211-250), for both engines: over
+    * rows (seed, node, score, factor, own), ONE `repartition(seed)` serves
+    * the (seed, node) grid sum, the top-L rank, the ×factor rescale and the
+    * top-K rank (the aligned prune shape of [[TopK.pruneTopLAligned]]).
+    * The grid sum does not depend on addend order, so the engines' rows
+    * need not arrive alike. A seed outside `verts` has no self row
+    * (`own`) and gets no basket. Weighted rows arrive pre-scaled by the
+    * per-edge factor d·w(s,t)/Σ_out w(s) with factor 1.0 (per-edge factors
+    * force scale-then-prune; for a per-seed constant the two orders agree);
+    * the self entry is exactly 1.0 either way (:124). */
   private def scatteredCombine(rows: DataFrame, cfg: PprConfig): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val partitions = rows.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
@@ -632,68 +644,5 @@ object MonteCarloPpr {
       .where(col("member") && col("rn") <= cfg.L)
       .select(col("seed"), col("node"), (col("score") * col("factor")).as("score"))
     TopK.topKWindow(cut, cfg.K)
-  }
-
-  /** Phase 2 of the join engine: the one gather superstep (:211-250) over
-    * the L-cut walk baskets, as joins — `edges ⋈ baskets`, the per-seed
-    * factor join and the rescale join. It reads nothing but frames, so it
-    * runs above the broadcast limit; the local engine builds the same rows
-    * in its walk tasks instead ([[localEngine]]).
-    *
-    * Weighted combine: the per-node factor d/outdeg generalizes to the
-    * PER-EDGE factor d·w(s,t)/Σ_out w(s), so scaling moves from after the
-    * prune to inside the gather (for the unweighted case the two orders are
-    * equivalent — the factor is a positive per-seed constant, so pre- and
-    * post-scale top-L agree; per-edge factors force scale-then-prune). The
-    * self entry is exactly 1.0 either way (:124's origin-counts-itself).
-    * Both drop seeds outside `verts`: an edge whose source is not a vertex
-    * contributes to no basket. */
-  private def combine(edges: DataFrame, verts: DataFrame,
-      adjList: DataFrame, adjLeaf: DataFrame, cfg: PprConfig,
-      walkBaskets: DataFrame, stats: McWalkStats,
-      ewOpt: Option[DataFrame]): (DataFrame, McWalkStats) = {
-    val d = cfg.damping
-    // combine prune: the ALIGNED shape — one repartition(seed) reused by
-    // the (seed,node) sum, the top-L rank AND the final top-K rank
-    // (aligned 10.0 s against agg-then-window 13.9-14.7 s on the same
-    // gather volume: OPTIMIZATION_r07.md, GRank prune shape). It always
-    // gets cfg.quantize: with quantize > 0 the unweighted combine sum, too,
-    // is the fixed-point grid sum (addend-order-free, what the DuckDB oracle
-    // replays). Before the aligned shape was the only one, the unweighted
-    // combine under a non-window strategy summed raw doubles.
-    val shufflePartitions = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    def combinePrune(df: DataFrame): DataFrame =
-      TopK.pruneTopLAligned(df, cfg.L, shufflePartitions, cfg.quantize)
-    val combined = if (ewOpt.isDefined) {
-      val ew = ewOpt.get // the run-wide persisted (src,dst,w) aggregation
-      val ws = ew.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-      val edgeFactor = ew.join(ws, "src")
-        .select(col("src"), col("dst"), (lit(d) * col("w") / col("wsum")).as("efactor"))
-      val selfRows = verts.select(col("id").as("seed"), col("id").as("node"),
-        lit(1.0).as("score"))
-      val succRows = edgeFactor
-        .join(verts, edgeFactor("src") === verts("id"), "left_semi")
-        .join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
-        .select(edgeFactor("src").as("seed"), col("node"),
-          (col("score") * col("efactor")).as("score"))
-      combinePrune(selfRows.union(succRows))
-    } else {
-      val factor = verts.join(adjList, verts("id") === adjList("src"), "left")
-        .select(col("id"),
-          when(col("outdeg").isNull || col("outdeg") === 0, lit(1.0))
-            .otherwise(lit(d) / col("outdeg")).as("factor"))
-      val selfRows = factor.select(col("id").as("seed"), col("id").as("node"),
-        (lit(1.0) / col("factor")).as("score"))
-      val succRows = edges.join(walkBaskets, edges("dst") === walkBaskets("seed"))
-        .select(edges("src").as("seed"), col("node"), col("score"))
-      combinePrune(selfRows.union(succRows))
-        .join(factor.withColumnRenamed("id", "seed"), Seq("seed"))
-        .select(col("seed"), col("node"), (col("score") * col("factor")).as("score"))
-    }
-
-    val result = TopK.topKWindow(combined, cfg.K).localCheckpoint(true)
-    Materialize.free(Seq(walkBaskets, adjLeaf) ++ ewOpt: _*) // result materialized
-    (result, stats)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.kernels.Metrics
+import graft.kernels.{Materialize, Metrics}
 import graft.sources.EdgeSource
 
 /** benchmarkAlgorithm — quality evaluation of an approximated PPR result
@@ -30,11 +30,6 @@ import graft.sources.EdgeSource
   */
 object Quality {
 
-  /** @param oracleIterations / oracleTolerance / quantize: the reference
-    *   hardcodes the oracle at (100, 1e-4) (benchmarkAlgorithm.h:32,:91) —
-    *   the defaults. Driver-verification runs pass a fixed iteration count
-    *   (tolerance = -1) and quantize = 1e12 so the DuckDB oracle
-    *   (OracleSql.qualityHarness) can reproduce the run hash-exactly. */
   /** The seeded sample of test seeds (B2) for a given approx result —
     * public so callers evaluating SEVERAL algorithms over the same graph
     * (EatRun: grank + mc) can precompute ONE exact oracle for the shared
@@ -45,7 +40,13 @@ object Quality {
       vertices: DataFrame,
       testNodes: Int,
       strict: Boolean = true,
-      sampleSeed: Long = 42L): DataFrame = {
+      sampleSeed: Long = 42L): DataFrame =
+    sample(approx, edges, vertices, testNodes, strict, sampleSeed)._1
+
+  /** [[sampleSeeds]] and its row count, observed on the checkpoint job
+    * that materializes the sample. */
+  private def sample(approx: DataFrame, edges: DataFrame, vertices: DataFrame,
+      testNodes: Int, strict: Boolean, sampleSeed: Long): (DataFrame, Long) = {
     val approxSeeds = approx.select(col("seed")).distinct()
     val missing = approxSeeds.join(vertices, approxSeeds("seed") === vertices("id"), "left_anti").count()
     require(missing == 0, "all seeds of the approximated result must exist in the graph")
@@ -57,14 +58,19 @@ object Quality {
       else approxSeeds
     // seeded shuffle via the SQL-replayable mixer (deviation from the
     // reference's random_device shuffle — documented, B2)
-    candidates
+    val (sampled, m) = Materialize(candidates
       .orderBy(graft.kernels.Mix.mix31(col("seed"), lit(0L), lit(0L),
         sampleSeed * 7919L + 424243L), col("seed"))
-      .limit(testNodes)
-      .localCheckpoint(true)
+      .limit(testNodes))
+    (sampled, m.getLong(0))
   }
 
-  /** @param precomputedOracle exact-PPR result covering this run's sampled
+  /** @param oracleIterations / oracleTolerance / quantize: the reference
+    *   hardcodes the oracle at (100, 1e-4) (benchmarkAlgorithm.h:32,:91) —
+    *   the defaults. Driver-verification runs pass a fixed iteration count
+    *   (tolerance = -1) and quantize = 1e12 so the DuckDB oracle
+    *   (OracleSql.qualityHarness) can reproduce the run hash-exactly.
+    * @param precomputedOracle exact-PPR result covering this run's sampled
     *   seeds — lets N evaluate() calls share one oracle job. Extra seeds are
     *   filtered out; seeds it does NOT cover get their oracle computed here
     *   (with this call's oracleIterations/oracleTolerance/quantize) instead
@@ -88,8 +94,7 @@ object Quality {
     val spark = approx.sparkSession
     import spark.implicits._
 
-    val sampled = sampleSeeds(approx, edges, vertices, testNodes, strict, sampleSeed)
-    val nSampled = sampled.count()
+    val (sampled, nSampled) = sample(approx, edges, vertices, testNodes, strict, sampleSeed)
 
     if (nSampled == 0) {
       return Seq(
@@ -106,10 +111,10 @@ object Quality {
         tolerance = oracleTolerance, quantize = quantize) // reference: 100/0.85/1e-4 (:32,:91)
     val oracle = precomputedOracle match {
       case Some(pre) =>
-        val uncoveredSeeds = sampled.join(pre.select(col("seed")).distinct(),
-          Seq("seed"), "left_anti").localCheckpoint(true)
+        val (uncoveredSeeds, u) = Materialize(sampled.join(pre.select(col("seed")).distinct(),
+          Seq("seed"), "left_anti"))
         val covered = pre.join(sampled, Seq("seed"), "left_semi")
-        val nUncovered = uncoveredSeeds.count()
+        val nUncovered = u.getLong(0)
         if (nUncovered == 0) covered
         else {
           // surfaced loudly: covered seeds keep the precomputed frame's

@@ -42,7 +42,8 @@ import graft.kernels.{IterTuning, Materialize}
   * same direction-tagged state frame, so each superstep is a single
   * union + map-side-combinable min-aggregation exchange (the HyperBall
   * gather shape; a 10^7-in-degree hub's incoming labels partial-aggregate
-  * before the shuffle). The convergence probe is label monotonicity: the
+  * before the shuffle), with a pointer-doubling hop that cuts the round
+  * count toward log₂ of the diameter. The convergence probe is label monotonicity: the
   * exact DECIMAL(38,0) label sum strictly decreases until the fixpoint —
   * observed on the round's own checkpoint job, no compare join. Propagation
   * rounds are bounded by the in-class forward diameter — small for web graphs
@@ -76,7 +77,7 @@ object Scc {
   def scc(edges: DataFrame, vertices: DataFrame, maxRefineRounds: Int = 30,
       maxPropagateRounds: Int = 500,
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
-      resume: Boolean = false, labelDoubling: Boolean = true): DataFrame =
+      resume: Boolean = false): DataFrame =
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
       val e0 = statsBarrier(edges
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -107,7 +108,7 @@ object Scc {
           .join(a2, e0("dst") === a2("did"))
           .where(col("scf") === col("dcf") && col("scb") === col("dcb"))
           .select(col("src"), col("dst")).localCheckpoint(true))
-        val cand = biMinPropagate(eAct, active.select(col("id")), maxPropagateRounds, labelDoubling)
+        val cand = biMinPropagate(eAct, active.select(col("id")), maxPropagateRounds)
         Materialize.free(eAct)
         // finalized frames are kept alive to the end
         finalized ::= statsBarrier(cand.where(col("f") === col("b"))
@@ -190,20 +191,19 @@ object Scc {
 
   /** Fused forward/backward min-label propagation: lab(v, dir) starts at v;
     * each superstep lab(v, dir) ← min(lab(v, dir), dir-tagged in-neighbor
-    * labels) as ONE union + map-side-combinable min aggregation. Returns
-    * (id, f, b), cut and read through the stats barrier.
+    * labels, lab(lab(v), dir)) as ONE union + map-side-combinable min
+    * aggregation. Returns (id, f, b), cut and read through the stats
+    * barrier.
     *
-    * `doubling` adds a pointer-doubling hop per round (VERDICT r5 #6 — the
-    * round-BATCHING experiment was measured slower and reverted; this is
-    * the other axis): labels are vertex ids, and lab(u) = w means w reaches
-    * u, so min(lab(v), lab(lab(v))) extends the reached path length
+    * The lab(lab(v)) term is a pointer-doubling hop (VERDICT r5 #6):
+    * labels are vertex ids, and lab(u) = w means w reaches u, so
+    * min(lab(v), lab(lab(v))) extends the reached path length
     * multiplicatively — round count drops from the in-class diameter toward
     * log₂(diameter) at the price of a second join (state ⋈ state on
-    * lab = id) per round. Same fixpoint, same hashes (test-gated); whether
-    * the trade wins depends on whether rounds or per-round exchanges
-    * dominate — measured on the bench graphs, recorded in BASELINE.md. */
-  private def biMinPropagate(e: DataFrame, verts: DataFrame, maxRounds: Int,
-      doubling: Boolean = false): DataFrame = {
+    * lab = id) per round. Same fixpoint as plain propagation; measured
+    * −21% and −15% on the two bench graphs against it (BASELINE.md "SCC
+    * pointer-doubling"). */
+  private def biMinPropagate(e: DataFrame, verts: DataFrame, maxRounds: Int): DataFrame = {
     val eBi = statsBarrier(biEdges(e).localCheckpoint(true))
     // the exact label sum is observed on each state cut (null on no rows)
     val labSum = sum(col("lab").cast("decimal(38,0)"))
@@ -217,19 +217,14 @@ object Scc {
       val gathered = state
         .join(eBi, state("id") === eBi("src") && state("dir") === eBi("dir"))
         .select(eBi("dst").as("id"), eBi("dir").as("dir"), col("lab"))
-      val contributions =
-        if (!doubling) state.union(gathered)
-        else {
-          // pointer-doubling hop: follow v's current label to ITS label —
-          // lab(v)=u and lab(u)=w imply w ⇝ u ⇝ v in this direction
-          val s2 = state.select(col("id").as("lid"), col("dir").as("ldir"),
-            col("lab").as("llab"))
-          val hop = state
-            .join(s2, state("lab") === s2("lid") && state("dir") === s2("ldir"))
-            .select(state("id"), state("dir"), col("llab").as("lab"))
-          state.union(gathered).union(hop)
-        }
-      val (next, m) = Materialize(contributions
+      // pointer-doubling hop: follow v's current label to ITS label —
+      // lab(v)=u and lab(u)=w imply w ⇝ u ⇝ v in this direction
+      val s2 = state.select(col("id").as("lid"), col("dir").as("ldir"),
+        col("lab").as("llab"))
+      val hop = state
+        .join(s2, state("lab") === s2("lid") && state("dir") === s2("ldir"))
+        .select(state("id"), state("dir"), col("llab").as("lab"))
+      val (next, m) = Materialize(state.union(gathered).union(hop)
         .groupBy(col("id"), col("dir"))
         .agg(min(col("lab")).as("lab")), labSum)
       moving = m.get(1) != prevSum

@@ -3,11 +3,10 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic pipeline tables (documents / embeddings /
-  * events) at ARBITRARY scale — the driver's testdata parquet stops at
-  * sf0.1, so the second scale anchor for the non-graph families
-  * (VERDICT r5 #1) generates its own inputs with one seeded generator and
-  * runs the identical queries at two sizes. Shapes mirror TESTDATA.md:
+/** Deterministic synthetic pipeline tables (documents / embeddings) at
+  * ARBITRARY scale, from one seeded generator — inputs for the non-graph
+  * families beyond the driver's testdata parquet (which stops at sf0.1).
+  * Shapes mirror TESTDATA.md:
   *
   *   documents(doc_id, text, source)  — Zipf-ish token stream: rank
   *     r = floor(V^u) (log-uniform, the classic Zipf(1) surrogate), the 14
@@ -15,8 +14,6 @@ import org.apache.spark.sql.functions._
   *     quality ratios and the unigram Zipf head behave like real text;
   *     40-119 tokens per doc.
   *   embeddings(vec_id, embedding float[dims]) — uniform in [-1, 1).
-  *   events(event_id, ts, user_id, event_type, value) — nUsers users over
-  *     a configurable horizon; ts is uniform within it.
   *
   * xxhash64-seeded (bench inputs, not oracle-checked — the driver-oracled
   * queries keep using the driver's parquet; kernels.Mix stays reserved for
@@ -57,21 +54,4 @@ object Synth {
         transform(sequence(lit(0), lit(dims - 1)),
           d => (u(col("vec_id"), d, lit(seed), lit(3)) * 2 - 1).cast("float"))
           .as("embedding"))
-
-  /** (event_id, ts, user_id, event_type, value): `n` events from `nUsers`
-    * users uniform over `horizonHours` starting 2024-01-01. */
-  def events(spark: SparkSession, n: Long, nUsers: Long = 2000L,
-      horizonHours: Int = 72, seed: Long = 42L): DataFrame = {
-    val types = array(lit("click"), lit("view"), lit("purchase"), lit("scroll"), lit("search"))
-    spark.range(n).select(col("id").as("event_id"))
-      .select(col("event_id"),
-        timestamp_seconds(lit(1704067200L) +
-          pmod(xxhash64(col("event_id"), lit(seed), lit(4)), lit(horizonHours * 3600L)))
-          .as("ts"),
-        pmod(xxhash64(col("event_id"), lit(seed), lit(5)), lit(nUsers)).as("user_id"),
-        element_at(types,
-          (pmod(xxhash64(col("event_id"), lit(seed), lit(6)), lit(5L)) + 1).cast("int"))
-          .as("event_type"),
-        (u(col("event_id"), lit(seed), lit(7)) * 100).as("value"))
-  }
 }

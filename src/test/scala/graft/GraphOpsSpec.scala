@@ -505,9 +505,9 @@ class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
       "grank" -> (() => Seq(GRank.run(e, vs, cfg))),
       "grank partitioned" -> (() => Seq(GRank.run(e, vs, cfg.copy(partitionedSchedule = true)))),
       "mc join" -> (() => Seq(MonteCarloPpr.run(e, vs, cfg.copy(iterations = 10), maxSteps = 12,
-        walkMode = "join", walkerBudget = 100L))),
+        broadcastEdgeLimit = 0L, walkerBudget = 100L))),
       "mc join weighted" -> (() => Seq(MonteCarloPpr.run(ew, vs, cfg.copy(iterations = 10),
-        maxSteps = 12, walkMode = "join"))),
+        maxSteps = 12, broadcastEdgeLimit = 0L))),
       "walkTrace" -> (() => Seq(MonteCarloPpr.walkTrace(e, vs, 2, 3))),
       "wedgeCounts" -> (() => Seq(Triangles.wedgeCounts(e))),
       "triangles" -> (() => Seq(Triangles.countAll(e), Triangles.countByDegreeOrder(e))),

@@ -165,9 +165,9 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     // exact LONG visits); the fixed-point grid keeps the tol-0.0 compare
     // meaningful — any single-visit difference (>= 1/R) still trips it
     val cfg = PprConfig(4, 8, 40, topLStrategy = "window", quantize = 1e12) // effective walks = floor(40*0.85) = 34
-    val (a, sa) = MonteCarloPpr.runWithStats(es, vs, cfg, maxSteps = 24, walkMode = "join")
+    val (a, sa) = MonteCarloPpr.runWithStats(es, vs, cfg, maxSteps = 24, broadcastEdgeLimit = 0L)
     val (b, sb) = MonteCarloPpr.runWithStats(es, vs, cfg, maxSteps = 24, walkerBudget = 60,
-      walkMode = "join")
+      broadcastEdgeLimit = 0L)
     assert(sa.chunks == 1 && sa.maxInFlight == sa.unchunkedPeak)
     assert(sb.chunks > 1, s"budget 60 over ${sb.origins} origins should force chunking")
     assert(sb.maxInFlight <= 60, s"in-flight ${sb.maxInFlight} exceeds the budget")
@@ -203,11 +203,12 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
       // output partitioning — the fixed-point grid makes the compare
       // order-free, so any single-visit difference (>= 1/R) still trips it
       val cfg = PprConfig(5, 9, 40, topLStrategy = "window", quantize = 1e12)
-      val local = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24, walkMode = "local")._1
-      val join = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24, walkMode = "join")._1
+      // the default limit takes the local engine; a zero limit forces the join engine
+      val (local, sLocal) = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24)
+      val (join, sJoin) = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24, broadcastEdgeLimit = 0L)
       assertAllClose(baskets(local), baskets(join), 0.0)
-      val (_, sAuto) = MonteCarloPpr.runWithStats(ed, vs, cfg, maxSteps = 24)
-      assert(sAuto.maxInFlight == 0L, "auto on a broadcastable graph must take the local engine")
+      assert(sLocal.maxInFlight == 0L, "a broadcastable graph must take the local engine")
+      assert(sJoin.maxInFlight > 0L, "a zero broadcast limit must take the join engine")
     }
   }
 
@@ -219,9 +220,9 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val weighted = es.map { case (a, b) => (a, b, 1L + a) }.toDF("src", "dst", "weight")
     val cfg = PprConfig(3, 3, 40, topLStrategy = "window", quantize = 1e12)
     for ((ed, name) <- Seq((edgesDf(es), "unweighted"), (weighted, "weighted"));
-         mode <- Seq("local", "join")) {
-      val got = baskets(MonteCarloPpr.run(ed, vs, cfg, maxSteps = 24, walkMode = mode))
-      assert(got.keySet == Set(0L, 1L, 2L), s"$name/$mode: seeds ${got.keySet}")
+         limit <- Seq(4000000L, 0L)) { // local, then forced join
+      val got = baskets(MonteCarloPpr.run(ed, vs, cfg, maxSteps = 24, broadcastEdgeLimit = limit))
+      assert(got.keySet == Set(0L, 1L, 2L), s"$name/limit $limit: seeds ${got.keySet}")
     }
   }
 
@@ -230,9 +231,9 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val cfg = PprConfig(5, 9, 40, topLStrategy = "window", quantize = 1e12)
     val once = baskets(MonteCarloPpr.run(ed, verticesDf(cutVertices), cfg, maxSteps = 24))
     val dup = verticesDf(cutVertices ++ Seq(0L, 13L, 20L, 20L))
-    for (mode <- Seq("local", "join")) {
-      val twice = MonteCarloPpr.run(ed, dup, cfg, maxSteps = 24, walkMode = mode)
-      assert(twice.count() == once.values.map(_.size).sum, s"$mode: duplicated rows")
+    for (limit <- Seq(4000000L, 0L)) { // local, then forced join
+      val twice = MonteCarloPpr.run(ed, dup, cfg, maxSteps = 24, broadcastEdgeLimit = limit)
+      assert(twice.count() == once.values.map(_.size).sum, s"limit $limit: duplicated rows")
       assertAllClose(once, baskets(twice), 0.0)
     }
   }
@@ -244,7 +245,7 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val mgr = new operators.CheckpointManager(dir)
     // budget 60 forces several chunks (effective 34 walks over ~20 origins)
     val straight = baskets(MonteCarloPpr.run(es, vs, cfg, maxSteps = 24,
-      walkerBudget = 60, walkMode = "join", checkpoint = Some(mgr), checkpointEvery = 1))
+      walkerBudget = 60, broadcastEdgeLimit = 0L, checkpoint = Some(mgr), checkpointEvery = 1))
     val committed = mgr.committed()
     assert(committed.size >= 2, s"expected >=2 chunk snapshots, got $committed")
     // keep only the FIRST snapshot (simulate a crash after chunk 1), resume
@@ -256,7 +257,7 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     }
     assert(mgr.committed() == Seq(committed.head))
     val resumed = baskets(MonteCarloPpr.run(es, vs, cfg, maxSteps = 24,
-      walkerBudget = 60, walkMode = "join", checkpoint = Some(mgr), resume = true))
+      walkerBudget = 60, broadcastEdgeLimit = 0L, checkpoint = Some(mgr), resume = true))
     assertAllClose(straight, resumed, 0.0) // absolute-walkId draws: bit-identical
   }
 
@@ -310,8 +311,8 @@ class PprSpec extends AnyFunSuite with GraphFixtures {
     val wMix = mixEdges.map { case (a, b) => (a, b, 1L + (a * 31 + b * 17) % 5) }
       .toDF("src", "dst", "weight")
     for ((we, ws) <- Seq((wEdges, vs), (wCut, verticesDf(cutVertices)), (wMix, verticesDf(mixVertices)))) {
-      val local = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "local")._1
-      val join = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, walkMode = "join")._1
+      val local = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24)._1
+      val join = MonteCarloPpr.runWithStats(we, ws, cfg, maxSteps = 24, broadcastEdgeLimit = 0L)._1
       assertAllClose(baskets(local), baskets(join), 0.0)
     }
     // all-ones weights: cumulative pick r lands on index r — the uniform

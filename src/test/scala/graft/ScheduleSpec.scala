@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.kernels.TopK
 import graft.model.PprConfig
 import graft.functions.Dedup
-import graft.operators.{Components, ExactPpr, GRank, Hits, HyperBall, KCore, MonteCarloPpr, Scc}
+import graft.operators.{Components, ExactPpr, GRank, Hits, HyperBall, KCore, MonteCarloPpr, Quality, Scc}
 import org.apache.spark.grafttest.{JobCounter, SqlPlans}
 
 /** G5 partitioned schedule + physical-plan and parallelism-invariance
@@ -106,7 +106,7 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     // shuffle (no basket checkpoint, no factor or edge joins)
     val (_, mc) = JobCounter.jobs(sc) {
       MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, topLStrategy = "window", quantize = 1e12),
-        maxSteps = 24, walkMode = "local")
+        maxSteps = 24)
     }
     assert(mc.size == 3, s"MC local engine: ${mc.size} jobs: ${mc.mkString(" | ")}")
     // GRank (tolerance -1): set-up is the hub collect, the norm broadcast
@@ -174,6 +174,36 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     }
   }
 
+  test("job-count gate: HyperBall registers come out of the fingerprint loop, no norm job") {
+    // the init cut, then per round the register cut (its fingerprint
+    // observed) and the adjacency broadcast, and the collect; the parent ran
+    // the engine's convergence norm as one more job per round
+    for (r <- Seq(2, 4)) {
+      val jobs = gateJobs((e, vs) => HyperBall.registers(e, vs, r).collect())
+      assert(jobs.size == 2 * r + 2, s"HyperBall registers, $r rounds: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    }
+  }
+
+  test("job-count gate: the quality harness reads its sample counts off the cuts that make them") {
+    // q_quality_harness's shape on the job-gate fixture, the GRank result
+    // materialized beforehand; the parent counted the sample, and the
+    // uncovered seeds of a precomputed oracle, in a job each (51 and 15)
+    val e = edgesDf(randomGraph(30, 120, seed = 37)).persist()
+    val vs = verticesDf(0L until 32L).persist()
+    e.count(); vs.count()
+    val approx = GRank.run(e, vs, PprConfig(5, 10, 3, tolerance = -1, quantize = 1e12))
+    val oracle = ExactPpr.run(e, vs, iterations = 20, tolerance = -1, quantize = 1e12).localCheckpoint(true)
+    def harness(pre: Option[org.apache.spark.sql.DataFrame]): Seq[String] =
+      JobCounter.jobs(spark.sparkContext)(Quality.evaluate(approx, e, vs, testNodes = 20,
+        strict = true, oracleIterations = 20, oracleTolerance = -1, quantize = 1e12,
+        precomputedOracle = pre).collect())._2
+    val own = harness(None)
+    assert(own.size == 50, s"quality harness: ${own.size} jobs: ${own.mkString(" | ")}")
+    val pre = harness(Some(oracle))
+    assert(pre.size == 13, s"quality harness, precomputed oracle: ${pre.size} jobs: ${pre.mkString(" | ")}")
+    e.unpersist(); vs.unpersist()
+  }
+
   test("job-count gate: label fixpoints count their changes on the round's checkpoint") {
     // three rounds each: the init cut, then per round the state cut and
     // its broadcast(s), and the collect; the parent ran one count job more
@@ -193,7 +223,7 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
     // MC join engine: the edge count that picks the engine is the only
     // count; origins, walkers and batch ends are observed on their cuts
     val mc = gateJobs((e, vs) => MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, quantize = 1e12),
-      maxSteps = 24, walkMode = "join", walkerBudget = 200L).collect())
+      maxSteps = 24, broadcastEdgeLimit = 0L, walkerBudget = 200L).collect())
     val counts = mc.filter(_.startsWith("count at"))
     assert(counts.size == 1, s"MC join engine counts: ${counts.mkString(" | ")}")
   }
