@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, Multimodal, Similarity, Sketch, TextAnalysis}
-import graft.kernels.{Metrics, TopK}
+import graft.kernels.{Materialize, Metrics, TopK}
 import graft.model.PprConfig
 import graft.operators._
 import graft.sources.EdgeSource
@@ -56,7 +56,7 @@ object SparkEntry {
     * in ONE session (Verify and Bench), so the expensive refinement loop
     * runs once and bowtie takes it as `precomputedScc` — the composition a
     * real caller writes. Memoized per (session, sfDir); the frame is
-    * localCheckpointed, so reuse reads materialized blocks. */
+    * a `Materialize.cut`, so reuse reads materialized blocks. */
   private val sccMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def sccShared(s: SparkSession, dir: String): DataFrame = {
@@ -66,7 +66,7 @@ object SparkEntry {
     sccMemo.keySet.removeIf(k => k._1 ne s)
     sccMemo.computeIfAbsent((s, dir), _ => {
       val (e, v) = sccGraph(s, dir)
-      Scc.scc(e, v).localCheckpoint(true)
+      Materialize.cut(Scc.scc(e, v))
     })
   }
 
@@ -74,7 +74,7 @@ object SparkEntry {
     * q_neighborhood_function triple (r7 optimization; the sccShared
     * composition pattern): all three driver rows are views of the SAME
     * 4-round p=6 register sweep, so one session computes it once — the
-    * est_0..est_rounds frames are localCheckpointed inside
+    * est_0..est_rounds frames are `Materialize.cut`s inside
     * HyperBall.sweep, and each query derives its result from them exactly
     * as a caller composing the three operators would write it. Memoized
     * per (session, sfDir); dead-session entries evicted like sccMemo. */
@@ -594,7 +594,7 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
       val q = e.where(col("vec_id") < 50)
-      val exact = Similarity.bruteForceTopK(q, e, k = 5).localCheckpoint(true)
+      val exact = Materialize.cut(Similarity.bruteForceTopK(q, e, k = 5))
       val lsh = Similarity.lshTopK(q, e, k = 5, planes = 10, dims = 64)
       val ivf = Similarity.ivfTopK(q, e, k = 5, nCells = 16, nProbe = 4, dims = 64)
       Similarity.recallAtK(lsh, exact, k = 5, method = "lsh")

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.kernels.Materialize
+
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, and embedding-cosine near-dup.
   *
@@ -33,10 +35,10 @@ object Dedup {
   private[graft] def exactWithHashes(df: DataFrame, idCol: String, textCol: String,
       h1: org.apache.spark.sql.Column, h2: org.apache.spark.sql.Column): DataFrame = {
     val hashed = df.select(col(idCol).as("id"), h1.as("h1"), h2.as("h2"))
-    val grouped = hashed.groupBy("h1")
+    // one job; both the clean and collided halves read it
+    val grouped = Materialize.cut(hashed.groupBy("h1")
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("copies"),
-        min(col("h2")).as("lo2"), max(col("h2")).as("hi2"))
-      .localCheckpoint(true) // one job; both the clean and collided halves read it
+        min(col("h2")).as("lo2"), max(col("h2")).as("hi2")))
     val clean = grouped.where(col("lo2") === col("hi2")).select(col("keep_id"), col("copies"))
     val collided = grouped.where(col("lo2") =!= col("hi2")).select(col("h1"))
     val fix = df.select(col(idCol).as("id"), col(textCol).as("t"), h1.as("h1"))
@@ -44,7 +46,7 @@ object Dedup {
       .groupBy(col("t"))
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("copies"))
       .select(col("keep_id"), col("copies"))
-    clean.union(fix).localCheckpoint(true)
+    Materialize.cut(clean.union(fix))
   }
 
   /** Near-dup cluster resolution — the step every corpus-dedup pipeline
@@ -132,13 +134,12 @@ object Dedup {
     // shingle SETS (threshold 1.0 exactly); at lower thresholds only the
     // banding's false-negative pattern shifts, and the exact verify keeps
     // precision unchanged (recall is test-gated).
-    val withSig = df.select(col(idCol).as("id"), col(textCol).as("t"))
+    val withSig = Materialize.cut(df.select(col(idCol).as("id"), col(textCol).as("t"))
       .withColumn("toks", TextAnalysis.tokens(col("t"))) // hoisted: see tokenShingleHashesOf
       .withColumn("hs", tokenShingleHashesOf(col("toks"), shingleK))
       .withColumn("sig", transform(sequence(lit(0), lit(bands * rowsPerBand - 1)),
         p => coalesce(array_min(transform(col("hs"), h => xxhash64(h, p))), lit(Long.MaxValue))))
-      .select(col("id"), col("hs"), col("sig"))
-      .localCheckpoint(true) // one job; see ngramJaccard
+      .select(col("id"), col("hs"), col("sig"))) // one job; see ngramJaccard
     val banded = withSig.select(col("id"), posexplode(
       transform(sequence(lit(0), lit(bands - 1)),
         b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
@@ -148,9 +149,8 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    verifyJaccardHashed(cand,
-        withSig.select(col("id"), array_distinct(col("hs")).as("hset")), threshold)
-      .localCheckpoint(true)
+    Materialize.cut(verifyJaccardHashed(cand,
+        withSig.select(col("id"), array_distinct(col("hs")).as("hset")), threshold))
   }
 
   /** SQL-replayable polynomial string hash mod 2^31-1 (char-code left fold,
@@ -176,7 +176,7 @@ object Dedup {
       shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       threshold: Double = 0.7, salt: Long = 42L): DataFrame = {
     val perms = bands * rowsPerBand
-    val withSig = df.select(col(idCol).as("id"), col(textCol).as("t"))
+    val withSig = Materialize.cut(df.select(col(idCol).as("id"), col(textCol).as("t"))
       .withColumn("toks", TextAnalysis.tokens(col("t"))) // hoisted: see tokenShingleHashesOf
       .withColumn("sh", array_distinct(tokenShinglesOf(col("toks"), shingleK)))
       .drop("toks")
@@ -186,8 +186,7 @@ object Dedup {
       .withColumn("sig", transform(sequence(lit(0), lit(perms - 1)),
         p => coalesce(
           array_min(transform(col("hs"), h => graft.kernels.Mix.mix31(h, p, lit(0L), permSalt(salt)))),
-          lit(graft.kernels.Mix.P))))
-      .localCheckpoint(true) // one job; see ngramJaccard
+          lit(graft.kernels.Mix.P))))) // one job; see ngramJaccard
     val banded = withSig.select(col("id"), posexplode(
       transform(sequence(lit(0), lit(bands - 1)),
         b => aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
@@ -198,8 +197,7 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    verifyJaccard(cand, withSig.select(col("id"), col("sh")), threshold)
-      .localCheckpoint(true)
+    Materialize.cut(verifyJaccard(cand, withSig.select(col("id"), col("sh")), threshold))
   }
 
   /** Exact shingle-set Jaccard verification of candidate pairs.
@@ -272,14 +270,13 @@ object Dedup {
     // candidate self-join / exact verify all operate on the hashes —
     // hash-faithful throughout (per-hash df = per-string df, identical
     // candidate pairs and jaccard values, 64-bit collisions aside).
-    val shingled = df.select(col(idCol).as("id"),
+    // materialized by ONE job before the index and verify plans read it.
+    // A persisted frame that no action has filled yet would instead be
+    // filled under AQE by one cache-stage job per scan of it (index,
+    // df cap, size filter, both verify sides)
+    val shingled = Materialize.cut(df.select(col(idCol).as("id"),
         TextAnalysis.tokens(col(textCol)).as("toks")) // hoisted: see tokenShingleHashesOf
-      .select(col("id"), array_distinct(tokenShingleHashesOf(col("toks"), shingleK)).as("hset"))
-      // materialized by ONE job before the index and verify plans read it.
-      // A persisted frame that no action has filled yet would instead be
-      // filled under AQE by one cache-stage job per scan of it (index,
-      // df cap, size filter, both verify sides)
-      .localCheckpoint(true)
+      .select(col("id"), array_distinct(tokenShingleHashesOf(col("toks"), shingleK)).as("hset")))
     val inv = shingled.select(col("id"), explode(col("hset")).as("s"))
     val rare = inv.groupBy("s").agg(count(lit(1)).as("df_s"))
       .where(col("df_s") <= maxShingleFreq).select("s")
@@ -287,7 +284,7 @@ object Dedup {
     val cand = invR.as("x").join(invR.as("y"),
       col("x.s") === col("y.s") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    verifyJaccardHashed(cand, shingled, threshold).localCheckpoint(true)
+    Materialize.cut(verifyJaccardHashed(cand, shingled, threshold))
   }
 
   /** 64-bit SimHash over token hashes: per bit, sum +1/-1 across tokens,
@@ -315,8 +312,7 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     // materialized by ONE job before both self-join sides read it (see
     // ngramJaccard: an unfilled persist is filled once per scan under AQE)
-    val sigs = df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
-      .localCheckpoint(true)
+    val sigs = Materialize.cut(df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig")))
     val chunked = sigs.select(col("id"), col("sig"), posexplode(
       transform(sequence(lit(0), lit(3)),
         c => call_function("shiftright", col("sig"), (c * 16).cast("int"))
@@ -328,10 +324,9 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.sig").as("sa"), col("y.sig").as("sb"))
       .distinct()
-    cand.select(col("id_a"), col("id_b"),
+    Materialize.cut(cand.select(col("id_a"), col("id_b"),
       bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .localCheckpoint(true)
+      .where(col("hamming") <= maxHamming))
   }
 
   /** Embedding cosine near-dup: LSH-bucketed (random-hyperplane sign bits,
@@ -341,8 +336,9 @@ object Dedup {
       threshold: Double = 0.95, planes: Int = 12, seed: Long = 42L,
       dims: Int = -1): DataFrame = {
     val sigCol = Similarity.signatureFor(df, vecCol, planes, seed, dims)
-    val sigs = df.select(col(idCol).as("id"), col(vecCol).as("v"), sigCol.as("sig"))
-      .localCheckpoint(true) // one job; see simhashNearDup
+    // one job; see simhashNearDup
+    val sigs = Materialize.cut(
+      df.select(col(idCol).as("id"), col(vecCol).as("v"), sigCol.as("sig")))
     // multi-probe: bucket on the full signature AND each one-bit flip would
     // explode candidates; two half-signatures give Hamming<=1-per-half recall
     val half = sigs.select(col("id"), col("v"), posexplode(array(
@@ -354,8 +350,8 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.v").as("va"), col("y.v").as("vb"))
       .distinct()
-    cand.select(col("id_a"), col("id_b"), Similarity.cosine(col("va"), col("vb")).as("cosine"))
-      .where(col("cosine") >= threshold)
-      .localCheckpoint(true)
+    Materialize.cut(cand
+      .select(col("id_a"), col("id_b"), Similarity.cosine(col("va"), col("vb")).as("cosine"))
+      .where(col("cosine") >= threshold))
   }
 }

@@ -124,19 +124,17 @@ object TextAnalysis {
     * corpus-total N folds in as a 1-row broadcast, no driver sync. */
   def unigramLogprob(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val docTok = df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("dc"))
-      .localCheckpoint(eager = false)
+    val docTok = Materialize.leaf(df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("dc")))
     val freq = docTok.groupBy(col("tok")).agg(sum(col("dc")).as("c"))
     val n = freq.agg(sum(col("c")).cast("double").as("nt"))
     val lp = docTok.join(freq, "tok").crossJoin(broadcast(n))
       .select(col(idCol), col("dc"),
         log(col("c").cast("double") / col("nt")).as("lp"))
-    val res = lp.groupBy(col(idCol))
+    val res = Materialize.cut(lp.groupBy(col(idCol))
       .agg(sum(col("dc")).as("n_tokens"),
         ((sum(col("dc") * Grid.roundLong(col("lp") * 1e12)) / 1e12)
-          / sum(col("dc"))).as("avg_logprob"))
-      .localCheckpoint(true)
+          / sum(col("dc"))).as("avg_logprob")))
     Materialize.free(docTok)
     res
   }
@@ -158,20 +156,18 @@ object TextAnalysis {
   def tfidfTopTerms(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", topN: Int = 5): DataFrame = {
     require(topN > 0, "topN must be > 0")
-    val docTok = df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+    val docTok = Materialize.leaf(df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf")))
     val dfreq = docTok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).cast("double").as("nd"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("score").desc, col("tok").asc)
-    val res = docTok.join(dfreq, "tok").crossJoin(broadcast(n))
+    val res = Materialize.cut(docTok.join(dfreq, "tok").crossJoin(broadcast(n))
       .select(col(idCol), col("tok"),
         (round(col("tf").cast("double") * log(col("nd") / col("df").cast("double"))
           * 1e12) / 1e12).as("score"))
       .withColumn("rank", row_number().over(w).cast("long")) // BIGINT, like SQL row_number
-      .where(col("rank") <= topN)
-      .localCheckpoint(true)
+      .where(col("rank") <= topN))
     Materialize.free(docTok)
     res
   }
@@ -204,15 +200,13 @@ object TextAnalysis {
         i => struct(element_at(col("ts"), i).as("a"),
           element_at(col("ts"), (i + 1).cast("int")).as("b")))).as("bg"))
       .select(col("bg.a").as("a"), col("bg.b").as("b"))
-    val cAb = bigrams.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-      .where(col("c_ab") >= minCount)
-      .localCheckpoint(eager = false)
-    val uni = toks.select(explode(col("ts")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+    val cAb = Materialize.leaf(bigrams.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
+      .where(col("c_ab") >= minCount))
+    val uni = Materialize.leaf(toks.select(explode(col("ts")).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val totals = uni.agg(sum(col("c")).cast("double").as("nu"))
       .crossJoin(bigrams.agg(count(lit(1)).cast("double").as("nb")))
-    val res = cAb
+    val res = Materialize.cut(cAb
       .join(uni.select(col("tok").as("a"), col("c").as("c_a")), "a")
       .join(uni.select(col("tok").as("b"), col("c").as("c_b")), "b")
       .crossJoin(broadcast(totals))
@@ -221,8 +215,7 @@ object TextAnalysis {
           / (col("nb") * col("c_a").cast("double") * col("c_b").cast("double")))
           * 1e12) / 1e12).as("pmi"))
       .orderBy(col("pmi").desc, col("a").asc, col("b").asc)
-      .limit(topN)
-      .localCheckpoint(true)
+      .limit(topN))
     Materialize.free(cAb, uni)
     res
   }
@@ -245,24 +238,22 @@ object TextAnalysis {
     * on doc_id, so the two aggregations reuse one exchange. */
   def repetitionStats(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val base = df.select(col(idCol), tokens(col(textCol)).as("ts"))
+    val base = Materialize.leaf(df.select(col(idCol), tokens(col(textCol)).as("ts"))
       .select(col(idCol), col("ts"),
         size(col("ts")).cast("long").as("n"),
-        size(array_distinct(col("ts"))).cast("long").as("nd"))
-      .localCheckpoint(eager = false)
+        size(array_distinct(col("ts"))).cast("long").as("nd")))
     val bigramTop = base.where(col("n") >= 2)
       .select(col(idCol), explode(transform(sequence(lit(1), (col("n") - 1).cast("int")),
         i => struct(element_at(col("ts"), i).as("a"),
           element_at(col("ts"), (i + 1).cast("int")).as("b")))).as("bg"))
       .groupBy(col(idCol), col("bg.a"), col("bg.b")).agg(count(lit(1)).as("c"))
       .groupBy(col(idCol)).agg(max(col("c")).as("maxc"))
-    val res = base.join(bigramTop, Seq(idCol), "left")
+    val res = Materialize.cut(base.join(bigramTop, Seq(idCol), "left")
       .select(col(idCol), col("n").as("n_tokens"),
         when(col("n") > 0, (col("n") - col("nd")).cast("double") / col("n"))
           .otherwise(lit(0.0)).as("dup_token_ratio"),
         when(col("n") >= 2, coalesce(col("maxc"), lit(0L)).cast("double") / (col("n") - 1))
-          .otherwise(lit(0.0)).as("top_bigram_frac"))
-      .localCheckpoint(true)
+          .otherwise(lit(0.0)).as("top_bigram_frac")))
     Materialize.free(base)
     res
   }

@@ -116,8 +116,8 @@ object Components {
     * Rounds = graph diameter — fine on small-diameter graphs, pathological
     * on chains; the default entry point is [[connectedComponentsStar]]. */
   def connectedComponentsMinId(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame = {
-    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
-    var state = vertices.select(col("id"), col("id").as("comp")).localCheckpoint(true)
+    val und = Materialize.leaf(EdgeSource.undirected(edges))
+    var state = Materialize.cut(vertices.select(col("id"), col("id").as("comp")))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIterations) {
@@ -143,8 +143,8 @@ object Components {
     * the round count IS part of the operator's contract. Deterministic.
     * Returns (id, label). */
   def labelPropagation(edges: DataFrame, vertices: DataFrame, rounds: Int): DataFrame = {
-    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
-    var state = vertices.select(col("id"), col("id").as("label")).localCheckpoint(true)
+    val und = Materialize.leaf(EdgeSource.undirected(edges))
+    var state = Materialize.cut(vertices.select(col("id"), col("id").as("label")))
     var i = 0
     while (i < rounds) {
       val freq = state.join(und, state("id") === und("src"))
@@ -157,9 +157,8 @@ object Components {
       val winner = freq.groupBy(col("v"))
         .agg(min(struct((-col("cnt")).as("negCnt"), col("label").as("l"))).as("best"))
         .select(col("v"), col("best.l").as("newLabel"))
-      val next = state.join(winner, state("id") === winner("v"), "left")
-        .select(col("id"), coalesce(col("newLabel"), col("label")).as("label"))
-        .localCheckpoint(true)
+      val next = Materialize.cut(state.join(winner, state("id") === winner("v"), "left")
+        .select(col("id"), coalesce(col("newLabel"), col("label")).as("label")))
       Materialize.free(state)
       state = next
       i += 1
@@ -235,12 +234,12 @@ object Components {
     * partition SIZES on bipartite/star/complete fixtures). Returns (id, color).
     */
   def twoColoring(edges: DataFrame, vertices: DataFrame, maxIterations: Int = 100): DataFrame = {
-    val und = EdgeSource.undirected(edges).localCheckpoint(eager = false)
+    val und = Materialize.leaf(EdgeSource.undirected(edges))
     // dist(v) starts at 0 for every vertex paired with root candidate = own id;
     // propagate (root=min comp id, dist) — equivalent to multi-source BFS from
     // all vertices where only the minimum root survives per vertex.
-    var state = vertices.select(col("id"), col("id").as("root"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+    var state = Materialize.cut(
+      vertices.select(col("id"), col("id").as("root"), lit(0L).as("dist")))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIterations) {

@@ -31,12 +31,11 @@ object ExactPpr {
     require(iterations > 0, "iterations must be > 0")
     require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
 
-    val adj = adjacency(edges, damping).localCheckpoint(eager = false)
+    val adj = Materialize.leaf(adjacency(edges, damping))
 
     val init = seeds.select(col("id").as("seed"), col("id").as("node"), lit(1.0).as("score"))
-    val teleport = seeds
-      .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - damping).as("score"))
-      .localCheckpoint(eager = false)
+    val teleport = Materialize.leaf(seeds
+      .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - damping).as("score")))
 
     def superstep(state: DataFrame, i: Int): DataFrame =
       state.join(adj, state("node") === adj("src"))
@@ -72,11 +71,11 @@ object ExactPpr {
       quantize: Double = 0.0): DataFrame = graft.kernels.IterTuning.withoutRuntimeFilters(edges.sparkSession) {
     require(iterations > 0, "iterations must be > 0")
     require(damping >= 0 && damping <= 1, "damping must be between 0 and 1")
-    val adj = adjacency(edges, damping).localCheckpoint(eager = false)
+    val adj = Materialize.leaf(adjacency(edges, damping))
     val init = teleport.select(lit(0L).as("seed"), col("id").as("node"),
       col("mass").as("score"))
-    val tele = teleport.select(lit(0L).as("seed"), col("id").as("node"),
-      (lit(1.0 - damping) * col("mass")).as("score")).localCheckpoint(eager = false)
+    val tele = Materialize.leaf(teleport.select(lit(0L).as("seed"), col("id").as("node"),
+      (lit(1.0 - damping) * col("mass")).as("score")))
     def superstep(state: DataFrame, i: Int): DataFrame =
       state.join(adj, state("node") === adj("src"))
         .select(col("seed"), col("dst").as("node"), (col("score") * col("factor")).as("score"))

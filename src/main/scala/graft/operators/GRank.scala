@@ -25,7 +25,7 @@ import graft.sources.EdgeSource
   *
   * Scale machinery (no reference analog — physical execution, SURVEY.md §4):
   *  - adjacency is shuffled ONCE (hash-partitioned by `dst`, the join key)
-  *    and cut to a lazy `localCheckpoint`; every superstep's join reuses
+  *    and cut to a lazy `Materialize.leaf`; every superstep's join reuses
   *    that partitioning. The loop inputs (adjacency, teleport, schedule
   *    halves) are all checkpoint leaves, never `persist()`ed plans: a
   *    persisted input carries the caller's whole lineage into every
@@ -119,7 +119,7 @@ object GRank {
       .select(col("src"), col("dst"),
         (if (weighted) lit(cfg.damping) * col("weight") / col("norm")
          else lit(cfg.damping) / col("norm")).as("factor"))
-    val adj = (if (salted) {
+    val adj = Materialize.leaf(if (salted) {
       val hubs = hubIds.toSeq.toDF("hub")
       adjBase.join(broadcast(hubs), adjBase("dst") === hubs("hub"), "left")
         .select(col("src"), col("dst"), col("factor"),
@@ -129,14 +129,13 @@ object GRank {
     } else {
       adjBase.withColumn("salt", lit(0))
         .repartition(shufflePartitions, col("dst"))
-    }).localCheckpoint(eager = false) // filled by the init job, which reads every partition
+    }) // filled by the init job, which reads every partition
     val hubSeeds =
       if (salted) hubIds.toSeq.toDF("hub") // a local relation: already a leaf
       else null
 
-    val teleport = vertices
-      .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - cfg.damping).as("score"))
-      .localCheckpoint(eager = false)
+    val teleport = Materialize.leaf(vertices
+      .select(col("id").as("seed"), col("id").as("node"), lit(1.0 - cfg.damping).as("score")))
 
     // G5 partitioned schedule: 2-coloring + per-color adjacency/teleport
     // halves, computed once; each half is a checkpoint leaf, filled by the
@@ -148,11 +147,11 @@ object GRank {
         col(keyCol) === col("__cid"), "left_semi")
     val adjHalves =
       if (cfg.partitionedSchedule)
-        Array(0, 1).map(c => colorHalf(adj, "src", c).localCheckpoint(eager = false))
+        Array(0, 1).map(c => Materialize.leaf(colorHalf(adj, "src", c)))
       else null
     val teleportHalves =
       if (cfg.partitionedSchedule)
-        Array(0, 1).map(c => colorHalf(teleport, "seed", c).localCheckpoint(eager = false))
+        Array(0, 1).map(c => Materialize.leaf(colorHalf(teleport, "seed", c)))
       else null
 
     // G2 state init: self teleport + one-hop scatter (the same per-edge
@@ -220,9 +219,8 @@ object GRank {
       cfg.checkpointEvery, checkpoint, resume = checkpoint.exists(_.committed().nonEmpty),
       convergenceWindow = if (cfg.partitionedSchedule) 2 else 1)
 
-    val finalState = TopK.topKWindow(
-      res.state.select(col("seed"), col("node"), col("score")), cfg.K) // G6, grank.h:143-147
-      .localCheckpoint(true)
+    val finalState = Materialize.cut(TopK.topKWindow(
+      res.state.select(col("seed"), col("node"), col("score")), cfg.K)) // G6, grank.h:143-147
     Materialize.free(Seq(adj, teleport, res.state) ++ Option(colors) ++
       Option(adjHalves).toSeq.flatten ++ Option(teleportHalves).toSeq.flatten: _*)
     IterativeEngine.Result(finalState, res.history)

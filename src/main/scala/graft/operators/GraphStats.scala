@@ -20,15 +20,14 @@ object GraphStats {
     * directed edge set, self-loops excluded. `n_reciprocal` counts ordered
     * pairs whose reverse is also present (so a mutual pair contributes 2). */
   def reciprocity(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint(eager = false)
+    val e = Materialize.leaf(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct())
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
     val mutual = e.join(rev, Seq("src", "dst"), "left_semi")
-    val res = e.agg(count(lit(1)).as("n_directed"))
+    val res = Materialize.cut(e.agg(count(lit(1)).as("n_directed"))
       .crossJoin(mutual.agg(count(lit(1)).as("n_reciprocal")))
       .select(col("n_directed"), col("n_reciprocal"),
-        (col("n_reciprocal").cast("double") / col("n_directed")).as("reciprocity"))
-      .localCheckpoint(true)
+        (col("n_reciprocal").cast("double") / col("n_directed")).as("reciprocity")))
     Materialize.free(e)
     res
   }
@@ -44,8 +43,8 @@ object GraphStats {
     * Shape: two degree aggregations + two joins onto the edge set + one
     * global aggregate; nothing iterates. */
   def assortativity(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint(eager = false)
+    val e = Materialize.leaf(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct())
     val outd = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("x"))
     val ind = e.groupBy(col("dst").as("v")).agg(count(lit(1)).as("y"))
     val xy = e.join(outd, e("src") === outd("u")).join(ind, e("dst") === ind("v"))
@@ -58,10 +57,9 @@ object GraphStats {
     val num = col("m").cast("double") * col("sxy") - col("sx").cast("double") * col("sy")
     val dx = col("m").cast("double") * col("sxx") - col("sx").cast("double") * col("sx")
     val dy = col("m").cast("double") * col("syy") - col("sy").cast("double") * col("sy")
-    val res = s.select(col("m").as("n_edges"),
+    val res = Materialize.cut(s.select(col("m").as("n_edges"),
       (round(when(col("m") > 1 && dx > 0 && dy > 0, num / sqrt(dx * dy))
-        .otherwise(lit(0.0)) * lit(1e6)) / 1e6).as("assortativity"))
-      .localCheckpoint(true)
+        .otherwise(lit(0.0)) * lit(1e6)) / 1e6).as("assortativity")))
     Materialize.free(e)
     res
   }
@@ -92,18 +90,17 @@ object GraphStats {
   /** One row: (n_wedges, n_triangles, transitivity = 3T / wedges) over the
     * canonical undirected simple graph; wedges = sum_v C(deg(v), 2). */
   def transitivity(edges: DataFrame): DataFrame = {
-    val e = EdgeSource.canonical(edges).localCheckpoint(eager = false)
+    val e = Materialize.leaf(EdgeSource.canonical(edges))
     val triangles = Triangles.countAll(e)
     val wedges = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
       .agg(coalesce(sum(col("deg") * (col("deg") - 1)), lit(0L)).as("w2"))
       .select(shiftright(col("w2"), 1).as("n_wedges")) // w2 is even; exact halving
-    val res = wedges.crossJoin(triangles)
+    val res = Materialize.cut(wedges.crossJoin(triangles)
       .select(col("n_wedges"), col("n_triangles"),
         when(col("n_wedges") > 0,
           (lit(3L) * col("n_triangles")).cast("double") / col("n_wedges"))
-          .otherwise(lit(0.0)).as("transitivity"))
-      .localCheckpoint(true)
+          .otherwise(lit(0.0)).as("transitivity")))
     Materialize.free(e, triangles)
     res
   }

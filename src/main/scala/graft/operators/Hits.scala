@@ -56,8 +56,8 @@ object Hits {
     // broadcast at 100 TB). Both copies are leaves the first gathers fill.
     val eDedup = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .dropDuplicates("src", "dst")
-    val eFwd = eDedup.repartition(shufflePartitions, col("src")).localCheckpoint(eager = false)
-    val eBwd = eDedup.repartition(shufflePartitions, col("dst")).localCheckpoint(eager = false)
+    val eFwd = Materialize.leaf(eDedup.repartition(shufflePartitions, col("src")))
+    val eBwd = Materialize.leaf(eDedup.repartition(shufflePartitions, col("dst")))
     val n = vertices.count()
     require(n > 0, "empty vertex set")
 

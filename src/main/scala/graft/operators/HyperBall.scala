@@ -56,7 +56,7 @@ object HyperBall {
   /** ONE register sweep shared by the whole HyperBall family (r7
     * optimization, the scc+bowtie composition pattern): the per-round
     * estimate frames est_0..est_rounds as (id, est, filled), each
-    * localCheckpointed. `sweep(...).last` equals [[neighborhood]] (both
+    * a `Materialize.cut`. `sweep(...).last` equals [[neighborhood]] (both
     * read the same register loop), and [[centralitiesFrom]] /
     * [[neighborhoodFunctionFrom]] consume the same frames — a caller
     * wanting all three artifacts pays for one sweep instead of three. */
@@ -141,7 +141,7 @@ object HyperBall {
       rounds: Int, p: Int, salt: Long): Seq[DataFrame] = {
     val out = Vector.newBuilder[DataFrame]
     val last = registerLoop(edges, vertices, rounds, p, salt)(state =>
-      out += graft.functions.Sketch.estimateFrom(state, p, Seq("id")).localCheckpoint(true))
+      out += Materialize.cut(graft.functions.Sketch.estimateFrom(state, p, Seq("id"))))
     Materialize.free(last)
     val ests = out.result()
     ests ++ Seq.fill(rounds + 1 - ests.size)(ests.last)
@@ -165,8 +165,8 @@ object HyperBall {
       require(p >= 4 && p <= 16, "p must be in [4, 16]")
       val m = 1 << p
       // forward-ball gather joins successors' registers on edge src
-      val adj = edges.select(col("src"), col("dst")).distinct()
-        .repartition(col("dst")).localCheckpoint(eager = false)
+      val adj = Materialize.leaf(edges.select(col("src"), col("dst")).distinct()
+        .repartition(col("dst")))
       val h = Mix.mix31(col("id"), lit(0L), lit(1L), salt)
       val w = shiftright(h.cast("long"), p)
       val rho = lit(31 - p + 1) - length(ltrim(bin(w), "0"))

@@ -71,8 +71,8 @@ final class CheckpointManager(dir: String) {
   *
   * A superstep is one [[graft.kernels.Materialize]] job (the cut, its row
   * count observed) plus, under a tolerance, the norm1 job. Loop inputs are
-  * the caller's lazy `localCheckpoint(eager = false)` leaves, which the
-  * caller frees after the loop.
+  * the caller's lazy `Materialize.leaf`s, which the caller frees after the
+  * loop.
   *
   * Loop contract mirrors include/grank.h:86-92: `maxDiff` starts at
   * `tolerance` so the loop always runs at least once; a NEGATIVE tolerance
@@ -114,16 +114,17 @@ object IterativeEngine {
         startIter = i; state = df
       }
     }
-    // Materialization policy: localCheckpoint EVERY superstep. Plans stay
+    // Materialization policy: a checkpoint cut EVERY superstep. Plans stay
     // depth 1, so per-superstep Catalyst analysis cost stays flat, and
     // Spark 4's LogicalRDD keeps the state's hash output partitioning, so
     // the next gather join plans no state-side exchange (ScheduleSpec
     // "superstep from a localCheckpoint'ed state plans with ONE exchange").
     // A persist-chain instead grows the plan every superstep (BASELINE.md
     // "Superstep cost fix: depth-1 plans").
-    // init: materialize + truncate lineage (iterative-DataFrame failure
-    // mode #1: per-iteration plan nesting makes analysis cost quadratic)
-    state = state.localCheckpoint(true)
+    // init (or the resumed snapshot): materialize + truncate lineage
+    // (iterative-DataFrame failure mode #1: per-iteration plan nesting
+    // makes analysis cost quadratic)
+    state = Materialize.cut(state)
     var history = Vector.empty[IterMetrics]
     var i = startIter
     // convergence over a window of W recent diffs, all initialized to

@@ -54,12 +54,11 @@ object KCore {
     require(rounds > 0, "rounds must be > 0")
     // loop-invariant: pre-partition on the join key (dst) once, so the
     // per-round gather join re-shuffles only the state side, not 2|E| rows
-    val und = edges.where(col("src") =!= col("dst"))
+    val und = Materialize.leaf(edges.where(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
       .union(edges.where(col("src") =!= col("dst")).select(col("dst"), col("src")))
       .distinct()
-      .repartition(col("dst"))
-      .localCheckpoint(eager = false)
+      .repartition(col("dst")))
 
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val init = vertices.join(deg, vertices("id") === deg("src"), "left")

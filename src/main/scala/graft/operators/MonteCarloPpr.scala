@@ -191,7 +191,12 @@ object MonteCarloPpr {
     * move to a successor of `cur` drawn from `adj` (src, dsts[, cws, totw]);
     * a walker at a node without successors drops out. Step 1 always
     * traverses (run: :127-132). The local engine's walk task is its scalar
-    * twin. */
+    * twin.
+    *
+    * SHUFFLE_HASH on the adjacency: it is hash(src)-partitioned once, so
+    * only the walkers exchange. Left to itself the planner broadcast the
+    * small adjacency leaf in every step's query, one broadcast job per
+    * step, since Spark reuses an exchange only within one query. */
   private def walkStep(walkers: DataFrame, adj: DataFrame, damping: Double,
       step: Int, salt: Long, weighted: Boolean): DataFrame = {
     val survivors =
@@ -199,7 +204,7 @@ object MonteCarloPpr {
       else walkers.where(
         (mix31(col("seed"), col("walkId"), lit(step), survivalSalt(salt))
           / lit(P.toDouble)) <= damping)
-    survivors.join(adj, survivors("cur") === adj("src"))
+    survivors.join(adj.hint("shuffle_hash"), survivors("cur") === adj("src"))
       .select(col("seed"), col("walkId"),
         element_at(col("dsts"), pickIdx(step, salt, weighted)).as("cur"))
   }
@@ -243,7 +248,7 @@ object MonteCarloPpr {
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
       // a lazy checkpoint leaf, filled by the first walker join: each step
       // plans against it instead of an InMemoryRelation over the edge lineage
-      val adjList = buildAdj(edges, weighted, dedup = true).localCheckpoint(eager = false)
+      val adjList = Materialize.leaf(buildAdj(edges, weighted, dedup = true))
       // each walker cut observes its own row count: the survivors
       var (walkers, alive) = Materialize(vertices.join(adjList, vertices("id") === adjList("src"))
         .select(col("id").as("seed"),
@@ -324,11 +329,10 @@ object MonteCarloPpr {
     // the `walkOrigins` cut, so no step plan carries the edge lineage.
     // The weighted (src,dst,w) aggregation is shared by the adjacency AND
     // the combine-phase edge factor — a leaf, so it runs once, not twice
-    val ewOpt = if (weighted) Some(weightedEw(edges).localCheckpoint(eager = false)) else None
-    val adjList = ewOpt.map(buildWeightedAdj)
+    val ewOpt = if (weighted) Some(Materialize.leaf(weightedEw(edges))) else None
+    val adjList = Materialize.leaf(ewOpt.map(buildWeightedAdj)
       .getOrElse(buildAdj(edges, weighted = false, dedup = false))
-      .repartition(shufflePartitions, col("src"))
-      .localCheckpoint(eager = false)
+      .repartition(shufflePartitions, col("src")))
 
     // 100-TB walker-volume bound: all |V|*floor(R*d) walks at once is the
     // one shape the single-machine reference never faces (its walkNode is
@@ -363,7 +367,7 @@ object MonteCarloPpr {
     var chunkLo = 0L
     var ckptHistory = Vector.empty[IterMetrics]
     if (resume && checkpoint.isDefined) checkpoint.get.latest(spark).foreach { case (i, df) =>
-      chunkAggs = List(df.localCheckpoint(true))
+      chunkAggs = List(Materialize.cut(df))
       nChunks = i
       chunkLo = math.min(effective, i.toLong * chunkSize)
     }
@@ -382,16 +386,16 @@ object MonteCarloPpr {
         var leaves = List.empty[DataFrame]
         var cur = walkers
         for (s <- step until end) {
-          cur = walkStep(cur, adjList, d, s, salt, weighted).localCheckpoint(eager = false)
+          cur = Materialize.leaf(walkStep(cur, adjList, d, s, salt, weighted))
           leaves ::= cur
         }
         // ONE job fills the batch's leaves and cuts its last step
         val (next, m) = Materialize(walkStep(cur, adjList, d, end, salt, weighted))
-        val batchVisits = (next :: leaves)
+        // reads the filled step leaves; bounded depth
+        val batchVisits = Materialize.cut((next :: leaves)
           .map(_.groupBy(col("seed"), col("cur").as("node")).agg(count(lit(1)).as("visits")))
           .reduce(_ union _)
-          .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
-          .localCheckpoint(true) // reads the filled step leaves; bounded depth
+          .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits")))
         batchAggs ::= batchVisits
         Materialize.free(walkers :: leaves: _*)
         walkers = next
@@ -403,9 +407,8 @@ object MonteCarloPpr {
         case Nil         => null
         case one :: Nil  => one
         case many => // merge the <= ceil(maxSteps/stepBatch) batch partials once
-          val merged = many.reduce(_ union _)
-            .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
-            .localCheckpoint(true)
+          val merged = Materialize.cut(many.reduce(_ union _)
+            .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits")))
           Materialize.free(many: _*)
           merged
       }
@@ -420,9 +423,8 @@ object MonteCarloPpr {
           case Nil        => null
           case one :: Nil => one
           case many =>
-            val m = many.reduce(_ union _)
-              .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits"))
-              .localCheckpoint(true)
+            val m = Materialize.cut(many.reduce(_ union _)
+              .groupBy(col("seed"), col("node")).agg(sum(col("visits")).as("visits")))
             Materialize.free(many: _*)
             m
         }
@@ -450,15 +452,11 @@ object MonteCarloPpr {
     val selfVisits = verts.select(col("id").as("seed"), col("id").as("node"),
       lit(r.toLong).as("visits"))
     val allVisits = if (visitAgg == null) selfVisits else selfVisits.union(visitAgg)
-    val walkBaskets = TopK.topKWindow(
+    // a leaf: its only reader is the combine below, whose cut fills it
+    val walkBaskets = Materialize.leaf(TopK.topKWindow(
       allVisits.groupBy(col("seed"), col("node"))
         .agg((sum(col("visits")) / lit(r.toDouble)).as("score")),
-      cfg.L).localCheckpoint(true)
-    // walkBaskets is materialized: every chunk/batch partial reachable from
-    // visitAgg is now superseded — free the blocks instead of waiting for
-    // the ContextCleaner (the same pileup class the per-batch fix removed;
-    // a many-chunk budget-bound run otherwise keeps nChunks frames cached)
-    if (visitAgg != null) Materialize.free(visitAgg)
+      cfg.L))
 
     // ---- phase 2: the combine rows of [[localEngine]], from joins ----------
     // (seed, node, score, factor, own): the self row of every vertex from
@@ -482,8 +480,12 @@ object MonteCarloPpr {
     val succRows = edgeFactor.join(walkBaskets, edgeFactor("dst") === walkBaskets("seed"))
       .select(edgeFactor("src").as("seed"), col("node"), (col("score") * col("pre")).as("score"),
         col("factor"), lit(false).as("own"))
-    val result = scatteredCombine(selfRows.union(succRows), cfg).localCheckpoint(true)
-    Materialize.free(Seq(walkBaskets, adjList) ++ ewOpt: _*) // result materialized
+    val result = Materialize.cut(scatteredCombine(selfRows.union(succRows), cfg))
+    // result materialized: the walk baskets and every chunk/batch partial
+    // reachable from visitAgg are superseded — free the blocks instead of
+    // waiting for the ContextCleaner (a many-chunk budget-bound run
+    // otherwise keeps nChunks frames cached)
+    Materialize.free(Seq(walkBaskets, adjList) ++ ewOpt ++ Option(visitAgg): _*)
     (result, McWalkStats(maxInFlight, nChunks, nOrigins, nOrigins * effective))
   }
 
@@ -613,7 +615,7 @@ object MonteCarloPpr {
       }
     }.toDF("seed", "node", "score", "factor", "own")
     // materialize before the broadcasts can be dropped
-    val result = scatteredCombine(rows, cfg).localCheckpoint(true)
+    val result = Materialize.cut(scatteredCombine(rows, cfg))
     bcFwd.destroy()
     bcRev.destroy()
     val nOrigins = walking.sum

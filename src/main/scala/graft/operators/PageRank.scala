@@ -54,7 +54,7 @@ object PageRank {
     // vertex-closure aggregation (2 scans + 3 exchanges per superstep at
     // bench scale; plans/r07/sup_before/q_pagerank_superstep.txt) (guide
     // §2.4). The count fills it; a leaf never touches a caller's cache entry
-    val verts = vertices.select(col("id")).localCheckpoint(eager = false)
+    val verts = Materialize.leaf(vertices.select(col("id")))
     val n = verts.count()
     if (n == 0) {
       Materialize.free(verts)
@@ -82,17 +82,16 @@ object PageRank {
     // hub's many out-edges never sit in one task's hash table, and the
     // planner cannot broadcast the adjacency (re-serialized every
     // superstep, and the side that can never broadcast at 100 TB).
-    val adj = pos.join(srcNorm, "src")
+    val adj = Materialize.leaf(pos.join(srcNorm, "src")
       .select(col("src"), col("dst"),
         (if (weighted) lit(damping) * col("weight") / col("norm")
          else lit(damping) / col("norm")).as("factor"))
-      .repartition(shufflePartitions, col("src"))
-      .localCheckpoint(eager = false)
+      .repartition(shufflePartitions, col("src")))
     // dangling (no positive-outgoing-mass) vertex set, computed once — the
     // per-superstep leak aggregate only semi-joins against THIS (usually
     // small) relation instead of the full degree table
-    val dangling = verts.join(srcNorm, verts("id") === srcNorm("src"), "left_anti")
-      .select(col("id")).localCheckpoint(eager = false)
+    val dangling = Materialize.leaf(verts.join(srcNorm, verts("id") === srcNorm("src"), "left_anti")
+      .select(col("id")))
 
     val init = verts.select(lit(0L).as("seed"), col("id").as("node"),
       lit(1.0 / n).as("score"))

@@ -95,9 +95,9 @@ object PushPpr {
       } else
         pos.join(outdeg, "src")
           .select(col("src"), col("dst"), (lit(damping) / col("deg")).as("factor"))
-    val adj = adjBase.repartition(col("src")).localCheckpoint(eager = false)
-    val degs = outdeg.select(col("src").as("node"), col("deg"))
-      .repartition(col("node")).localCheckpoint(eager = false)
+    val adj = Materialize.leaf(adjBase.repartition(col("src")))
+    val degs = Materialize.leaf(outdeg.select(col("src").as("node"), col("deg"))
+      .repartition(col("node")))
 
     def qsum(c: String) =
       if (quantize > 0) (sum(Grid.roundLong(col(c) * quantize)) / quantize).as(c)

@@ -104,7 +104,7 @@ object Quality {
         .toDF("metric", "value")
     }
 
-    val approxS = approx.join(sampled, Seq("seed"), "left_semi").localCheckpoint(true)
+    val approxS = Materialize.cut(approx.join(sampled, Seq("seed"), "left_semi"))
     def computeOracle(seeds: DataFrame): DataFrame =
       ExactPpr.run(edges, seeds.select(col("seed").as("id")),
         iterations = oracleIterations, damping = 0.85,

@@ -79,16 +79,16 @@ object Scc {
       checkpoint: Option[CheckpointManager] = None, checkpointEvery: Int = 0,
       resume: Boolean = false): DataFrame =
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
-      val e0 = statsBarrier(edges
+      val e0 = statsBarrier(Materialize.cut(edges
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .dropDuplicates("src", "dst").localCheckpoint(true))
+        .dropDuplicates("src", "dst")))
       var finalized = List.empty[DataFrame]
       var round = 0
       val open = checkpoint.filter(_ => resume).flatMap(_.latest(edges.sparkSession)) match {
         case Some((i, df)) =>
           round = i
-          val loaded = df.localCheckpoint(true)
+          val loaded = Materialize.cut(df)
           finalized = List(loaded.where(col("done")).select(col("id"), col("a").as("scc")))
           loaded.where(!col("done")).select(col("id"), col("a").as("cf"), col("b").as("cb"))
         case None =>
@@ -103,16 +103,16 @@ object Scc {
         val tRound = System.nanoTime()
         val a1 = active.select(col("id").as("sid"), col("cf").as("scf"), col("cb").as("scb"))
         val a2 = active.select(col("id").as("did"), col("cf").as("dcf"), col("cb").as("dcb"))
-        val eAct = statsBarrier(e0
+        val eAct = statsBarrier(Materialize.cut(e0
           .join(a1, e0("src") === a1("sid"))
           .join(a2, e0("dst") === a2("did"))
           .where(col("scf") === col("dcf") && col("scb") === col("dcb"))
-          .select(col("src"), col("dst")).localCheckpoint(true))
+          .select(col("src"), col("dst"))))
         val cand = biMinPropagate(eAct, active.select(col("id")), maxPropagateRounds)
         Materialize.free(eAct)
         // finalized frames are kept alive to the end
-        finalized ::= statsBarrier(cand.where(col("f") === col("b"))
-          .select(col("id"), col("f").as("scc")).localCheckpoint(true))
+        finalized ::= statsBarrier(Materialize.cut(cand.where(col("f") === col("b"))
+          .select(col("id"), col("f").as("scc"))))
         val (next, m) = Materialize(cand.where(col("f") =!= col("b"))
           .select(col("id"), col("f").as("cf"), col("b").as("cb")))
         Materialize.free(active, cand)
@@ -155,10 +155,9 @@ object Scc {
     IterTuning.withoutRuntimeFilters(edges.sparkSession) {
       val own = Option.when(precomputedScc.isEmpty)(
         scc(edges, vertices, maxRefineRounds, maxPropagateRounds))
-      val comp = precomputedScc
+      val comp = Materialize.cut(precomputedScc
         .map(_.select(col("id").cast("long").as("id"), col("scc").cast("long").as("scc")))
-        .orElse(own).get
-        .localCheckpoint(true)
+        .orElse(own).get)
       own.foreach(Materialize.free(_)) // its rows live on in comp
       // largest SCC, ties to min id — combinable min-struct argmax, then one
       // 1-row action (the audited driver-scalar pattern)
@@ -166,10 +165,10 @@ object Scc {
         .agg(min(struct((-col("n")).as("negN"), col("scc").as("s"))).as("best"))
         .head()
       val core = coreRow.getStruct(0).getLong(1)
-      val e0 = statsBarrier(edges
+      val e0 = statsBarrier(Materialize.cut(edges
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .dropDuplicates("src", "dst").localCheckpoint(true))
+        .dropDuplicates("src", "dst")))
       val ids = vertices.select(col("id").cast("long").as("id"))
       // dir 0: flood along edges (descendants of core = OUT ∪ CORE);
       // dir 1: flood along reversed edges (ancestors = IN ∪ CORE)
@@ -204,7 +203,7 @@ object Scc {
     * −21% and −15% on the two bench graphs against it (BASELINE.md "SCC
     * pointer-doubling"). */
   private def biMinPropagate(e: DataFrame, verts: DataFrame, maxRounds: Int): DataFrame = {
-    val eBi = statsBarrier(biEdges(e).localCheckpoint(true))
+    val eBi = statsBarrier(Materialize.cut(biEdges(e)))
     // the exact label sum is observed on each state cut (null on no rows)
     val labSum = sum(col("lab").cast("decimal(38,0)"))
     val (ck, s0) = Materialize(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))
@@ -234,10 +233,9 @@ object Scc {
       i += 1
     }
     require(!moving, s"min-label propagation still moving after $maxRounds rounds")
-    val labels = statsBarrier(state.groupBy(col("id"))
+    val labels = statsBarrier(Materialize.cut(state.groupBy(col("id"))
       .agg(min(when(col("dir") === 0, col("lab"))).as("f"),
-        min(when(col("dir") === 1, col("lab"))).as("b"))
-      .localCheckpoint(true))
+        min(when(col("dir") === 1, col("lab"))).as("b"))))
     Materialize.free(eBi, state)
     labels
   }
@@ -248,7 +246,7 @@ object Scc {
     * reached-count is the convergence probe. */
   private def biReachableFrom(e: DataFrame, verts: DataFrame, root: Long,
       maxRounds: Int): DataFrame = {
-    val eBi = statsBarrier(biEdges(e).localCheckpoint(true))
+    val eBi = statsBarrier(Materialize.cut(biEdges(e)))
     // the reached count is observed on each state cut (null on no rows)
     val reached = sum(col("reach"))
     val (ck, r0) = Materialize(verts.select(col("id"), explode(array(lit(0), lit(1))).as("dir"))

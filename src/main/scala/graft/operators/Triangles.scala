@@ -28,7 +28,7 @@ object Triangles {
     * degree-order wedges = sum_a C(fwdDeg(a), 2). On hub-heavy graphs the
     * degree ordering is orders of magnitude smaller (BASELINE.md row). */
   def wedgeCounts(edges: DataFrame): DataFrame = {
-    val e = EdgeSource.canonical(edges).localCheckpoint(eager = false)
+    val e = Materialize.leaf(EdgeSource.canonical(edges))
     val idOrder = e.select(col("dst").as("id"), lit(1L).as("i"), lit(0L).as("o"))
       .union(e.select(col("src").as("id"), lit(0L).as("i"), lit(1L).as("o")))
       .groupBy("id").agg(sum("i").as("ind"), sum("o").as("outd"))
@@ -45,19 +45,19 @@ object Triangles {
       .agg(coalesce(sum(col("fd") * (col("fd") - 1)), lit(0L)).as("n2"))
       .select(lit("degree_order").as("orientation"),
         shiftright(col("n2"), 1).as("n_wedges")) // n2 is even; exact long halving
-    val res = idOrder.union(fwd).localCheckpoint(true)
+    val res = Materialize.cut(idOrder.union(fwd))
     Materialize.free(e)
     res
   }
 
   /** Global triangle count (one row: n_triangles LONG). */
   def countAll(edges: DataFrame): DataFrame = {
-    val e = EdgeSource.canonical(edges).localCheckpoint(eager = false)
+    val e = Materialize.leaf(EdgeSource.canonical(edges))
     val e1 = e.select(col("src").as("a"), col("dst").as("b"))
     val e2 = e.select(col("src").as("b2"), col("dst").as("c"))
     val wedges = e1.join(e2, col("b") === col("b2")).select(col("a"), col("b"), col("c"))
     val closed = wedges.join(e, wedges("a") === e("src") && wedges("c") === e("dst"), "left_semi")
-    val res = closed.agg(count(lit(1)).as("n_triangles")).localCheckpoint(true)
+    val res = Materialize.cut(closed.agg(count(lit(1)).as("n_triangles")))
     Materialize.free(e)
     res
   }
@@ -100,15 +100,14 @@ object Triangles {
     val und = EdgeSource.canonical(edges)
     val deg = und.select(col("src").as("id")).union(und.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    val ranked = und
+    val ranked = Materialize.leaf(und
       .join(deg.withColumnsRenamed(Map("id" -> "sid", "deg" -> "sdeg")), col("src") === col("sid"))
       .join(deg.withColumnsRenamed(Map("id" -> "did", "deg" -> "ddeg")), col("dst") === col("did"))
       .select(
         when(struct(col("sdeg"), col("src")) < struct(col("ddeg"), col("dst")), col("src"))
           .otherwise(col("dst")).as("u"),
         when(struct(col("sdeg"), col("src")) < struct(col("ddeg"), col("dst")), col("dst"))
-          .otherwise(col("src")).as("v"))
-      .localCheckpoint(eager = false)
+          .otherwise(col("src")).as("v")))
     val w1 = ranked.select(col("u").as("a"), col("v").as("b"))
     val w2 = ranked.select(col("u").as("a2"), col("v").as("c"))
     // wedges out of the low-rank endpoint a: (a->b, a->c), b != c; the
@@ -119,7 +118,7 @@ object Triangles {
       .union(ranked.select(col("v").as("x"), col("u").as("y")))
     val closed = wedges.join(closing,
       wedges("b") === closing("x") && wedges("c") === closing("y"), "left_semi")
-    val res = closed.agg(count(lit(1)).as("n_triangles")).localCheckpoint(true)
+    val res = Materialize.cut(closed.agg(count(lit(1)).as("n_triangles")))
     Materialize.free(ranked)
     res
   }

@@ -52,12 +52,12 @@ object EventStream {
   }
 
   /** Materialize a memory-sink table and release its backing resources:
-    * localCheckpoint the rows, then drop the temp view and the staged
+    * cut the rows (`Materialize.cut`), then drop the temp view and the staged
     * source directory (they otherwise accumulate disk + driver memory
     * across runs in one JVM — ADVICE r4). */
   private def drainSink(spark: SparkSession, name: String, dir: String,
       filter: DataFrame => DataFrame = identity): DataFrame = {
-    val res = filter(spark.table(name)).localCheckpoint(true)
+    val res = Materialize.cut(filter(spark.table(name)))
     spark.catalog.dropTempView(name)
     deleteRecursively(dir)
     res
@@ -122,7 +122,7 @@ object EventStream {
     try {
       q.processAllAvailable()
       // one row both sentinel writes copy: a leaf the first write fills
-      val top = batch.orderBy(col("ts").desc).limit(1).localCheckpoint(eager = false)
+      val top = Materialize.leaf(batch.orderBy(col("ts").desc).limit(1))
       for (days <- Seq(100, 200)) {
         top.withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
           .withColumn("user_id", lit(sentinel))

@@ -47,7 +47,7 @@ object StatsBarrier {
     * in the iterative engine's superstep loop, which reuses the state's
     * partitioning. */
   def statsBarrier(df: DataFrame): DataFrame = {
-    // the "apply only after localCheckpoint" usage rule, enforced: a
+    // the "apply only after a checkpoint cut" usage rule, enforced: a
     // non-materialized frame has no RDD of its rows, and re-wrapping its
     // physical plan would re-run the whole upstream plan on every action
     // (and a nondeterministic source could produce inconsistent reads
@@ -57,7 +57,7 @@ object StatsBarrier {
       case l: LogicalRDD =>
         df.sparkSession.asInstanceOf[ClassicSession].internalCreateDataFrame(l.rdd, df.schema)
       case p => throw new IllegalArgumentException("statsBarrier requires an already-" +
-        s"materialized frame (df.localCheckpoint(true) first); got plan ${p.nodeName}")
+        s"materialized frame (graft.kernels.Materialize.cut(df) first); got plan ${p.nodeName}")
     }
   }
 }

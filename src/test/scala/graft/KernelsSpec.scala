@@ -179,4 +179,26 @@ class KernelsSpec extends AnyFunSuite with GraphFixtures {
     Materialize.free(ck.select(col("seed")), lazyLeaf, view)
     assert((persisted() -- before).isEmpty)
   }
+
+  test("materialize: apply, cut and leaf store serialized blocks; free drops them") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graft.StatsBarrier.statsBarrier
+    val sc = spark.sparkContext
+    def stored() = sc.getRDDStorageInfo.map(_.id).toSet
+    def rdd(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
+    val before = stored()
+    val applied = Materialize(stateDf(Seq((1L, 2L, 3.0), (4L, 5L, 6.0))))._1
+    val cut = Materialize.cut(stateDf(Seq((7L, 8L, 9.0))))
+    val leaf = Materialize.leaf(stateDf((1L to 20L).map(i => (i, i, 1.0))).repartition(3))
+    assert(!stored().contains(rdd(leaf).id), "a leaf holds no blocks before a job reads it")
+    assert(leaf.count() == 20)
+    for ((name, df) <- Seq("apply" -> applied, "cut" -> cut, "leaf" -> leaf)) {
+      val level = rdd(df).getStorageLevel
+      assert(level == Materialize.Level && !level.deserialized && level.useDisk, s"$name: $level")
+    }
+    assert((stored() -- before) == Set(applied, cut, leaf).map(rdd(_).id))
+    Materialize.free(applied, leaf, statsBarrier(cut))
+    assert((stored() -- before).isEmpty)
+  }
 }

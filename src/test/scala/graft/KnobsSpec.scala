@@ -16,6 +16,8 @@ class KnobsSpec extends AnyFunSuite {
   private val allowed = Seq("SPARK_GRAFT_ITER_DEBUG", "SPARK_GRAFT_EXPLAIN_DIR")
   private val read = """sys\.(props|env)|System\.(getenv|getProperty)""".r
 
+  private val materialize = Paths.get("kernels", "Materialize.scala")
+
   private def engineSources: Seq[Path] = layers.flatMap { l =>
     val dir = Paths.get("src/main/scala/graft", l)
     assert(Files.isDirectory(dir), s"missing source dir $dir")
@@ -37,12 +39,21 @@ class KnobsSpec extends AnyFunSuite {
   }
 
   test("engine layers materialize through checkpoints; only kernels.Materialize observes or frees") {
-    val materialize = Paths.get("kernels", "Materialize.scala")
     val files = engineSources
     assert(files.exists(_.endsWith(materialize)), s"$materialize is missing")
     val offending = linesMatching(files.filterNot(_.endsWith(materialize)))(l =>
       l.contains(".persist(") || l.contains(".cache()") || l.contains("unpersist(") ||
         l.contains("Observation"))
+    assert(offending.isEmpty, offending.mkString("\n"))
+  }
+
+  test("engine layers checkpoint only through kernels.Materialize") {
+    // SparkEntry's query bodies too: every block the engine writes has the
+    // one storage level Materialize gives it
+    val files = engineSources :+ Paths.get("src/main/scala/graft/SparkEntry.scala")
+    assert(files.exists(_.endsWith(materialize)), s"$materialize is missing")
+    val offending =
+      linesMatching(files.filterNot(_.endsWith(materialize)))(_.contains(".localCheckpoint("))
     assert(offending.isEmpty, offending.mkString("\n"))
   }
 }

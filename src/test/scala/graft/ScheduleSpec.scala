@@ -215,17 +215,34 @@ class ScheduleSpec extends AnyFunSuite with GraphFixtures {
   }
 
   test("job-count gate: walks count survivors on the walker checkpoint") {
-    // walkTrace: the origin cut, then per step the walker cut and the
-    // adjacency broadcast, and the collect (the parent counted the walkers
-    // after every cut: 13 jobs)
+    // walkTrace: the origin cut and its vertex broadcast, then per step the
+    // walker cut, and the collect (counting the walkers after every cut
+    // took 13 jobs; broadcasting the adjacency in every step, 9)
     val trace = gateJobs((e, vs) => MonteCarloPpr.walkTrace(e, vs, 2, 3).collect())
-    assert(trace.size == 9, s"walkTrace, 3 steps: ${trace.size} jobs: ${trace.mkString(" | ")}")
+    assert(trace.size == 6, s"walkTrace, 3 steps: ${trace.size} jobs: ${trace.mkString(" | ")}")
     // MC join engine: the edge count that picks the engine is the only
     // count; origins, walkers and batch ends are observed on their cuts
     val mc = gateJobs((e, vs) => MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, quantize = 1e12),
       maxSteps = 24, broadcastEdgeLimit = 0L, walkerBudget = 200L).collect())
     val counts = mc.filter(_.startsWith("count at"))
     assert(counts.size == 1, s"MC join engine counts: ${counts.mkString(" | ")}")
+  }
+
+  test("job-count gate: the MC join engine broadcasts no adjacency per step and cuts no baskets of their own") {
+    // a basket cut of its own and an adjacency broadcast in every walk
+    // step took 19 / 30 / 40 jobs, 11 / 19 / 27 of them broadcasts
+    // one chunk, 8 steps a batch: the edge count, the origin cut and its
+    // vertex broadcast, the first walker cut, per batch its end cut and its
+    // visit partial, the merge of the batch partials (more than one batch),
+    // the combine's cut (which fills the basket leaf) with two broadcasts
+    // of small sides, and the collect
+    val broadcasts = for ((steps, want) <- Seq(8 -> 10, 16 -> 13, 24 -> 15)) yield {
+      val jobs = gateJobs((e, vs) => MonteCarloPpr.run(e, vs, PprConfig(5, 10, 30, quantize = 1e12),
+        maxSteps = steps, broadcastEdgeLimit = 0L).collect())
+      assert(jobs.size == want, s"MC join engine, $steps steps: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+      jobs.count(_.startsWith("broadcast exchange"))
+    }
+    assert(broadcasts.distinct.size == 1, s"broadcast jobs grow with the walk length: $broadcasts")
   }
 
   test("job-count gate: the engine reads its row count off the superstep checkpoint (k-core, tolerance 0.5)") {
